@@ -1,51 +1,13 @@
 package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
-
-/** Incrementally-maintained AGGREGATE view — the [[MaterializedView]]
-  * discipline extended to a two-sided derivation: a DIMENSION store and
-  * a FACT store, each latest-version-wins per its own key, feeding one
-  * published aggregate view (reference: the nightly
-  * `marketing.customer_segments` rebuild, `customer_360_views.sql:376-515`
-  * — at 100× the segments view is the expensive one to recompute).
-  *
-  * All three stores are hive-partitioned by the same
-  * `__mv_bucket = pmod(xxhash64(bucketKeys), nBuckets)` — the
-  * AGGREGATION key's bucket, not the row key's — so a CDC batch on
-  * either side resolves to a bucket set driver-side (bounded metadata)
-  * and the refresh reads and rewrites ONLY those buckets of state and
-  * view: untouched buckets are never opened.
-  *
-  * Correctness preconditions, both judge-relevant at 100 TB:
-  *
-  *   - `derive` must be BUCKET-CLOSED: every join / aggregation /
-  *     window key inside it must functionally determine `bucketKeys`
-  *     (segments: everything keys on custno/user_id). A bucket's view
-  *     rows then depend only on that bucket's state, which is what
-  *     makes per-bucket refresh == full rebuild.
-  *   - every version of a fact row must carry the SAME `bucketKeys`
-  *     value (a deal never moves between customers); a re-keying
-  *     upstream must arrive as delete + insert, as in any
-  *     dimension-bucketed warehouse store.
-  *   - like [[MaterializedView]], states are PRE-view-filter and
-  *     batches must be pre-filtered by any predicate the view applies
-  *     BEFORE its rank (filter-then-latest is associative across
-  *     batches; latest-then-filter is not), and each `*Order` must
-  *     total-order versions (unique tiebreaker) and match the view's
-  *     own rank order exactly.
-  *
-  * Write discipline is inherited: bucket-clustered writes (bounded file
-  * count), checkpoint-before-overwrite (read-overwrite hazard), dynamic
-  * overwrite for state, and the [[GenerationStore]] manifest protocol
-  * for the served view — refreshed buckets land in an immutable new
-  * generation and one atomic manifest swap publishes them, so readers
-  * never observe a mid-refresh or post-crash partial state (and a
-  * refresh that EMPTIES a bucket's view rows publishes that emptiness
-  * atomically too — the case dynamic overwrite cannot express).
-  */
+/** The TWO-SIDED [[BucketedView]]: a DIMENSION store (`$root/dims`) and
+  * a FACT store (`$root/facts`), each latest-version-wins per its own
+  * key, feeding one aggregate view bucketed on the AGGREGATION key
+  * `bucketKeys` (reference: the nightly `marketing.customer_segments`
+  * rebuild, `customer_360_views.sql:376-515` — at 100× the segments view
+  * is the expensive one to recompute). */
 final class AggregateView(
     root: String,
     bucketKeys: Seq[String],
@@ -55,319 +17,24 @@ final class AggregateView(
     factOrder: Seq[Column],
     derive: (DataFrame, DataFrame) => DataFrame,
     nBuckets: Int = 64,
-    writeTasksPerBucket: Int = 1,
     keepVersions: Int = 1,
-    keyScopeMinStateBytes: Long = MaterializedView.DefaultKeyScopeMinStateBytes) {
+    keyScopeMinStateBytes: Long = BucketedView.DefaultKeyScopeMinStateBytes)
+  extends BucketedView(root, bucketKeys,
+    Seq(BucketedView.Side("dims", dimKeys, dimOrder), BucketedView.Side("facts", factKeys, factOrder)),
+    states => derive(states(0), states(1)), nBuckets, keepVersions, keyScopeMinStateBytes) {
 
-  require(writeTasksPerBucket >= 1,
-    s"writeTasksPerBucket must be >= 1, got $writeTasksPerBucket")
-
-  private val dimsPath = s"$root/dims"
-  private val factsPath = s"$root/facts"
-  private val viewPath = s"$root/view"
-  private val bucketCol = "__mv_bucket"
-
-  /** SINGLE-WRITER enforcement. The refresh protocol assumes it is the
-    * only writer between its state read and its state overwrite — the
-    * documented operational shape is a fact STREAM with dimension
-    * refreshes arriving as batch cycles between micro-batches
-    * ([[graft.streaming.Streams.maintainFacts]]), and an operator who
-    * fires a dim refresh mid-stream used to corrupt nothing only by
-    * scheduling luck. A per-store lock makes the contract enforced, not
-    * documented: concurrent build/refreshFacts/refreshDims calls
-    * serialize, and any serial order converges (each refresh reads the
-    * other's committed state; the folds are latest-version-wins and
-    * derive reads both stores as-of its own critical section). Pinned
-    * by the interleaved spec in `AggregateViewSpec`. */
-  private val writerLock = new java.util.concurrent.locks.ReentrantLock()
-
-  private def withWriterLock[T](body: => T): T = {
-    writerLock.lock()
-    try body finally writerLock.unlock()
-  }
-
-  /** Atomic manifest-mediated publish of the served view (exposed to
-    * the crash/concurrency specs). */
-  private[graft] val store = new GenerationStore(viewPath, bucketCol, keepVersions)
-
-  /** Committed snapshot versions readable right now ([[viewAt]]). */
-  def viewVersions(spark: SparkSession): Seq[Long] = store.versions(spark)
-
-  /** SNAPSHOT READ: the aggregate view exactly as committed version `v`
-    * served it (None once aged past `keepVersions`). */
-  def viewAt(spark: SparkSession, v: Long): Option[DataFrame] =
-    store.readVersion(spark, v)
-
-  private def withBucket(df: DataFrame): DataFrame =
-    df.withColumn(bucketCol,
-      pmod(xxhash64(bucketKeys.map(col): _*), lit(nBuckets.toLong)))
-
-  // see MaterializedView.clustered — same small-file / per-task-volume
-  // trade, keyed on the shared bucket key
-  private def clustered(df: DataFrame): DataFrame =
-    if (writeTasksPerBucket == 1) df.repartition(nBuckets, col(bucketCol))
-    else df.repartition(nBuckets * writeTasksPerBucket, col(bucketCol),
-      pmod(xxhash64(lit("__mv_salt") +: bucketKeys.map(col): _*),
-        lit(writeTasksPerBucket.toLong)))
-
-  /** Latest-per-key fold with bucket-clustered output — one exchange
-    * for both the window and the state write (see
-    * [[MaterializedView.foldClustered]]). Sound on the DIMENSION side
-    * because the bucket hashes `bucketKeys` ⊆ `dimKeys`, and on the
-    * FACT side by the class precondition that every version of a fact
-    * row carries the same `bucketKeys` value — either way the bucket
-    * is constant within a key group, so windowing over (bucket, keys)
-    * groups exactly like (keys). */
-  private def foldClustered(
-      df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame =
-    if (writeTasksPerBucket == 1)
-      Dedup.latestByKeyClustered(df, keys, order, bucketCol, nBuckets)
-    else clustered(Dedup.latestByKey(df, keys, order))
-
-  /** A fused-fold frame is already physically clustered; only the
-    * salted layout needs the extra exchange before a state write. */
-  private def reclusterForWrite(df: DataFrame): DataFrame =
-    if (writeTasksPerBucket == 1) df else clustered(df)
-
-  /** A partitioned write of ZERO rows emits no files at all, losing the
-    * schema the next refresh must read back — an empty state store gets
-    * a schema-only unpartitioned file instead (pruning is moot on an
-    * empty store; the first refresh that populates it rewrites the
-    * store partitioned). Emptiness is detected AFTER the optimistic
-    * partitioned write (no partition dirs appeared) rather than by an
-    * up-front `isEmpty`, which would execute the full fold DAG once for
-    * the probe and again for the write — the probe here is one FS
-    * listing, and the empty-case `limit(0)` write never runs the DAG. */
-  private def writeState(df: DataFrame, path: String): Unit = {
-    // callers pass fold output, clustered by construction (foldClustered)
-    df.write.mode("overwrite").partitionBy(bucketCol).parquet(path)
-    if (!isPartitioned(path, df.sparkSession))
-      df.limit(0).write.mode("overwrite").parquet(path)
-    MaterializedView.writeSchemaSidecar(df.sparkSession, path, df.schema)
-  }
-
-  private def isPartitioned(path: String, spark: SparkSession): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith(s"$bucketCol="))
-  }
-
-  /** Full initial build of both states and the view. The state writes
-    * ARE the dedups' materialization (no checkpoint pass — a fresh root
-    * has no read-overwrite hazard); the derive then re-reads both
-    * stores it just wrote, a column-pruned scan of fresh compressed
-    * parquet instead of full-width block copies held across the pass. */
-  def build(dims: DataFrame, facts: DataFrame): Unit =
-    withWriterLock { graft.plans.MvRewrite.withRuleDisabled {
-      // The two state materializations are INDEPENDENT jobs (disjoint
-      // inputs, disjoint output paths) — submit them concurrently: on a
-      // cluster they pack the executors instead of leaving them idle
-      // through each other's stage tails; the derive that needs both
-      // starts after the barrier. Plans are constructed on the caller
-      // thread; only the write actions run on the pool.
-      // Build-only fold shape: aggregate-first so the initial load's
-      // version fanout collapses map-side before any exchange, then
-      // recluster the deduped survivors for the write (see
-      // MaterializedView.build; refresh folds keep the fused shape).
-      val dState = clustered(Dedup.latestByKey(withBucket(dims), dimKeys, dimOrder))
-      val fState = clustered(Dedup.latestByKey(withBucket(facts), factKeys, factOrder))
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      try {
-        val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
-        // labels are thread-local: set inside each future body
-        val fd = scala.concurrent.Future(
-          graft.JobLabel(dims.sparkSession, "av:build dim-state-write") {
-            writeState(dState, dimsPath)
-          })(ec)
-        val ff = scala.concurrent.Future(
-          graft.JobLabel(facts.sparkSession, "av:build fact-state-write") {
-            writeState(fState, factsPath)
-          })(ec)
-        // wait for BOTH to COMPLETE (success or failure) before
-        // propagating the first error: throwing while the sibling write
-        // still runs would let it outlive build(), racing a caller's
-        // catch-and-retry overwrite of the same path
-        scala.concurrent.Await.ready(fd, scala.concurrent.duration.Duration.Inf)
-        scala.concurrent.Await.ready(ff, scala.concurrent.duration.Duration.Inf)
-        fd.value.get.get
-        ff.value.get.get
-      } finally pool.shutdown()
-      val spark = dims.sparkSession
-      val ds = MaterializedView.readState(spark, dimsPath)
-      val fs = MaterializedView.readState(spark, factsPath)
-      graft.JobLabel(spark, "av:build derive+publish") {
-        store.publish(
-          clustered(withBucket(derive(ds.drop(bucketCol), fs.drop(bucketCol)))),
-          0L until nBuckets.toLong)
-      }
-    } }
+  /** Full initial build of both states and the view. */
+  def build(dims: DataFrame, facts: DataFrame): Unit = build(Seq(dims, facts))
 
   /** CDC batch of fact rows: re-aggregate only the batch's buckets. */
-  def refreshFacts(batch: DataFrame): Unit =
-    refresh(batch, factsPath, factKeys, factOrder, factsSide = true)
+  def refreshFacts(batch: DataFrame): Unit = refresh(1, batch)
 
   /** CDC batch of dimension rows: same bucket-pruned path, other side. */
-  def refreshDims(batch: DataFrame): Unit =
-    refresh(batch, dimsPath, dimKeys, dimOrder, factsSide = false)
-
-  /** Shared bucket-pruned refresh for either side. No-op skip and crash
-    * contract as in [[MaterializedView.refresh]]: buckets whose
-    * latest-version-wins fold leaves the refreshed side's state
-    * byte-identical are skipped (a fully-replayed CDC batch publishes NO
-    * new generation), change detection is the map-safe JSON-fingerprint
-    * compare, and the view PUBLISH precedes the state overwrite so a
-    * crash at any point leaves state old — the batch's replay then
-    * re-detects the change, re-publishes idempotently and completes the
-    * state write (the state-first order + skip combination is exactly
-    * the r9 convergence bug).
-    *
-    * COST-BASED derive scope, as in [[MaterializedView.refresh]]: when
-    * the dirty buckets' combined on-disk state (BOTH sides — derive
-    * reads both) reaches `keyScopeMinStateBytes`, the changed rows'
-    * AGGREGATION keys are resolved from the change compare and both
-    * sides' derive inputs are semi-joined to just those `bucketKeys`
-    * values — the re-aggregation touches one customer's deals, not two
-    * full hash buckets of customers — with unchanged aggregation keys
-    * carrying their view rows forward from the served generation.
-    * Scoping is sound because derive is bucket-CLOSED by precondition
-    * (every interaction key functionally determines `bucketKeys`),
-    * which makes each view row attributable to one `bucketKeys` value —
-    * `derive` must therefore preserve the `bucketKeys` columns in its
-    * output. Below the threshold the dirty buckets are re-derived
-    * whole (the scoped path's extra stages cost more than the derive
-    * they save — measured at sf0.1). The fold and state write stay
-    * whole-bucket either way: state IO is O(dirty buckets) regardless,
-    * and the whole-bucket fold is the state write's one
-    * materialization. Scoped derive COMPUTE is O(batch's aggregation
-    * keys), IO O(dirty buckets). */
-  private def refresh(
-      batch: DataFrame,
-      statePath: String,
-      keys: Seq[String],
-      order: Seq[Column],
-      factsSide: Boolean): Unit =
-      withWriterLock { graft.plans.MvRewrite.withRuleDisabled {
-    val spark = batch.sparkSession
-    // checkpoint the (CDC-bounded) batch once: its plan can be
-    // arbitrarily expensive and the refresh reads it three times (fold
-    // input, batch-key probes); its bucket ids — bounded metadata —
-    // ride the checkpoint job as an observed BITMASK metric (declarative
-    // bit_or, not CodegenFallback collect_set; >64-bucket stores keep
-    // the distinct+collect probe)
-    val mask = MaterializedView.maskable(nBuckets)
-    val bucketed = withBucket(batch)
-    val observedBatch =
-      if (mask) bucketed.observe("graft_mv_batch",
-        MaterializedView.bucketMask(bucketCol, lit(true)))
-      else bucketed
-    val (b, releaseB) = graft.JobLabel(spark, "av:refresh batch-checkpoint") {
-      graft.Lineage.checkpointed(observedBatch)
-    }
-    try {
-    val buckets =
-      (if (mask) MaterializedView.observedBuckets(observedBatch, "graft_mv_batch")
-       else None)
-        .getOrElse(b.select(bucketCol).distinct().collect().map(_.getLong(0)).toSeq)
-    if (buckets.isEmpty) return
-    val otherPath = if (factsSide) dimsPath else factsPath
-    val keyScoped =
-      MaterializedView.bucketBytes(spark, statePath, bucketCol, buckets) +
-        MaterializedView.bucketBytes(spark, otherPath, bucketCol, buckets) >=
-        keyScopeMinStateBytes
-    val oldState = MaterializedView.readState(spark, statePath)
-      .filter(col(bucketCol).isin(buckets: _*))
-    val batchKeys = b.select(keys.map(col): _*).distinct()
-    // fold + change flag + changed-bucket metric fused into ONE
-    // checkpointed job, resolved BEFORE any write while oldState's
-    // inputs are intact — broadcast batch-key-scoped probes, so the
-    // compare is O(batch keys) and the fold's bucket clustering
-    // survives to the state write (see MaterializedView.flagChanged /
-    // MaterializedView.refresh)
-    val flagged0 = MaterializedView.flagChanged(
-      foldClustered(oldState.unionByName(b.select(oldState.columns.map(col): _*)),
-        keys, order),
-      oldState, batchKeys, keys, bucketCol)
-    val flagged =
-      if (mask) flagged0.observe("graft_mv_changed",
-        MaterializedView.bucketMask(bucketCol, col(MaterializedView.ChangedCol)))
-      else flagged0
-    val (flaggedCp, release) = graft.JobLabel(spark, "av:refresh fold+flag") {
-      graft.Lineage.checkpointed(flagged)
-    }
-    try {
-      val newState = flaggedCp.drop(MaterializedView.ChangedCol)
-      val changedRows =
-        flaggedCp.filter(col(MaterializedView.ChangedCol))
-          .drop(MaterializedView.ChangedCol)
-      val changed =
-        (if (mask) MaterializedView.observedBuckets(flagged, "graft_mv_changed")
-         else None)
-          .getOrElse(changedRows.select(bucketCol).distinct()
-            .collect().map(_.getLong(0)).toSeq)
-      if (changed.isEmpty) return
-      val inChanged = col(bucketCol).isin(changed: _*)
-      val other = MaterializedView.readState(spark, otherPath).filter(inChanged)
-      val newViewRows =
-        if (!keyScoped) {
-          val (dimsPruned, factsPruned) =
-            if (factsSide) (other, newState.filter(inChanged))
-            else (newState.filter(inChanged), other)
-          withBucket(derive(dimsPruned.drop(bucketCol), factsPruned.drop(bucketCol)))
-        } else {
-          // the aggregation keys whose view rows must be re-derived
-          val changedAgg = changedRows.select(bucketKeys.map(col): _*).distinct()
-          val refreshedScoped = MaterializedView.semiOnKeys(
-            newState.filter(inChanged), changedAgg, bucketKeys)
-          val otherScoped = MaterializedView.semiOnKeys(other, changedAgg, bucketKeys)
-          val (dimsPruned, factsPruned) =
-            if (factsSide) (otherScoped, refreshedScoped)
-            else (refreshedScoped, otherScoped)
-          val derived = withBucket(
-            derive(dimsPruned.drop(bucketCol), factsPruned.drop(bucketCol)))
-          store.readBuckets(spark, changed)
-            .map(v => derived.unionByName(
-              withBucket(MaterializedView.antiOnKeys(v, changedAgg, bucketKeys))))
-            .getOrElse(derived)
-        }
-      graft.JobLabel(spark, "av:refresh derive+publish") {
-        store.publish(clustered(newViewRows), changed)
-      }
-      // a store that was EMPTY at build time is a single unpartitioned
-      // file: dynamic overwrite would leave it behind next to the new
-      // partition dirs (bucketCol then reads as both a data and a
-      // partition column) — rewrite it fully once; from then on the
-      // store is partitioned and refreshes stay bucket-scoped
-      graft.JobLabel(spark, "av:refresh state-write") {
-        if (isPartitioned(statePath, spark))
-          // dynamic overwrite replaces only bucket partitions; root-level
-          // files (the schema sidecar) survive
-          reclusterForWrite(newState.filter(inChanged)).write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(bucketCol).parquet(statePath)
-        else {
-          reclusterForWrite(newState).write.mode("overwrite")
-            .partitionBy(bucketCol).parquet(statePath)
-          // the full overwrite cleared the root — restore the sidecar
-          MaterializedView.writeSchemaSidecar(spark, statePath, newState.schema)
-        }
-      }
-    } finally release()
-    } finally releaseB()
-  } }
-
-  /** The published aggregate view (all buckets), resolved through the
-    * generation manifest — complete old-or-new state under concurrent
-    * refresh or crash. */
-  def view(spark: SparkSession): DataFrame =
-    store.read(spark)
-      .getOrElse(derive(dims(spark).limit(0), facts(spark).limit(0)))
+  def refreshDims(batch: DataFrame): Unit = refresh(0, batch)
 
   /** The latest-row-per-key dimension state store. */
-  def dims(spark: SparkSession): DataFrame =
-    MaterializedView.readState(spark, dimsPath).drop(bucketCol)
+  def dims(spark: SparkSession): DataFrame = sideState(spark, 0)
 
   /** The latest-row-per-key fact state store. */
-  def facts(spark: SparkSession): DataFrame =
-    MaterializedView.readState(spark, factsPath).drop(bucketCol)
+  def facts(spark: SparkSession): DataFrame = sideState(spark, 1)
 }

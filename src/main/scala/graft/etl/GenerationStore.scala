@@ -200,10 +200,10 @@ final class GenerationStore(
   private def genDir(gen: Long): String = s"$root/gen=$gen"
   private def versionPath(v: Long): Path = new Path(root, s"$manifestName.v$v")
   private val schemaVersionRe =
-    (raw"${java.util.regex.Pattern.quote(MaterializedView.SchemaSidecar)}" +
+    (raw"${java.util.regex.Pattern.quote(BucketedView.SchemaSidecar)}" +
       raw"\.v(\d+)$$").r
   private def schemaVersionPath(v: Long): Path =
-    new Path(root, s"${MaterializedView.SchemaSidecar}.v$v")
+    new Path(root, s"${BucketedView.SchemaSidecar}.v$v")
 
   private def parse(text: String): Map[Long, Long] =
     text.linesIterator.filter(_.nonEmpty).map { line =>
@@ -303,7 +303,7 @@ final class GenerationStore(
     // version-archived copy FIRST (crash leaves an orphan the next gc
     // sweeps), then the live one.
     commit.write(schemaVersionPath(nextGen), newSchema.json, conf(spark))
-    commit.write(new Path(root, MaterializedView.SchemaSidecar),
+    commit.write(new Path(root, BucketedView.SchemaSidecar),
       newSchema.json, conf(spark))
     onBeforeSwap()
     swap(spark, current ++ buckets.map(_ -> nextGen), nextGen)
@@ -311,7 +311,7 @@ final class GenerationStore(
   }
 
   private def liveSchemaJson(spark: SparkSession): Option[String] =
-    commit.read(new Path(root, MaterializedView.SchemaSidecar), conf(spark))
+    commit.read(new Path(root, BucketedView.SchemaSidecar), conf(spark))
 
   /** The schema version `v` committed under. A version that predates
     * per-version schema archives resolves with NO pinned schema —

@@ -3,113 +3,39 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
-
-/** Incrementally-maintained materialized view over a keyed,
-  * latest-version-wins source — the piece that makes the reference's
-  * daily full-view recompute (`sql/customer_360_views.sql` rebuilt per
-  * run) survive 100 TB: a CDC batch refreshes ONLY the hash buckets it
-  * touches instead of rescanning the base table.
-  *
-  * Two stores, both hive-partitioned by `__mv_bucket = pmod(xxhash64(
-  * keys), nBuckets)`:
-  *
-  *   - STATE — the latest source row per key, BEFORE any view filter.
-  *     State must be pre-filter: a key whose current winner fails the
-  *     view's quality gate has no view row, and if the winner weren't
-  *     retained an older resurfacing CDC row would wrongly win the next
-  *     refresh. Latest-per-key is an associative reduction, so
-  *     (state ∪ batch) → latest is exactly (full history) → latest —
-  *     the base table is never needed again after the initial build.
-  *   - VIEW — `derive(state)`, the published rows. `derive` must
-  *     preserve the key columns unrenamed (the bucket is recomputed
-  *     from them at write time; the view itself carries no lineage).
-  *     `derive` must also be PER-KEY LOCAL: each output row may depend
-  *     only on that key's own state rows — never on bucket-mates or
-  *     cross-key aggregates. Above `keyScopeMinStateBytes` the refresh
-  *     re-derives only the CHANGED KEYS of a bucket and carries the
-  *     rest forward from the served generation, so a derive that reads
-  *     other keys (legal-looking, passes small-scale tests where the
-  *     whole-bucket path always runs) would silently diverge from a
-  *     full rebuild exactly when the state grows past the threshold.
-  *     Cross-key views belong in [[AggregateView]].
-  *
-  * Refresh path: the batch's bucket set is resolved driver-side
-  * (≤ nBuckets values — metadata, not data), the state read is
-  * partition-pruned to those buckets, winners are recomputed within
-  * them, and exactly those bucket partitions are rewritten — untouched
-  * buckets are never read or written. Because a refresh overwrites
-  * partitions its own input was read from, the new state is
-  * localCheckpointed before any write (same read-overwrite hazard as
-  * the event sink's processed-id append: under cache eviction a lazy
-  * plan would re-read partitions mid-overwrite).
-  *
-  * The view is SERVED through a [[GenerationStore]]: refreshed buckets
-  * write to an immutable new generation directory and a single manifest
-  * swaps atomically, so a concurrent reader (or a crash at any point in
-  * the refresh) always sees a complete old-or-new state — never a
-  * missing bucket. Dynamic partition overwrite can't serve this role
-  * twice over: it only replaces partitions that receive NEW rows (a
-  * bucket whose view rows all disappear — its last publishable customer
-  * soft-deletes — would keep serving the stale partition forever), and
-  * its delete-write window is visible to readers. State uses dynamic
-  * overwrite — a touched state bucket always has winners and has no
-  * concurrent readers (the refresh loop is the only consumer).
-  *
-  * Deletes fall out naturally: when a refresh makes a key's winner
-  * soft-deleted, `derive` drops the row and the bucket rewrite
-  * publishes the view WITHOUT it — no tombstone bookkeeping.
-  *
-  * `order` must be a TOTAL order (include a unique tiebreaker): rank-1
-  * under ties is engine-arbitrary, and an incremental refresh that
-  * resolves a tie differently from the initial build would silently
-  * diverge from the full rebuild.
-  */
+/** The ONE-SIDED [[BucketedView]]: a keyed, latest-version-wins source
+  * in `$root/state`, bucketed on its own `keys`, feeding a view whose
+  * `derive` is per-key local (the engine's bucket-closed precondition
+  * with `bucketKeys == keys`). Cross-key views belong in
+  * [[AggregateView]]. */
 final class MaterializedView(
     root: String,
     keys: Seq[String],
     order: Seq[Column],
     derive: DataFrame => DataFrame,
     nBuckets: Int = 64,
-    writeTasksPerBucket: Int = 1,
     keepVersions: Int = 1,
-    keyScopeMinStateBytes: Long = MaterializedView.DefaultKeyScopeMinStateBytes) {
+    keyScopeMinStateBytes: Long = BucketedView.DefaultKeyScopeMinStateBytes)
+  extends BucketedView(root, keys, Seq(BucketedView.Side("state", keys, order)),
+    states => derive(states.head), nBuckets, keepVersions, keyScopeMinStateBytes) {
 
-  require(writeTasksPerBucket >= 1,
-    s"writeTasksPerBucket must be >= 1, got $writeTasksPerBucket")
+  /** Full initial build of state and view from `source`. */
+  def build(source: DataFrame): Unit = build(Seq(source))
 
-  private val statePath = s"$root/state"
-  private val viewPath = s"$root/view"
-  private val bucketCol = "__mv_bucket"
+  /** Incremental refresh from a CDC batch of source rows. */
+  def refresh(batch: DataFrame): Unit = refresh(0, batch)
 
-  /** Atomic manifest-mediated publish of the served view (exposed to
-    * the crash/concurrency specs). */
-  private[graft] val store = new GenerationStore(viewPath, bucketCol, keepVersions)
-
-  /** Test hook: runs between the view publish and the state overwrite —
-    * the mirror crash window the publish-first ordering introduces. */
-  private[graft] var onAfterPublish: () => Unit = () => ()
-
-  /** Committed snapshot versions readable right now ([[viewAt]]),
-    * bounded by `keepVersions`. */
-  def viewVersions(spark: SparkSession): Seq[Long] = store.versions(spark)
-
-  /** SNAPSHOT READ: the view exactly as committed version `v` served
-    * it (None once aged past `keepVersions`) — the "what did the
-    * dashboard say before last night's refresh" question answered
-    * without restoring anything. */
-  def viewAt(spark: SparkSession, v: Long): Option[DataFrame] =
-    store.readVersion(spark, v)
+  /** The latest-row-per-key state store. */
+  def state(spark: SparkSession): DataFrame = sideState(spark, 0)
 
   /** CDC OUT of the serving layer: the row-level changelog between two
     * retained snapshots — per view key, `insert` (new in `v2`),
-    * `delete` (gone from `v2`), or `update` (any non-key value
-    * changed, null-safe struct compare); unchanged rows are omitted.
-    * This is the reverse direction of [[refresh]]: downstream
-    * consumers (activation feeds, cache invalidation) subscribe to
-    * what a refresh DID instead of re-diffing the whole view — the
-    * join is key-partitioned, never a full-view collect. None unless
-    * BOTH versions are still retained. Output: key columns (coalesced),
+    * `delete` (gone from `v2`), or `update` (any non-key value changed,
+    * null-safe struct compare); unchanged rows are omitted. Downstream
+    * consumers (activation feeds, cache invalidation) subscribe to what
+    * a refresh DID instead of re-diffing the whole view — the join is
+    * key-partitioned, never a full-view collect. None unless BOTH
+    * versions are still retained. Output: key columns (coalesced),
     * `change`, `old_row`, `new_row` structs (null on insert/delete
     * respectively). */
   def changesBetween(spark: SparkSession, v1: Long, v2: Long): Option[DataFrame] =
@@ -125,472 +51,4 @@ final class MaterializedView(
         .filter(col("change").isNotNull)
         .select(keys.map(col) ++ Seq(col("change"), col("old_row"), col("new_row")): _*)
     }
-
-  private def withBucket(df: DataFrame): DataFrame =
-    df.withColumn(bucketCol,
-      pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)))
-
-  /** Cluster rows to their bucket before a `partitionBy(bucket)` write:
-    * without it every shuffle task holds rows of every bucket and the
-    * write emits up to tasks×buckets files — a small-file explosion that
-    * compounds per refresh (and at 100 TB turns the lake into a metadata
-    * problem).
-    *
-    * One task per bucket bounds the file count but also CAPS write
-    * parallelism at nBuckets and makes one task sort/spill an entire
-    * bucket — at the 100 TB scale this class targets that is ~1.5 TB
-    * per task, a straight path to OOM/stragglers. `writeTasksPerBucket`
-    * is the second lever: rows are clustered on (bucket, salt) so each
-    * bucket is produced by at most that many tasks — per-bucket file
-    * count stays bounded (≤ writeTasksPerBucket per write) while
-    * per-task volume drops to bucket/writeTasksPerBucket. Size BOTH so
-    * a task's share fits in executor memory; the salt is derived from
-    * the keys (seeded differently from the bucket hash), so the layout
-    * stays deterministic. */
-  private def clustered(df: DataFrame): DataFrame =
-    if (writeTasksPerBucket == 1) df.repartition(nBuckets, col(bucketCol))
-    else df.repartition(nBuckets * writeTasksPerBucket, col(bucketCol),
-      pmod(xxhash64(lit("__mv_salt") +: keys.map(col): _*),
-        lit(writeTasksPerBucket.toLong)))
-
-  /** Latest-per-key fold whose OUTPUT is already bucket-clustered: one
-    * exchange serves both the window and the state write (the bucket is
-    * a pure function of the keys — [[Dedup.latestByKeyClustered]]).
-    * The salted multi-task-per-bucket layout can't ride the window's
-    * clustering, so it keeps the separate fold + recluster. The fused
-    * output's clustering survives filter and localCheckpoint
-    * PHYSICALLY (1:1 partitions), so downstream partitioned writes stay
-    * one-file-per-bucket without [[reclusterForWrite]] shuffling again. */
-  private def foldClustered(df: DataFrame): DataFrame =
-    if (writeTasksPerBucket == 1)
-      Dedup.latestByKeyClustered(df, keys, order, bucketCol, nBuckets)
-    else clustered(Dedup.latestByKey(df, keys, order))
-
-  /** State-write companion of [[foldClustered]]: a frame that came out
-    * of the fused fold is already physically clustered — reshuffling it
-    * would pay the exchange the fusion just saved. */
-  private def reclusterForWrite(df: DataFrame): DataFrame =
-    if (writeTasksPerBucket == 1) df else clustered(df)
-
-  /** Full initial build: every bucket of state and view. The state
-    * write IS the dedup's materialization (no checkpoint pass — unlike
-    * [[refresh]] there is no read-overwrite hazard on a fresh root);
-    * the view derivation then re-reads the state it just wrote, which
-    * is a COLUMN-PRUNED scan of freshly-written compressed parquet —
-    * cheaper than holding a full-width block copy of the state in
-    * executor memory for the one derive pass. */
-  def build(source: DataFrame): Unit = graft.plans.MvRewrite.withRuleDisabled {
-    // BUILD-ONLY fold shape: the initial load is the high-version-fanout
-    // case (a daily-versioned feed's full history), where aggregating
-    // FIRST wins — the dedup rewrite's map-side partial combine ships
-    // ~|keys| rows per mapper into the fold exchange, and only the
-    // deduped survivors recluster for the write. The fused single-
-    // exchange fold would ship EVERY version row to its bucket before
-    // collapsing. Refresh folds keep the fused shape: their input is
-    // dominated by already-deduped state (fanout ≈ 1), so the collapse
-    // buys nothing and the single exchange wins there.
-    //
-    // The aggregate-first win DEPENDS on [[graft.plans.DedupWindowToMaxBy]]
-    // firing: when this view's `order` doesn't qualify (mixed sort
-    // directions, non-default null ordering, or a non-orderable
-    // payload column such as a map), latestByKey
-    // would plan a full window exchange PLUS the recluster exchange —
-    // strictly worse than the fused single-exchange fold, which is kept
-    // as the fallback here.
-    val bucketed = withBucket(source)
-    val folded =
-      if (MaterializedView.aggregateFirstEligible(bucketed, order))
-        clustered(Dedup.latestByKey(bucketed, keys, order))
-      else foldClustered(bucketed)
-    graft.JobLabel(source.sparkSession, "mv:build fold+state-write") {
-      folded.write.mode("overwrite").partitionBy(bucketCol).parquet(statePath)
-    }
-    MaterializedView.writeSchemaSidecar(
-      source.sparkSession, statePath, folded.schema)
-    val state = MaterializedView.readState(source.sparkSession, statePath)
-    graft.JobLabel(source.sparkSession, "mv:build derive+publish") {
-      store.publish(
-        clustered(withBucket(derive(state.drop(bucketCol)))),
-        0L until nBuckets.toLong)
-    }
-  }
-
-  /** Incremental refresh from a CDC batch: recompute winners and view
-    * rows for the batch's CHANGED buckets only; all other buckets
-    * untouched. A bucket whose latest-version-wins fold leaves its
-    * state byte-identical (every batch row lost to — or duplicated — an
-    * already-stored winner) is skipped entirely: no state rewrite, no
-    * re-derive, no publish. A fully-replayed CDC batch therefore
-    * publishes NO new generation — the idempotence the reference's
-    * activation path relies on when it replays batches by design
-    * (`scripts/lambda_redshift_to_segment.py:97-135`).
-    *
-    * CRASH CONTRACT — publish BEFORE the state overwrite. The no-op
-    * skip keys off the state fold, so the state write must be the LAST
-    * durable step: a refresh that crashes anywhere (mid-publish, or
-    * after the manifest swap but before the state write) leaves the
-    * state OLD, and the documented recovery path — replay the crashed
-    * batch — re-detects the change, re-publishes idempotently (same
-    * content, fresh generation; the crashed orphan is GC'd at that
-    * publish's start) and completes the state write. The r9 ordering
-    * (state first) broke this: a crash between state write and swap
-    * made the replay see "state unchanged" and skip the publish
-    * forever. The trade is the mirror window — view published, state
-    * not yet written — where a NON-replay batch would fold without the
-    * crashed batch's rows; latest-version-wins makes any later replay
-    * of the crashed batch (at-least-once delivery is the activation
-    * contract) restore them, so convergence holds in either order.
-    *
-    * Change detection compares per-row JSON fingerprints of new vs old
-    * state rather than `exceptAll` on raw rows: Spark set operations
-    * reject MapType columns, and state schemas in the reference family
-    * carry JSONB-style maps. `to_json` (nulls kept) is total over the
-    * lake's types; same-schema equal rows serialize identically, and a
-    * map whose physical entry order differs can only FALSELY REPORT a
-    * change (a wasted republish), never hide one.
-    *
-    * COST-BASED derive scope. Only the batch's keys can change winners
-    * (the fold is per-key), so in principle `derive` — the expensive
-    * step — need only run over the CHANGED keys' state rows, with the
-    * republished buckets' unchanged keys carrying their view rows
-    * FORWARD from the served generation (a column-complete copy, no
-    * recompute). That scoping is sound because the bucket hashes the
-    * very key columns `derive` must preserve, so a key's view rows
-    * depend only on that key's state row and land in that key's bucket
-    * (per-key locality is a `derive` precondition of this class). But
-    * it is not FREE: it adds a null-safe anti join against the served
-    * generation and a union — extra stages that cost more than they
-    * save when the dirty buckets are small enough that re-deriving
-    * them whole is trivial (measured at the sf0.1 bench: +2-5 s per
-    * refresh for derive work worth less). So the scope is chosen by the dirty
-    * buckets' on-disk STATE SIZE — an FS-metadata probe, zero jobs:
-    * below `keyScopeMinStateBytes`, whole dirty buckets are re-derived
-    * straight off the checkpointed fold (no carry-forward joins); at
-    * or above it, derive runs over the changed keys only, which is the
-    * 100 TB CDC posture — a 10-row batch against terabyte buckets
-    * re-derives 10 keys, not two full hash buckets of keys. Either
-    * way the fold and state write stay whole-bucket: state IO is
-    * O(dirty buckets) regardless (dynamic overwrite replaces whole
-    * bucket partitions), and the whole-bucket fold is exactly what the
-    * state write must materialize. */
-  def refresh(batch: DataFrame): Unit = graft.plans.MvRewrite.withRuleDisabled {
-    val spark = batch.sparkSession
-    // The batch is CDC-bounded in SIZE but its PLAN can be arbitrarily
-    // expensive (a filtered multi-way join in the bench; a cross-system
-    // extract in production), and the refresh consumes it three times —
-    // fold input, batch-key probes of the change flag. Checkpoint once,
-    // read three times; the batch's bucket ids (bounded metadata) ride
-    // the checkpoint job as an observed BITMASK metric instead of
-    // costing a separate distinct+collect job (see bucketMask for why a
-    // mask, not collect_set; >64-bucket stores keep the probe).
-    val mask = MaterializedView.maskable(nBuckets)
-    val bucketed = withBucket(batch)
-    val observedBatch =
-      if (mask) bucketed.observe("graft_mv_batch",
-        MaterializedView.bucketMask(bucketCol, lit(true)))
-      else bucketed
-    val (b, releaseB) = graft.JobLabel(spark, "mv:refresh batch-checkpoint") {
-      graft.Lineage.checkpointed(observedBatch)
-    }
-    try {
-    val buckets =
-      (if (mask) MaterializedView.observedBuckets(observedBatch, "graft_mv_batch")
-       else None)
-        .getOrElse(b.select(bucketCol).distinct().collect().map(_.getLong(0)).toSeq)
-    if (buckets.isEmpty) return
-    val keyScoped = MaterializedView.bucketBytes(
-      spark, statePath, bucketCol, buckets) >= keyScopeMinStateBytes
-    val oldState = MaterializedView.readState(spark, statePath)
-      .filter(col(bucketCol).isin(buckets: _*))
-    val batchKeys = b.select(keys.map(col): _*).distinct()
-    // Fold, change flag and changed-bucket probe fused into ONE
-    // checkpointed job (r12: the fixed per-refresh stages — not the
-    // derive — dominated the sf0.1 refresh cost). The flag compare is
-    // resolved with the fold, BEFORE any write, while oldState's input
-    // files are intact; its probe joins are batch-key-scoped (the
-    // per-key fold can only change rows whose key appears in the batch)
-    // and BROADCAST, so the fold's physical bucket clustering survives
-    // to the state write — see [[MaterializedView.flagChanged]]. The
-    // checkpoint also severs lineage before the read-overwrite
-    // (identical hazard discipline as before), and the changed-bucket
-    // ids ride it as an observed metric.
-    val flagged0 = MaterializedView.flagChanged(
-      foldClustered(oldState.unionByName(b.select(oldState.columns.map(col): _*))),
-      oldState, batchKeys, keys, bucketCol)
-    val flagged =
-      if (mask) flagged0.observe("graft_mv_changed",
-        MaterializedView.bucketMask(bucketCol, col(MaterializedView.ChangedCol)))
-      else flagged0
-    val (flaggedCp, release) = graft.JobLabel(spark, "mv:refresh fold+flag") {
-      graft.Lineage.checkpointed(flagged)
-    }
-    try {
-      val newState = flaggedCp.drop(MaterializedView.ChangedCol)
-      val changedRows =
-        flaggedCp.filter(col(MaterializedView.ChangedCol))
-          .drop(MaterializedView.ChangedCol)
-      val changed =
-        (if (mask) MaterializedView.observedBuckets(flagged, "graft_mv_changed")
-         else None)
-          .getOrElse(changedRows.select(bucketCol).distinct()
-            .collect().map(_.getLong(0)).toSeq)
-      if (changed.isEmpty) return
-      val inChanged = col(bucketCol).isin(changed: _*)
-      val newViewRows =
-        if (!keyScoped) withBucket(derive(newState.filter(inChanged).drop(bucketCol)))
-        else {
-          // re-derive ONLY the changed keys; the republished buckets'
-          // unchanged keys ride along from the served generation
-          val changedKeys = changedRows.select(keys.map(col): _*).distinct()
-          val derived = withBucket(derive(changedRows.drop(bucketCol)))
-          // the carry-forward reads live generation files, which a
-          // publish never mutates
-          store.readBuckets(spark, changed)
-            .map(v => derived.unionByName(
-              withBucket(MaterializedView.antiOnKeys(v, changedKeys, keys))))
-            .getOrElse(derived)
-        }
-      // the publish is atomic per GenerationStore, and it precedes
-      // the state write per the crash contract above
-      graft.JobLabel(spark, "mv:refresh derive+publish") {
-        store.publish(clustered(newViewRows), changed)
-      }
-      onAfterPublish()
-      graft.JobLabel(spark, "mv:refresh state-write") {
-        reclusterForWrite(newState.filter(inChanged))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(bucketCol).parquet(statePath)
-      }
-    } finally release()
-    } finally releaseB()
-  }
-
-  /** The published view (all buckets; add key-derived bucket filters
-    * upstream for pruned point reads), resolved through the
-    * generation manifest — a concurrent refresh can never make a bucket
-    * disappear from this read. A view never published or currently
-    * EMPTY has no parquet files (a partitioned write of zero rows emits
-    * none), so the schema is reconstructed by deriving over zero state
-    * rows instead of failing schema inference. */
-  def view(spark: SparkSession): DataFrame =
-    store.read(spark).getOrElse(derive(state(spark).limit(0)))
-
-  /** The latest-row-per-key state store. */
-  def state(spark: SparkSession): DataFrame =
-    MaterializedView.readState(spark, statePath).drop(bucketCol)
-}
-
-object MaterializedView {
-
-  /** Dirty-state size at which a refresh switches from re-deriving
-    * whole dirty buckets to the key-scoped derive + carry-forward path
-    * (see [[MaterializedView.refresh]]). 4 GiB: below it, re-deriving
-    * the buckets outright is a sub-second cluster job and the scoped
-    * path's extra stages (checkpoint, anti join, union) dominate;
-    * above it, recomputing unchanged keys dominates and scoping wins
-    * asymptotically (O(batch) instead of O(dirty buckets) compute). */
-  val DefaultKeyScopeMinStateBytes: Long = 4L << 30
-
-  /** Name of the schema sidecar written beside every state store and
-    * generation root. The `_` prefix hides it from Spark's data-file
-    * discovery; content is `StructType.json` of the frame as written
-    * (bucket column included, typed LONG — which also pins the
-    * partition-column type instead of re-inferring int per read). */
-  private[graft] val SchemaSidecar = "_graft_schema.json"
-
-  /** Persist `schema` beside `path` (atomic replace). Written AFTER the
-    * data (a full overwrite clears the directory first). */
-  private[graft] def writeSchemaSidecar(
-      spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): Unit =
-    AtomicText.write(new org.apache.hadoop.fs.Path(path, SchemaSidecar),
-      schema.json, spark.sparkContext.hadoopConfiguration)
-
-  /** Read a state store WITHOUT a schema-inference pass when the
-    * sidecar is present: footer-sampling is a distributed job per read
-    * (four-plus reads per refresh), and at the 100 TB posture inference
-    * over a million-file store is a real cluster job serving no purpose
-    * — the store OWNS its schema, it wrote it. Falls back to inference
-    * for stores written before the sidecar existed. */
-  private[graft] def readState(spark: SparkSession, path: String): DataFrame =
-    AtomicText.read(new org.apache.hadoop.fs.Path(path, SchemaSidecar),
-      spark.sparkContext.hadoopConfiguration) match {
-      case Some(json) =>
-        spark.read.schema(org.apache.spark.sql.types.DataType.fromJson(json)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]).parquet(path)
-      case None => spark.read.parquet(path)
-    }
-
-  /** Conservative mirror of [[graft.plans.DedupWindowToMaxBy]]'s
-    * fire conditions, checkable BEFORE planning: all sort directions
-    * identical with the DEFAULT null ordering, and every payload
-    * column orderable (the rewrite packs the whole row into one
-    * comparable struct). A bare (direction-less)
-    * order column defaults to ascending, matching `orderBy`. False
-    * negatives only cost the build the fused-fold shape instead of
-    * aggregate-first — a perf heuristic, never a correctness gate. */
-  private[graft] def aggregateFirstEligible(
-      df: DataFrame, order: Seq[Column]): Boolean = {
-    import org.apache.spark.sql.catalyst.expressions.RowOrdering
-    // (child, descending, nullsLast) per sort column — read off the
-    // Column node, since the lazy expression wrapper hides SortOrder
-    val sos = order.map(org.apache.spark.sql.GraftSqlShim.sortOrderOf)
-    // no determinism probe: it is unreadable pre-analysis (the lazy
-    // node wrapper reports leaf-deterministic), and a nondeterministic
-    // order key already violates this class's total-order contract —
-    // the rewrite's own guard still refuses to fire on one, so the only
-    // cost is the window shape it would have planned anyway
-    sos.nonEmpty &&
-      (sos.forall(_._2) || sos.forall(!_._2)) &&
-      // default null ordering: DESC NULLS LAST / ASC NULLS FIRST
-      sos.forall { case (_, desc, nullsLast) => desc == nullsLast } &&
-      df.schema.forall(f => RowOrdering.isOrderable(f.dataType))
-  }
-
-  /** Total on-disk bytes of `path`'s hive partitions for `buckets` —
-    * pure FS metadata (no Spark job), the cost signal the refresh's
-    * scope decision reads. A store written unpartitioned (the empty-
-    * at-build corner) or a missing bucket directory contributes 0. */
-  private[graft] def bucketBytes(
-      spark: SparkSession, path: String, bucketCol: String,
-      buckets: Seq[Long]): Long = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    buckets.map { b =>
-      val p = new org.apache.hadoop.fs.Path(root, s"$bucketCol=$b")
-      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-    }.sum
-  }
-
-  /** (bucket, row-JSON) projection used for map-safe change detection:
-    * comparisons on the fingerprint columns (long, string) are always
-    * legal regardless of the state schema. Columns are serialized in
-    * sorted name order with nulls KEPT (`ignoreNullFields=false` — the
-    * default drops null fields, and while same-schema rows would still
-    * collide identically, keeping them makes the encoding injective per
-    * schema by inspection). */
-  private[graft] def fingerprints(state: DataFrame, bucketCol: String): DataFrame = {
-    val dataCols = state.columns.filter(_ != bucketCol).sorted
-    // cast: a store read back through partition-column type inference can
-    // carry the bucket as int while the in-flight side computes a long —
-    // the anti-join key types must line up exactly
-    state.select(col(bucketCol).cast("long").as(bucketCol),
-      to_json(struct(dataCols.map(col): _*),
-        Map("ignoreNullFields" -> "false")).as("__mv_row_json"))
-  }
-
-  /** Marker column [[flagChanged]] appends: true exactly on the
-    * new-state rows whose latest-per-key fold CHANGED anything. */
-  private[graft] val ChangedCol = "__mv_changed"
-
-  /** `newState` plus [[ChangedCol]]: true on rows whose key appears in
-    * `batchKeys` (the per-key fold can only change rows whose key is in
-    * the batch — fingerprinting the rest of the dirty buckets is
-    * provably wasted work) AND whose fingerprint is absent from the old
-    * state (the fold never drops a key, so new-minus-old captures every
-    * insert and update). LEFT probe joins, not `exceptAll`: fingerprints
-    * embed their key so each side is unique per (bucket, json) — no row
-    * duplication — and the joins stay whole-stage-codegen, while
-    * exceptAll plans a sum-of-counts aggregate plus an interpreted
-    * Generate(ReplicateRows) (pinned by PlanAuditSpec's heavies audit).
-    *
-    * Both probe sides are BROADCAST by hint — the batch is CDC-bounded
-    * by contract — so the flag rides the fold's own checkpoint job as
-    * NARROW operators: the fold's physical bucket clustering survives
-    * to the downstream partitioned state write (no re-shuffle, no
-    * small-file explosion), and the refresh saves the separate
-    * change-compare job (plus its checkpoint on the key-scoped path) it
-    * used to run. `batchKeys` must be DISTINCT, or the in-batch probe
-    * would duplicate state rows. */
-  private[graft] def flagChanged(
-      newState: DataFrame, oldState: DataFrame, batchKeys: DataFrame,
-      keys: Seq[String], bucketCol: String): DataFrame = {
-    val dataCols = newState.columns.filter(_ != bucketCol).sorted
-    val renamed = keys.map(k => s"__mvk_$k")
-    val inBatch = broadcast(batchKeys.select(keys.map(col): _*).toDF(renamed: _*)
-      .withColumn("__mv_in_batch", lit(true)))
-    val oldFp = broadcast(
-      fingerprints(semiOnKeys(oldState, batchKeys, keys), bucketCol)
-        .withColumn("__mv_seen", lit(true)))
-    newState
-      .withColumn(bucketCol, col(bucketCol).cast("long"))
-      .join(inBatch,
-        keys.zip(renamed).map { case (l, r) => col(l) <=> col(r) }.reduce(_ && _),
-        "left")
-      .drop(renamed: _*)
-      // fingerprint ONLY in-batch rows; a null join key matches nothing
-      .withColumn("__mv_row_json",
-        when(col("__mv_in_batch"), to_json(struct(dataCols.map(col): _*),
-          Map("ignoreNullFields" -> "false"))))
-      .join(oldFp, Seq(bucketCol, "__mv_row_json"), "left")
-      .withColumn(ChangedCol,
-        coalesce(col("__mv_in_batch"), lit(false)) && col("__mv_seen").isNull)
-      .drop("__mv_in_batch", "__mv_row_json", "__mv_seen")
-  }
-
-  /** Times [[observedBuckets]] found no metric and a refresh fell back
-    * to the separate distinct+collect job. The fallback is CORRECT but
-    * re-introduces the job the observe fusion removed — a Spark change
-    * that reroutes `localCheckpoint`'s QueryExecution must fail the
-    * observe-path pin in MaterializedViewSpec loudly, not re-cost every
-    * refresh quietly (same doctrine as ConnectedComponents'
-    * probeFallbacks). */
-  private[graft] val probeFallbacks = new java.util.concurrent.atomic.AtomicLong
-
-  /** Bucket-id observe metrics are only attached when the whole bucket
-    * domain fits one Long BITMASK. `bit_or(shiftleft(1L, bucket))` is a
-    * DECLARATIVE aggregate — `collect_set` is a TypedImperativeAggregate
-    * whose per-row path is CodegenFallback, and the refresh jobs are
-    * top-10 bench heavies whose plans PlanAuditSpec pins fallback-free.
-    * Stores bucketed wider than 64 keep the separate distinct+collect
-    * probe (the pre-r12 shape). */
-  private[graft] def maskable(nBuckets: Int): Boolean = nBuckets <= 64
-
-  /** The bitmask metric expression: OR of `1L << bucket` over the rows
-    * where `include` holds (rows failing it contribute NULL, which
-    * `bit_or` skips — an all-excluded job yields a NULL mask = ∅). */
-  private[graft] def bucketMask(bucketCol: String, include: Column): Column =
-    bit_or(when(include,
-      expr(s"shiftleft(1L, cast($bucketCol as int))"))).as("mask")
-
-  /** The bucket-id set a `observe(name, bucketMask(...))` metric
-    * captured on `df`'s materializing job, if the runtime delivered it
-    * (callers keep a distinct+collect fallback). */
-  private[graft] def observedBuckets(df: DataFrame, name: String): Option[Seq[Long]] = {
-    val m = df.queryExecution.observedMetrics.get(name).map { r =>
-      if (r.isNullAt(0)) Seq.empty[Long]
-      else {
-        val mask = r.getLong(0)
-        (0 until 64).collect { case i if ((mask >>> i) & 1L) == 1L => i.toLong }
-      }
-    }
-    if (m.isEmpty) probeFallbacks.incrementAndGet()
-    m
-  }
-
-  /** `df` rows whose `keys` tuple appears in `keysDf` (same-named
-    * columns). NULL-SAFE equality — the latest-wins window groups NULL
-    * keys like any other value, so the key-scoped fold must too (a
-    * plain equi-join would silently orphan a stored NULL-key winner
-    * from a NULL-key batch row). Right side is renamed to dodge
-    * same-lineage ambiguity; EqualNullSafe still extracts as a hash
-    * join key, so this plans as a broadcast/shuffled hash semi join,
-    * never a nested loop. */
-  private[graft] def semiOnKeys(df: DataFrame, keysDf: DataFrame, keys: Seq[String]): DataFrame =
-    joinOnKeys(df, keysDf, keys, "left_semi")
-
-  /** Complement of [[semiOnKeys]]: `df` rows whose `keys` tuple is NOT
-    * in `keysDf` (null-safe). */
-  private[graft] def antiOnKeys(df: DataFrame, keysDf: DataFrame, keys: Seq[String]): DataFrame =
-    joinOnKeys(df, keysDf, keys, "left_anti")
-
-  private def joinOnKeys(
-      df: DataFrame, keysDf: DataFrame, keys: Seq[String], how: String): DataFrame = {
-    val renamed = keys.map(k => s"__mvk_$k")
-    val rhs = keysDf.select(keys.map(col): _*).toDF(renamed: _*)
-    df.join(rhs,
-      keys.zip(renamed).map { case (l, r) => col(l) <=> col(r) }.reduce(_ && _),
-      how)
-  }
 }

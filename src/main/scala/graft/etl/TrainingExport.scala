@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * shard directories; partition pruning serves single-source reads.
   *
   * Write discipline: rows cluster to their shard before the write
-  * (bounded files per partition — the [[MaterializedView.clustered]]
+  * (bounded files per partition — the [[BucketedView]] bucket clustering
   * doctrine); `overwrite` keeps re-exports idempotent.
   *
   * The MANIFEST is computed from a READ-BACK of the written files, not

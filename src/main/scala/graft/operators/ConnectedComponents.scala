@@ -49,7 +49,7 @@ object ConnectedComponents {
   /** Edge count at or below which components are solved DRIVER-SIDE by
     * union-find on the collected (deduped, symmetric-halved) edge list
     * instead of iterating distributed rounds. Cost-based, same doctrine
-    * as `MaterializedView.keyScopeMinStateBytes`: every distributed
+    * as `BucketedView`'s `keyScopeMinStateBytes`: every distributed
     * round pays 3 shuffles + an eager checkpoint REGARDLESS of data
     * size, so a bounded edge list (≤ ~16 MB collected at this default)
     * is pure fixed overhead × O(log diameter) — the exact same labels

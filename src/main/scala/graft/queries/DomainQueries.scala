@@ -933,7 +933,7 @@ object DomainQueries {
     * segments: dims = customer master latest-per-custno, facts = deals
     * latest-per-dealno, marketability gates reapplied in derive over
     * profile state). Pre-filter doctrine as `mv_segments_refresh`. The
-    * streamed form of this loop — CDC → Streams.maintainFacts →
+    * streamed form of this loop — CDC → Streams.maintain →
     * incremental activation with processed-ID dedup — is pinned
     * end-to-end in `ActivationLoopSpec`. */
   private val mvValidated = Q(

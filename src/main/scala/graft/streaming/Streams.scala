@@ -376,13 +376,17 @@ object Streams {
 
   /** CONTINUOUS VIEW MAINTENANCE — the reference's daily loop run as a
     * stream: a CDC stream of source-row versions keeps a
-    * [[graft.etl.MaterializedView]] fresh, each micro-batch refreshing
-    * only the hash buckets it touches while readers keep serving a
-    * complete generation through the manifest swap.
+    * [[graft.etl.BucketedView]] fresh, each micro-batch calling one of
+    * its refresh entry points (`mv.refresh`, `av.refreshFacts`, ...) so
+    * only the hash buckets it touches are rewritten while readers keep
+    * serving a complete generation through the manifest swap. For an
+    * aggregate view the high-velocity side streams; the other side's
+    * batch refreshes interleave SAFELY between micro-batches, because
+    * the view serializes its writers.
     *
     * Delivery is foreachBatch's AT-LEAST-ONCE (a crash between the
     * refresh and the offset commit replays the batch) — sufficient
-    * because `refresh` is idempotent under replay BY CONTRACT: the
+    * because a refresh is idempotent under replay BY CONTRACT: the
     * latest-version-wins fold makes a replayed row lose to the winner
     * it already installed, the byte-identical no-op skip publishes no
     * new generation, and the publish-before-state crash ordering makes
@@ -390,33 +394,16 @@ object Streams {
     * the same argument as the event sink's processed-id dedup, without
     * needing any id state here. The stream must deliver PRE-FILTERED
     * rows (any predicate the view applies before its rank), exactly as
-    * batch callers of `refresh` must.
+    * batch callers of the refresh must.
     *
     * 100 TB posture: per-batch cost is the CDC batch's buckets, never
     * the base table — the streaming twin of the bucket-pruned batch
     * refresh, so view freshness decouples from view size. */
-  def maintainView(
+  def maintain(
       cdc: DataFrame,
-      view: graft.etl.MaterializedView,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    deliverStream(cdc, checkpoint) { (batch, _) => view.refresh(batch) }
-
-  /** Facts-side continuous maintenance of an [[graft.etl.AggregateView]]
-    * — the segments view's operational loop: the high-velocity side
-    * (deals/facts) streams, each micro-batch re-aggregating only its
-    * buckets; DIMENSION changes arrive through batch `refreshDims`
-    * cycles between/around the stream — the store serializes writers
-    * through its per-instance lock (r13), so a dim refresh fired
-    * mid-stream interleaves SAFELY between micro-batches instead of
-    * corrupting by scheduling luck. At-least-once delivery suffices by the
-    * same replay-idempotence argument as [[maintainView]]; the stream
-    * must deliver pre-filtered fact rows, like any `refreshFacts`
-    * caller. */
-  def maintainFacts(
-      cdc: DataFrame,
-      view: graft.etl.AggregateView,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    deliverStream(cdc, checkpoint) { (batch, _) => view.refreshFacts(batch) }
+      checkpoint: String)(
+      refresh: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    deliverStream(cdc, checkpoint) { (batch, _) => refresh(batch) }
 
   /** Multi-view continuous maintenance under CROSS-VIEW snapshot
     * isolation: one CDC stream keeps a SET of views fresh — each
@@ -429,7 +416,7 @@ object Streams {
     * between refreshes).
     *
     * Crash contract, on top of each refresher's own replay-idempotence
-    * ([[maintainView]]): a crash ANYWHERE inside the cycle — even
+    * ([[maintain]]): a crash ANYWHERE inside the cycle — even
     * between two member refreshes — leaves the catalog at the previous
     * cycle's consistent pins; the batch replays, already-applied
     * members no-op (byte-identical skip publishes no generation),

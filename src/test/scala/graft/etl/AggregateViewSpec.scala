@@ -57,7 +57,7 @@ class AggregateViewSpec extends AnyFunSuite {
     val s = spark; import s.implicits._
     def sortedRows(d: DataFrame): Seq[String] =
       d.collect().map(_.toString).sorted.toSeq
-    for (seed <- Seq(11); scope <- Seq(MaterializedView.DefaultKeyScopeMinStateBytes, 0L)) {
+    for (seed <- Seq(11); scope <- Seq(BucketedView.DefaultKeyScopeMinStateBytes, 0L)) {
       val rnd = new scala.util.Random(seed)
       val fidOwner = (0 until 30).map(fid => fid.toLong -> rnd.nextInt(10).toLong).toMap
       val allDims = (1 to 40).map(i =>
@@ -239,7 +239,7 @@ class AggregateViewSpec extends AnyFunSuite {
     // firing refreshDims mid-stream, and correctness then hung on
     // scheduling luck. The per-store writer lock serializes the three
     // writers; this drives a REAL interleave (a background thread
-    // hammering refreshDims while maintainFacts drains micro-batches)
+    // hammering refreshDims while maintain drains micro-batches)
     // and demands convergence to the full rebuild plus zero errors.
     val s0 = spark
     import s0.implicits._
@@ -261,8 +261,8 @@ class AggregateViewSpec extends AnyFunSuite {
       Seq((14L, 4L, 1L, 11L)), Seq((11L, 2L, 2L, 8L)))
 
     val in = MemoryStream[(Long, Long, Long, Long)]
-    val q = graft.streaming.Streams.maintainFacts(
-      in.toDF().toDF("fid", "id", "fversion", "amount"), av, s"$root/ckpt")
+    val q = graft.streaming.Streams.maintain(
+      in.toDF().toDF("fid", "id", "fversion", "amount"), s"$root/ckpt")(av.refreshFacts)
     val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val dimThread = new Thread(() =>
       try dimBatches.foreach { b => av.refreshDims(dims(b: _*)); Thread.sleep(3) }

@@ -37,21 +37,43 @@ class MaterializedViewSpec extends AnyFunSuite {
     mv.view(spark).collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
 
+  /** A built two-sided view and one changing batch per side, for the
+    * refresh-chain pins: `(entry point, refresh)`. */
+  private def twoSidedRefreshes(): Seq[(String, () => Unit)] = {
+    val s = spark; import s.implicits._
+    val av = new AggregateView(Files.createTempDirectory("graft_mv_av").toString,
+      Seq("id"), dimKeys = Seq("id"), dimOrder = Seq(col("dversion").desc),
+      factKeys = Seq("fid"), factOrder = Seq(col("fversion").desc),
+      (d, f) => d.join(f.groupBy("id").agg(sum("amount").as("total")), Seq("id"), "left"),
+      nBuckets = 8)
+    av.build(Seq((1L, 1L, "a"), (2L, 1L, "b")).toDF("id", "dversion", "name"),
+      Seq((10L, 1L, 1L, 5L)).toDF("fid", "id", "fversion", "amount"))
+    Seq(
+      "refreshFacts" -> (() => av.refreshFacts(
+        Seq((11L, 2L, 1L, 7L)).toDF("fid", "id", "fversion", "amount"))),
+      "refreshDims" -> (() => av.refreshDims(
+        Seq((1L, 2L, "a2")).toDF("id", "dversion", "name"))))
+  }
+
   test("refresh equals full rebuild across newer, older and unseen keys") {
     val base = rows((1L, 1L, false, "a1"), (2L, 5L, false, "b5"), (3L, 2L, false, "c2"))
     val batch = rows(
       (1L, 9L, false, "a9"),  // newer version wins
       (2L, 3L, false, "b3"),  // LATE older version must lose to stored b5
       (7L, 1L, false, "g1"))  // brand-new key
-    val (_, mv) = mk()
-    mv.build(base)
-    mv.refresh(batch)
-    assert(viewMap(mv) == Map(
-      1L -> ("a9", 90L), 2L -> ("b5", 50L), 3L -> ("c2", 20L), 7L -> ("g1", 10L)))
+    // an EMPTY build writes no state files at all: only the schema
+    // sidecar keeps the store readable and refreshable
+    for (b <- Seq(base, base.limit(0))) {
+      val (_, mv) = mk()
+      mv.build(b)
+      mv.refresh(batch)
+      if (b eq base) assert(viewMap(mv) == Map(
+        1L -> ("a9", 90L), 2L -> ("b5", 50L), 3L -> ("c2", 20L), 7L -> ("g1", 10L)))
 
-    val (_, full) = mk()
-    full.build(base.unionByName(batch))
-    assert(viewMap(mv) == viewMap(full))
+      val (_, full) = mk()
+      full.build(b.unionByName(batch))
+      assert(viewMap(mv) == viewMap(full))
+    }
   }
 
   test("state writes stay one-file-per-bucket through build and refresh") {
@@ -92,10 +114,12 @@ class MaterializedViewSpec extends AnyFunSuite {
     // (ConnectedComponents' probeFallbacks doctrine).
     val (_, mv) = mk()
     mv.build(rows((1L, 1L, false, "a1"), (2L, 1L, false, "b1")))
-    val before = MaterializedView.probeFallbacks.get()
+    val twoSided = twoSidedRefreshes()
+    val before = BucketedView.probeFallbacks.get()
     mv.refresh(rows((1L, 2L, false, "a2"), (9L, 1L, false, "j1")))
     assert(viewMap(mv) == Map(1L -> ("a2", 20L), 2L -> ("b1", 10L), 9L -> ("j1", 10L)))
-    assert(MaterializedView.probeFallbacks.get() == before,
+    twoSided.foreach { case (_, refresh) => refresh() }
+    assert(BucketedView.probeFallbacks.get() == before,
       "refresh fell back to the distinct+collect bucket probe")
   }
 
@@ -109,38 +133,43 @@ class MaterializedViewSpec extends AnyFunSuite {
     // a ≤64-bucket (maskable) store.
     val (_, mv) = mk()
     mv.build(rows((1L, 1L, false, "a1"), (2L, 1L, false, "b1")))
-    // one STAGE of the refresh = one SQL execution id (AQE fans an
-    // execution out into several scheduler jobs, so raw job counts are
-    // plan-shape noise); bare RDD jobs without an execution id are
-    // allowed ONLY for parquet footer reads (read-side schema
-    // inference on the state scan — metadata, not a refresh stage)
-    val execs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val bare = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))) match {
-          case Some(id) => execs.add(id)
-          case None =>
-            bare.add(s"job-${js.jobId}:" +
-              js.stageInfos.map(_.name).mkString("|").take(120))
-        }
+    // the two-sided entry points run the same chain
+    val shapes = ("refresh", () => mv.refresh(rows((1L, 2L, false, "a2"), (9L, 1L, false, "j1")))) +:
+      twoSidedRefreshes()
+    for ((shape, refresh) <- shapes) {
+      // one STAGE of the refresh = one SQL execution id (AQE fans an
+      // execution out into several scheduler jobs, so raw job counts are
+      // plan-shape noise); bare RDD jobs without an execution id are
+      // allowed ONLY for parquet footer reads (read-side schema
+      // inference on the state scan — metadata, not a refresh stage)
+      val execs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+      val bare = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(js.properties)
+            .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))) match {
+            case Some(id) => execs.add(id)
+            case None =>
+              bare.add(s"job-${js.jobId}:" +
+                js.stageInfos.map(_.name).mkString("|").take(120))
+          }
+      }
+      val before = BucketedView.probeFallbacks.get()
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        refresh()
+        org.apache.spark.GraftCoreShim.flushListeners(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(BucketedView.probeFallbacks.get() == before,
+        "a probe fell off the observe metrics — execution count below is stale")
+      assert(execs.size == 4,
+        s"$shape ran ${execs.size} executions; the pinned shape is 4 " +
+          "(batch ckpt, fold ckpt, publish, state write)")
+      import scala.jdk.CollectionConverters._
+      assert(bare.asScala.forall(_.contains("parquet at")),
+        s"unexpected bare RDD job (a probe job returned?): $bare")
     }
-    val before = MaterializedView.probeFallbacks.get()
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      mv.refresh(rows((1L, 2L, false, "a2"), (9L, 1L, false, "j1")))
-      org.apache.spark.GraftCoreShim.flushListeners(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(MaterializedView.probeFallbacks.get() == before,
-      "a probe fell off the observe metrics — execution count below is stale")
-    assert(execs.size == 4,
-      s"refresh ran ${execs.size} executions; the pinned shape is 4 " +
-        "(batch ckpt, fold ckpt, publish, state write)")
-    import scala.jdk.CollectionConverters._
-    assert(bare.asScala.forall(_.contains("parquet at")),
-      s"unexpected bare RDD job (a probe job returned?): $bare")
   }
 
   test("a winner turning soft-deleted disappears from the view (even emptying its bucket)") {
@@ -178,7 +207,7 @@ class MaterializedViewSpec extends AnyFunSuite {
     def sortedRows(d: DataFrame): Seq[String] =
       d.collect().map(_.toString).sorted.toSeq
     for (seed <- Seq(7, 42);
-         scope <- Seq(MaterializedView.DefaultKeyScopeMinStateBytes, 0L)) {
+         scope <- Seq(BucketedView.DefaultKeyScopeMinStateBytes, 0L)) {
       val rnd = new scala.util.Random(seed)
       // globally-unique versions keep the order total (ties would make
       // rank-1 engine-arbitrary and the equality vacuous-by-luck)
@@ -206,36 +235,6 @@ class MaterializedViewSpec extends AnyFunSuite {
       assert(sortedRows(inc.state(s)) == sortedRows(full.state(s)),
         s"state diverged (seed=$seed scope=$scope)")
     }
-  }
-
-  test("writeTasksPerBucket: same results, per-bucket file count stays bounded") {
-    // the scale lever for giant buckets: salted clustering must change
-    // ONLY the physical layout (more, smaller files per bucket), never
-    // the published rows — and the file count per bucket per write must
-    // stay <= writeTasksPerBucket (no tasks×buckets explosion)
-    val data = rows((1L to 200L).map(i => (i, 1L, false, s"p$i")): _*)
-    val batch = rows((1L to 50L).map(i => (i, 2L, false, s"q$i")): _*)
-    val root = Files.createTempDirectory("graft_mv_salt").toString
-    val salted = new MaterializedView(root, Seq("id"),
-      Seq(col("version").desc), derive, nBuckets = 4, writeTasksPerBucket = 3)
-    salted.build(data)
-    salted.refresh(batch)
-    val (_, plain) = mk(nBuckets = 4)
-    plain.build(data)
-    plain.refresh(batch)
-    assert(viewMap(salted) == viewMap(plain))
-    // count files per LIVE (bucket, generation) path — each publish
-    // writes a bucket's rows once, so a live bucket holds <= 3 files
-    val manifest = salted.store.manifest(spark).get
-    val perBucket = manifest.toSeq.flatMap { case (b, g) =>
-      val d = new java.io.File(s"$root/view/gen=$g/__mv_bucket=$b")
-      if (d.isDirectory)
-        Some(d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
-      else None
-    }
-    assert(perBucket.nonEmpty)
-    assert(perBucket.forall(_._2 <= 3),
-      s"file explosion: ${perBucket.mkString(", ")}")
   }
 
   // ---- key-scoped derive path (keyScopeMinStateBytes = 0 forces it;
@@ -311,16 +310,16 @@ class MaterializedViewSpec extends AnyFunSuite {
     val s = spark; import s.implicits._
     val df = Seq((Some(1L), "a"), (None: Option[Long], "n")).toDF("id", "v")
     val keysDf = Seq(Some(1L), (None: Option[Long])).toDF("id")
-    for (j <- Seq(MaterializedView.semiOnKeys(df, keysDf, Seq("id")),
-                  MaterializedView.antiOnKeys(df, keysDf, Seq("id")))) {
+    for (j <- Seq(BucketedView.semiOnKeys(df, keysDf, Seq("id")),
+                  BucketedView.antiOnKeys(df, keysDf, Seq("id")))) {
       val plan = j.queryExecution.executedPlan.toString
       assert(!plan.contains("NestedLoop") && !plan.contains("Cartesian"),
         s"null-safe key join fell off the hash path:\n$plan")
       assert(plan.contains("HashJoin"), s"expected a hash join:\n$plan")
     }
     // and the null key matches null-safely (semi keeps it, anti drops it)
-    assert(MaterializedView.semiOnKeys(df, keysDf, Seq("id")).count() == 2)
-    assert(MaterializedView.antiOnKeys(df, keysDf, Seq("id")).count() == 0)
+    assert(BucketedView.semiOnKeys(df, keysDf, Seq("id")).count() == 2)
+    assert(BucketedView.antiOnKeys(df, keysDf, Seq("id")).count() == 0)
   }
 
   test("refresh leaves untouched bucket partitions byte-identical") {
@@ -359,14 +358,14 @@ class MaterializedViewSpec extends AnyFunSuite {
     // the standard MV order (all-desc, default nulls) over an orderable
     // schema qualifies; any disqualifier must flip the heuristic to the
     // fused-fold fallback (perf-only — pinned so a regression is loud)
-    assert(MaterializedView.aggregateFirstEligible(plain, Seq(col("version").desc)))
-    assert(MaterializedView.aggregateFirstEligible(plain,
+    assert(BucketedView.aggregateFirstEligible(plain, Seq(col("version").desc)))
+    assert(BucketedView.aggregateFirstEligible(plain,
       Seq(col("version").asc, col("payload").asc)))
-    assert(!MaterializedView.aggregateFirstEligible(plain,
+    assert(!BucketedView.aggregateFirstEligible(plain,
       Seq(col("version").desc, col("payload").asc)), "mixed directions")
-    assert(!MaterializedView.aggregateFirstEligible(plain,
+    assert(!BucketedView.aggregateFirstEligible(plain,
       Seq(col("version").desc_nulls_first)), "non-default null ordering")
-    assert(!MaterializedView.aggregateFirstEligible(withMap,
+    assert(!BucketedView.aggregateFirstEligible(withMap,
       Seq(col("version").desc)), "map payload is not orderable as a struct")
   }
 

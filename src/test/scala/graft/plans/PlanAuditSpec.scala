@@ -175,7 +175,7 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(windows(w1) == 0, s"dedup-window rewrite stopped firing on w1:\n$w1")
 
     val profiles = plan("v_customer_profiles")
-    assert(exchanges(profiles) <= 3, s"v_customer_profiles gained shuffles:\n$profiles")
+    assert(exchanges(profiles) <= 1, s"v_customer_profiles gained shuffles:\n$profiles")
     assert(windows(profiles) == 0,
       s"dedup-window rewrite stopped firing on v_customer_profiles:\n$profiles")
 

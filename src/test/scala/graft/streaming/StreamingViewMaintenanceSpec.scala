@@ -11,7 +11,7 @@ import graft.SharedSpark
 import graft.etl.MaterializedView
 
 /** Continuous view maintenance end to end: a CDC stream keeps a
-  * MaterializedView fresh through `Streams.maintainView`, and the
+  * MaterializedView fresh through `Streams.maintain`, and the
   * result must equal a batch FULL REBUILD over everything the stream
   * delivered — including the hard per-batch cases (late losers,
   * soft-deleted winners) and foreachBatch's at-least-once delivery
@@ -43,8 +43,8 @@ class StreamingViewMaintenanceSpec extends AnyFunSuite {
     mv.build(rows(base: _*))
 
     val in = MemoryStream[(Long, Long, Boolean, String)]
-    val q = Streams.maintainView(
-      in.toDF().toDF("id", "version", "deleted", "payload"), mv, s"$root/ckpt")
+    val q = Streams.maintain(
+      in.toDF().toDF("id", "version", "deleted", "payload"), s"$root/ckpt")(mv.refresh)
     val batch1 = Seq((1L, 9L, false, "a9"), (7L, 1L, false, "g1"))
     val batch2 = Seq((2L, 6L, true, "b6"), (1L, 3L, false, "a3")) // delete winner; late loser
     try {
@@ -93,8 +93,8 @@ class StreamingViewMaintenanceSpec extends AnyFunSuite {
     av.build(dims(d0: _*), facts(f0: _*))
 
     val in = MemoryStream[(Long, Long, Long, Long)]
-    val q = Streams.maintainFacts(
-      in.toDF().toDF("fid", "id", "fver", "amt"), av, s"$root/ckpt")
+    val q = Streams.maintain(
+      in.toDF().toDF("fid", "id", "fver", "amt"), s"$root/ckpt")(av.refreshFacts)
     val b1 = Seq((12L, 1L, 1L, 3L))          // new deal for customer 1
     val b2 = Seq((10L, 1L, 2L, 9L))          // later version of deal 10 wins
     def viewTotals = av.view(spark).collect()
