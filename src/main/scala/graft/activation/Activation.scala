@@ -8,8 +8,9 @@ import graft.operators.Incremental
 /** Incremental activation feed — re-expression of the reference Lambda
   * (`scripts/lambda_redshift_to_segment.py:51-589`): date-range
   * incremental read of the validated-sales feed, exclusion of already
-  * processed deals, per-row validation/coercion, Segment-track event
-  * shaping, and a checkpointed processed-key state table.
+  * processed deals, per-row validation/coercion and Segment-track event
+  * shaping. The processed-key state lives in
+  * [[graft.sinks.EventSink.ProcessedIds]].
   *
   * Scale design: the processed-ID set is a DataFrame anti-join (never
   * the reference's string-interpolated `NOT IN (…)`, `lambda:159-163`);
@@ -194,16 +195,4 @@ object Activation {
           lit("data_warehouse").as("source")).as("context")),
         jsonOpts).as("event_json"))
   }
-
-  /** S9: processed-ID state update — replaces the reference's S3 JSON
-    * read-modify-write (`lambda:97-135`) with a checkpointed key table:
-    * old state ∪ newly sent keys, distinct. Idempotent. */
-  def markProcessed(state: DataFrame, sentDealNumbers: DataFrame): DataFrame =
-    state.select(col("deal_number").cast("string").as("deal_number"))
-      .unionByName(sentDealNumbers
-        .select(col("deal_number").cast("string").as("deal_number")))
-      .distinct()
-
-  // ST5 delivery lives in graft.sinks.EventSink.deliver — one batching/
-  // rate-limit implementation, not two drifting copies.
 }

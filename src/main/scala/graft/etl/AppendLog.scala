@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The append-log state mechanism shared by every small cross-batch
@@ -19,27 +20,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The fold MUST be idempotent over re-appended rows (set-union,
   * bitwise-OR): that is what makes at-least-once replay of a state
   * append harmless, and what makes compact ≡ no-compact for readers.
+  *
+  * Paths resolve through the Hadoop `FileSystem` of the state path (the
+  * [[GenerationStore]] rule), so a qualified `file:`/`hdfs:` path reads
+  * the same store the Spark writer appended to.
   */
 object AppendLog {
+
+  private def fs(spark: SparkSession, statePath: String): FileSystem =
+    new Path(statePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Read the folded state; `empty` bootstraps a missing store. */
   def load(spark: SparkSession, statePath: String,
       fold: DataFrame => DataFrame, empty: => DataFrame): DataFrame = {
-    val dir = new java.io.File(statePath)
-    val old = new java.io.File(statePath + ".old")
-    if (!dir.exists() && old.exists()) old.renameTo(dir)
-    if (dir.exists()) fold(spark.read.parquet(statePath))
+    val f = fs(spark, statePath)
+    val dir = new Path(statePath)
+    val old = new Path(statePath + ".old")
+    if (!f.exists(dir) && f.exists(old)) f.rename(old, dir)
+    if (f.exists(dir)) fold(spark.read.parquet(statePath))
     else empty
   }
 
   /** Append one batch's rows — atomic per batch (parquet append). */
   def append(rows: DataFrame, statePath: String): Unit =
     rows.write.mode("append").parquet(statePath)
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRec)
-    f.delete()
-  }
 
   /** Rewrite the append log as one folded snapshot. Swap order is
     * crash-safe on a local/posix fs: snapshot → .tmp, live → .old,
@@ -49,18 +53,19 @@ object AppendLog {
       fold: DataFrame => DataFrame, empty: => DataFrame): Unit = {
     val snap = load(spark, statePath, fold, empty).cache()
     snap.count() // materialize before touching the live dir
-    val tmp = new java.io.File(statePath + ".tmp")
-    val old = new java.io.File(statePath + ".old")
-    val dir = new java.io.File(statePath)
-    deleteRec(tmp); deleteRec(old) // stale leftovers from a past crash
-    snap.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
+    val f = fs(spark, statePath)
+    val tmp = new Path(statePath + ".tmp")
+    val old = new Path(statePath + ".old")
+    val dir = new Path(statePath)
+    f.delete(tmp, true); f.delete(old, true) // stale leftovers from a past crash
+    snap.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     snap.unpersist()
-    if (dir.exists() && !dir.renameTo(old))
+    if (f.exists(dir) && !f.rename(dir, old))
       throw new java.io.IOException(s"compact: cannot stage $dir aside")
-    if (!tmp.renameTo(dir)) {
-      old.renameTo(dir) // roll back to the previous snapshot
+    if (!f.rename(tmp, dir)) {
+      f.rename(old, dir) // roll back to the previous snapshot
       throw new java.io.IOException(s"compact: cannot activate $tmp")
     }
-    deleteRec(old)
+    f.delete(old, true)
   }
 }

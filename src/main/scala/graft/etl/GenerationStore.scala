@@ -354,13 +354,13 @@ final class GenerationStore(
       resolve(spark, _, schemaJsonAt(spark, v)))
 
   /** Bucket-scoped SNAPSHOT read: just `buckets`' rows exactly as
-    * version `v` served them — the probe path of a served index
-    * ([[graft.ext.ServedAnnIndex]]): resolving every bucket of one
-    * search from ONE archived manifest makes the multi-read sequence
-    * (centroid bucket, then the probed posting buckets) immune to a
-    * publish landing in between, and the resolved path list contains
-    * ONLY the requested buckets' directories, so the scan statically
-    * prunes to them. None = version aged/never existed, or those
+    * version `v` served them — the probe path of a served index's one
+    * search ([[graft.ext.ServedAnnIndex.search]]): resolving every
+    * bucket of one search from ONE archived manifest makes the
+    * multi-read sequence (centroid bucket, then the probed posting
+    * buckets) immune to a publish landing in between, and the resolved
+    * path list contains ONLY the requested buckets' directories, so
+    * the scan statically prunes to them. None = version aged/never existed, or those
     * buckets are all empty at `v`. */
   private[graft] def readBucketsAt(
       spark: SparkSession, v: Long, buckets: Seq[Long]): Option[DataFrame] = {

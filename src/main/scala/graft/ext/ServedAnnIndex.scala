@@ -25,14 +25,15 @@ import graft.expressions.{Int8CosineSimilarity, QuantizeInt8}
   *     resolved centroids from version N can never score postings from
   *     version N±1 — the torn read that mis-probes (the bucket ranking
   *     and the bucket contents must come from the same index build);
-  *   - every search resolves ONE archived manifest
-  *     ([[GenerationStore.readBucketsAt]]) — concurrent `add`
-  *     publishes move the live manifest, never the search's pinned
-  *     version, and `keepVersions` plus the [[graft.etl.SnapshotCatalog]]
-  *     pin hook give in-flight searches the same grace the view stack's
-  *     readers get (a served index is a catalog member like any view:
-  *     registering it pins index version and corpus-view version in one
-  *     cross-view snapshot).
+  *   - [[search]], the one query path (a `(q_id, qv)` table, live or
+  *     pinned version, float or int8-shortlisted scoring), resolves
+  *     ONE archived manifest ([[GenerationStore.readBucketsAt]]) —
+  *     concurrent `add` publishes move the live manifest, never the
+  *     search's pinned version, and `keepVersions` plus the
+  *     [[graft.etl.SnapshotCatalog]] pin hook give in-flight searches
+  *     the same grace the view stack's readers get (a served index is a
+  *     catalog member like any view: registering it pins index version
+  *     and corpus-view version in one cross-view snapshot).
   *
   * Incremental contract (same doctrine as the screens'
   * `IncrementalIndexParitySpec`): centroids are FROZEN at [[build]];
@@ -48,9 +49,9 @@ import graft.expressions.{Int8CosineSimilarity, QuantizeInt8}
   *
   * 100 TB posture: build is one assignment pass over the corpus plus a
   * bucket-clustered write; add is O(batch + touched buckets); search
-  * reads k centroid rows + nprobe bucket directories. Nothing driver-
-  * side exceeds the centroid table (k rows of metadata — the blessed
-  * `probedCentroidIds` standing).
+  * reads k centroid rows + the union of its queries' probed bucket
+  * directories. Nothing driver-side exceeds the centroid table (k rows
+  * of metadata — the blessed `probedCentroidIds` standing).
   */
 final class ServedAnnIndex(
     root: String,
@@ -93,12 +94,11 @@ final class ServedAnnIndex(
 
   /** Attach the stored int8 copy ([[Similarity.quantize]]) and the
     * bucket partition column — called at EVERY posting write
-    * (build/add/delete rewrite), so the quantized probe path
-    * ([[searchQuantizedAt]]) always finds `qvec` beside the float
-    * vector. Quantization is a pure function of the embedding, so
-    * recomputing on a merge/rewrite is byte-identical to carrying the
-    * stored copy — the merge paths stay 3-column and can never drift
-    * from it. */
+    * (build/add/delete rewrite), so [[search]]'s `rerank` stage
+    * always finds `qvec` beside the float vector. Quantization is a
+    * pure function of the embedding, so recomputing on a merge/rewrite
+    * is byte-identical to carrying the stored copy — the merge paths
+    * stay 3-column and can never drift from it. */
   private def writeShape(rows: DataFrame): DataFrame =
     Similarity.quantize(rows).withColumn(bucketCol, col("centroid_id"))
 
@@ -249,148 +249,101 @@ final class ServedAnnIndex(
     add(batch)
   }
 
-  /** IVF top-k against the LIVE index version. None = never built. */
-  def search(spark: SparkSession, query: Seq[Float], k: Int,
-      nprobe: Int = 2): Option[DataFrame] =
-    store.versions(spark).lastOption.flatMap(searchAt(spark, _, query, k, nprobe))
-
-  /** Quantized IVF top-k against the LIVE version — see
-    * [[searchQuantizedAt]]. None = never built. */
-  def searchQuantized(spark: SparkSession, query: Seq[Float], k: Int,
-      nprobe: Int = 2, rerank: Int = 100): Option[DataFrame] =
-    store.versions(spark).lastOption
-      .flatMap(searchQuantizedAt(spark, _, query, k, nprobe, rerank))
-
-  /** The full 100 TB probe served from disk — [[Similarity
-    * .ivfTopKQuantized]]'s three stages with the index's OWN layout
-    * supplying both sides:
-    *
-    *   1. probe `nprobe` bucket DIRECTORIES (static pruning, as every
-    *      search here);
-    *   2. score candidates on the STORED int8 copy — the candidate
-    *      scan's ReadSchema is (vec_id, qvec): parquet column pruning
-    *      leaves the float embedding column ON DISK, so the scoring
-    *      pass reads ~1 byte/dim instead of 4, integer math throughout
-    *      (pinned by spec: no `embedding` in the candidate scan);
-    *   3. rerank the top `rerank` survivors with the exact float
-    *      cosine — a second, embedding-column read of the same probed
-    *      buckets, joined to the k-bounded candidate list.
-    *
-    * Both reads resolve from the SAME archived manifest version — the
-    * quantized copy can never disagree with the floats beside it
-    * (written together, recomputed-on-merge deterministically). An
-    * index written before qvec existed serves null qvecs for carried
-    * buckets until rebuilt — quantized candidates from such buckets
-    * sort last (null q_cos) and are effectively invisible; rebuild to
-    * restore them. */
-  def searchQuantizedAt(spark: SparkSession, v: Long, query: Seq[Float],
-      k: Int, nprobe: Int = 2, rerank: Int = 100): Option[DataFrame] =
-    for {
-      centroids <- centroidsAt(spark, v)
-      probed = Similarity.probedCentroidIds(centroids, query, nprobe)
-      postings <- store.readBucketsAt(spark, v, probed)
-    } yield {
-      require(postings.columns.contains("qvec"),
-        s"index at $root has no stored int8 copy (pre-qvec build) — rebuild it")
-      val an = storedNAssign(spark)
-      Similarity.ivfTopKQuantized(
-        assignedQ = oncePerQuery(
-          postings.select("vec_id", "centroid_id", "qvec"), Seq("vec_id"), an),
-        // the full-precision side is a TABLE keyed by vec_id (the
-        // in-memory operator's contract); on a multi-assigned index a
-        // vector appears once per probed bucket and must not rerank
-        // once per copy — dedup gated like every candidate dedup
-        vectors = oncePerQuery(
-          postings.select("vec_id", "embedding"), Seq("vec_id"), an),
-        centroids = centroids, query = query, k = k, nprobe = nprobe,
-        rerank = rerank, probed = Some(probed))
-    }
-
-  /** Batched IVF top-k over a query TABLE against the live index —
-    * see [[searchBatchAt]]. None = never built. */
-  def searchBatch(queries: DataFrame, k: Int, nprobe: Int = 2,
-      qIdCol: String = "q_id", qVecCol: String = "qv"): Option[DataFrame] =
-    store.versions(queries.sparkSession).lastOption
-      .flatMap(searchBatchAt(_, queries, k, nprobe, qIdCol, qVecCol))
-
-  /** Batched IVF top-k: EVERY query in `queries` answered from index
-    * version `v` in ONE plan — the retrieval tier's batch shape (an
-    * activation run carries a 1000-row query batch, not one vector),
-    * where [[searchAt]]'s one-literal-vector form would cost Q Spark
-    * jobs for Q queries.
-    *
-    * Per query the math is EXACTLY [[searchAt]]'s — same centroid
-    * ranking, same probe tie-break, same (cosine DESC, vec_id ASC)
-    * top-k — pinned by a per-query equality spec. The orchestration
-    * differs:
+  /** IVF top-k for every query of a `(q_id, qv)` table, answered from
+    * ONE index version in ONE plan; a one-vector search is a one-row
+    * table. `version = None` resolves the latest committed version once
+    * and then runs exactly as a pinned search. Returns (q_id, rnk,
+    * vec_id, cosine), rank-ordered per query. None = never built or
+    * `version` aged out; an EMPTY query table against a live version is
+    * an empty answer, not None.
     *
     *   - per-query probe ranking is a (queries × centroids) broadcast
-    *     product (Q·k rows — centroids are the broadcast side) ranked
-    *     by a window over q_id, not one driver-side sort per query;
-    *   - the probed buckets of ALL queries union into ONE
-    *     [[GenerationStore.readBucketsAt]] scan (still ≤ nCentroids
-    *     bucket ids of driver metadata — the only collect, same
-    *     standing as `probedCentroidIds`), so unprobed buckets are
-    *     still pruned on DISK and probed ones are read once even when
-    *     many queries share them;
-    *   - each posting row scores only against the queries that probed
-    *     its bucket (broadcast join on (q_id, centroid_id)), and the
-    *     per-query top-k collapses through the k-bounded
-    *     [[graft.operators.TopKPerGroup]] packed heap — k·(map
-    *     partitions) rows per query cross the one exchange, never a
-    *     rank window over the candidate set.
+    *     product ranked by a window over q_id ([[probeRanks]]);
+    *   - centroids and postings resolve from ONE archived manifest
+    *     ([[GenerationStore.readBucketsAt]]), and the probed buckets of
+    *     all queries union into one scan (≤ nCentroids ids of driver
+    *     metadata, the only collect) whose file list holds only those
+    *     bucket directories plus the centroid bucket;
+    *   - each posting scores only against the queries that probed its
+    *     bucket, and each query's top-k collapses through the k-bounded
+    *     [[graft.operators.TopKPerGroup]] heap in the in-memory
+    *     [[Similarity.ivfTopK]] order (cosine DESC, vec_id ASC);
+    *   - `rerank = Some(n)` adds [[Similarity.ivfTopKQuantized]]'s int8
+    *     stage: candidates score on the STORED int8 copy (that scan's
+    *     ReadSchema leaves the float embedding on disk), each query keeps
+    *     its best `n`, and only those rerank with the exact float cosine
+    *     over a second read of the same probed buckets.
     *
-    * Job count is independent of Q (one probe-union collect + one
-    * result plan), pinned by spec. Returns (q_id, rnk, vec_id, cosine)
-    * rank-ordered per query; None = version aged out/never existed —
-    * an EMPTY query table against a live version returns an empty
-    * frame, not None (zero queries have an answer: zero rows).
-    * `queries` must be small enough to broadcast (the serving batch,
-    * thousands of rows) — a corpus-scale "query table" is [[Similarity]]
-    * join territory, not a serving batch. */
-  def searchBatchAt(v: Long, queries: DataFrame, k: Int, nprobe: Int = 2,
-      qIdCol: String = "q_id", qVecCol: String = "qv"): Option[DataFrame] = {
+    * The SQL execution count does not depend on Q. `queries` must be
+    * small enough to broadcast (a serving batch); a corpus-scale query
+    * table is [[Similarity]] join territory. */
+  def search(queries: DataFrame, k: Int, nprobe: Int = 2,
+      version: Option[Long] = None, rerank: Option[Int] = None): Option[DataFrame] = {
+    rerank.foreach(n => require(n >= k, s"rerank ($n) must be >= k ($k)"))
     val spark = queries.sparkSession
-    val qs = normalizeQueries(queries, qIdCol, qVecCol)
-    val an = storedNAssign(spark)
-    centroidsAt(spark, v).flatMap { centroids =>
-      val probed = probeRanks(qs, centroids, nprobe)
-      // the union of all queries' probes — bounded by nCentroids ids of
-      // metadata, the one driver-side step; it is what lets the scan
-      // below statically prune to probed bucket DIRECTORIES
-      val unionIds = probed.select("centroid_id").distinct()
+    val qs = queries.select(col("q_id").cast("long").as("q_id"), col("qv"))
+    for {
+      v <- version.orElse(store.versions(spark).lastOption)
+      centroids <- centroidsAt(spark, v)
+      probed = probeRanks(qs, centroids, nprobe)
+      unionIds = probed.select("centroid_id").distinct()
         .collect().map(_.getLong(0)).toSeq
-      store.readBucketsAt(spark, v, unionIds) match {
-        // None from the bucket read is ambiguous: an EMPTY query table
+      result <- store.readBucketsAt(spark, v, unionIds) match {
+        // None from the bucket read is ambiguous: an empty query table
         // (or every probed bucket empty) on a live version is an empty
-        // ANSWER; but the version may also have aged out BETWEEN the
-        // centroid resolve and this read (concurrent publishes + GC) —
-        // re-check liveness rather than serving "no neighbors" for a
-        // lost version
-        case None if store.versions(spark).contains(v) => Some(emptyResult(qs))
-        case None => None
-        case Some(postings) =>
-          Some(perQueryTopK(
-            oncePerQuery(
-              postings.select("vec_id", "embedding", "centroid_id")
-                .join(broadcast(probed), Seq("centroid_id")),
-              Seq("q_id", "vec_id"), an)
-              .join(broadcast(qs), Seq("q_id"))
-              .select(col("q_id"), col("vec_id"),
-                Similarity.cosine(col("embedding"), col("qv")).as("cosine")),
-            k))
+        // ANSWER, but the version may also have aged out between the
+        // centroid resolve and this read — re-check liveness rather
+        // than serving "no neighbors" for a lost version
+        case None => if (store.versions(spark).contains(v)) Some(emptyResult(qs)) else None
+        case Some(postings) => Some(perQueryTopK(
+          candidates(postings, probed, qs, rerank, storedNAssign(spark))
+            .join(broadcast(qs), Seq("q_id"))
+            .select(col("q_id"), col("vec_id"),
+              Similarity.cosine(col("embedding"), col("qv")).as("cosine")),
+          k))
       }
+    } yield result
+  }
+
+  /** (q_id, vec_id, embedding) rows to score: every posting of each
+    * query's probed buckets, or with `rerank` only each query's int8
+    * shortlist. An index written before `qvec` existed is refused; one
+    * that still carries such buckets serves their rows with a null
+    * `qvec`, which ranks last in the shortlist (rebuild to restore
+    * them). */
+  private def candidates(postings: DataFrame, probed: DataFrame, qs: DataFrame,
+      rerank: Option[Int], assignN: Int): DataFrame = {
+    def probedRows(payload: String) = oncePerQuery(
+      postings.select("vec_id", payload, "centroid_id")
+        .join(broadcast(probed), Seq("centroid_id")),
+      Seq("q_id", "vec_id"), assignN)
+    rerank match {
+      case None => probedRows("embedding")
+      case Some(n) =>
+        require(postings.columns.contains("qvec"),
+          s"index at $root has no stored int8 copy (pre-qvec build) — rebuild it")
+        // one int8 encode per query, riding the broadcast query table
+        val qs8 = qs.select(col("q_id"), QuantizeInt8.of(col("qv")).as("__q8"))
+        val shortlist = probedRows("qvec")
+          .join(broadcast(qs8), Seq("q_id"))
+          .select(col("q_id"), col("vec_id"),
+            Int8CosineSimilarity.of(col("qvec"), col("__q8")).as("__q_cos"))
+          .groupBy("q_id")
+          .agg(graft.operators.TopKPerGroup.topK(n)(
+            col("__q_cos"), col("vec_id")).as("__short"))
+          .select(col("q_id"), explode(col("__short").getField("_2")).as("vec_id"))
+        // the probed-bucket UNION can hold a multi-assigned vector once
+        // per bucket (including buckets only OTHER queries probed); a
+        // shortlisted id must rerank once, not once per copy
+        oncePerQuery(postings.select("vec_id", "embedding"), Seq("vec_id"), assignN)
+          .join(broadcast(shortlist), Seq("vec_id"))
     }
   }
 
-  private def normalizeQueries(
-      queries: DataFrame, qIdCol: String, qVecCol: String): DataFrame =
-    queries.select(col(qIdCol).cast("long").as("q_id"), col(qVecCol).as("qv"))
-
-  /** The batch forms' shared per-query probe ranking — one spelling of
-    * the (c_sim DESC, centroid_id ASC) tie-break, which must match
-    * `Similarity.probedCentroids` (the single-source-of-truth warning
-    * there) or batch and one-vector searches probe different buckets. */
+  /** Per-query probe ranking with the (c_sim DESC, centroid_id ASC)
+    * tie-break, which must match `Similarity.probedCentroids` (the
+    * single-source-of-truth warning there) or served and in-memory
+    * searches probe different buckets. */
   private def probeRanks(
       qs: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame =
     qs.crossJoin(broadcast(centroids))
@@ -429,93 +382,6 @@ final class ServedAnnIndex(
   private def oncePerQuery(
       candidates: DataFrame, keys: Seq[String], assignN: Int): DataFrame =
     if (assignN > 1) candidates.dropDuplicates(keys) else candidates
-
-  /** Batched QUANTIZED top-k against the live index — see
-    * [[searchBatchQuantizedAt]]. None = never built. */
-  def searchBatchQuantized(queries: DataFrame, k: Int, nprobe: Int = 2,
-      rerank: Int = 100, qIdCol: String = "q_id",
-      qVecCol: String = "qv"): Option[DataFrame] =
-    store.versions(queries.sparkSession).lastOption
-      .flatMap(searchBatchQuantizedAt(_, queries, k, nprobe, rerank, qIdCol, qVecCol))
-
-  /** The serving matrix completed: a query TABLE answered through the
-    * QUANTIZED probe — [[searchBatchAt]]'s orchestration (per-query
-    * probe window, ONE probed-bucket-union scan, k-bounded heaps, job
-    * count independent of Q) with [[searchQuantizedAt]]'s byte
-    * discipline (the candidate scan reads (vec_id, qvec) only —
-    * ~1/4 the bytes, integer math; each query's int8 copy is computed
-    * once in the broadcast query table). Per query the result equals
-    * the one-vector [[searchQuantizedAt]] exactly (spec-pinned): the
-    * same rerank-`rerank` int8 shortlist — TopKPerGroup's
-    * (-∞-for-null, desc, id-asc) order is the single-query
-    * `ORDER BY q_cos DESC, id` — then the same exact-cosine top-k over
-    * a second, float-column read of the shortlisted rows. Returns
-    * (q_id, rnk, vec_id, cosine). */
-  def searchBatchQuantizedAt(v: Long, queries: DataFrame, k: Int,
-      nprobe: Int = 2, rerank: Int = 100, qIdCol: String = "q_id",
-      qVecCol: String = "qv"): Option[DataFrame] = {
-    require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    val spark = queries.sparkSession
-    val qs = normalizeQueries(queries, qIdCol, qVecCol)
-    val an = storedNAssign(spark)
-    centroidsAt(spark, v).flatMap { centroids =>
-      val probed = probeRanks(qs, centroids, nprobe)
-      val unionIds = probed.select("centroid_id").distinct()
-        .collect().map(_.getLong(0)).toSeq
-      store.readBucketsAt(spark, v, unionIds) match {
-        // empty batch / empty buckets vs aged-out version: see
-        // searchBatchAt's None handling
-        case None if store.versions(spark).contains(v) => Some(emptyResult(qs))
-        case None => None
-        case Some(postings) =>
-          require(postings.columns.contains("qvec"),
-            s"index at $root has no stored int8 copy (pre-qvec build) — rebuild it")
-          // quantized queries ride the broadcast table — one int8
-          // encode per query, not per candidate
-          val qs8 = qs.select(col("q_id"), QuantizeInt8.of(col("qv")).as("__q8"))
-          val screened = oncePerQuery(
-            postings.select("vec_id", "centroid_id", "qvec")
-              .join(broadcast(probed), Seq("centroid_id")),
-            Seq("q_id", "vec_id"), an)
-            .join(broadcast(qs8), Seq("q_id"))
-            .select(col("q_id"), col("vec_id"),
-              Int8CosineSimilarity.of(col("qvec"), col("__q8")).as("__q_cos"))
-            .groupBy("q_id")
-            .agg(graft.operators.TopKPerGroup.topK(rerank)(
-              col("__q_cos"), col("vec_id")).as("__short"))
-            .select(col("q_id"), explode(col("__short").getField("_2")).as("vec_id"))
-          // float fetch deduped by vec_id only on a multi-assigned
-          // index: the probed-bucket UNION can hold such a vector once
-          // per bucket — including buckets only OTHER queries probed —
-          // and a shortlisted id must rerank once, not once per copy
-          Some(perQueryTopK(
-            oncePerQuery(postings.select("vec_id", "embedding"), Seq("vec_id"), an)
-              .join(broadcast(screened), Seq("vec_id"))
-              .join(broadcast(qs), Seq("q_id"))
-              .select(col("q_id"), col("vec_id"),
-                Similarity.cosine(col("embedding"), col("qv")).as("cosine")),
-            k))
-      }
-    }
-  }
-
-  /** IVF top-k against index version `v` — centroid ranking, bucket
-    * pruning and candidate scoring all resolved from that ONE archived
-    * manifest, so a publish landing mid-search changes nothing this
-    * search reads. The candidate scan's file list holds only the
-    * probed buckets (+ the centroid bucket) — pinned by spec. */
-  def searchAt(spark: SparkSession, v: Long, query: Seq[Float], k: Int,
-      nprobe: Int = 2): Option[DataFrame] =
-    for {
-      centroids <- centroidsAt(spark, v)
-      probed = Similarity.probedCentroidIds(centroids, query, nprobe)
-      postings <- store.readBucketsAt(spark, v, probed)
-    } yield Similarity.ivfTopK(
-      // probed-bucket rows only (readBucketsAt pruned), so dedup by
-      // vec_id keeps a copy the probe join will admit
-      oncePerQuery(postings.select("vec_id", "embedding", "centroid_id"),
-        Seq("vec_id"), storedNAssign(spark)),
-      centroids, query, k, nprobe)
 }
 
 object ServedAnnIndex {

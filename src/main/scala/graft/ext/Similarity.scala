@@ -315,9 +315,10 @@ object Similarity {
   /** The nprobe centroid ids nearest `query` — k rows of metadata, so
     * the collect is a driver-side catalog lookup, not a data scan. Use
     * to `isin`-filter a centroid_id-partitioned inverted-list store so
-    * partition pruning skips the unprobed buckets entirely; then pass
-    * the SAME ids to [[ivfTopKQuantized]]'s `probed` overload so the
-    * probe join cannot disagree with the prune. */
+    * partition pruning skips the unprobed buckets entirely; the probe
+    * join of [[ivfTopK]]/[[ivfTopKQuantized]] then picks the SAME ids
+    * in-plan (one probe definition, [[probedCentroids]]), so it cannot
+    * disagree with the prune. */
   def probedCentroidIds(
       centroids: DataFrame,
       query: Seq[Float],
@@ -366,14 +367,13 @@ object Similarity {
     *
     * Stored inverted lists: write `assignedQ` hive-partitioned by
     * `centroid_id`. The probed ids are k-row METADATA — resolve them
-    * ONCE via [[probedCentroidIds]], `isin`-filter the store, and pass
-    * the same ids through `probed` so the probe join cannot pick buckets
-    * the prune filtered away; the parquet reader then statically prunes
-    * to the nprobe partitions and the probe never touches the other
-    * (k−nprobe)/k of the corpus on disk (pinned in SimilaritySpec —
-    * dynamic partition pruning is not relied on: its heuristics don't
-    * fire for a limit-over-tiny-table probe side). `probed = None`
-    * resolves the buckets in-plan from `centroids`. */
+    * ONCE via [[probedCentroidIds]] and `isin`-filter the store; the
+    * parquet reader then statically prunes to the nprobe partitions
+    * and the probe never touches the other (k−nprobe)/k of the corpus
+    * on disk, while the in-plan probe join selects the same ids
+    * (pinned in SimilaritySpec — dynamic partition pruning is not
+    * relied on: its heuristics don't fire for a limit-over-tiny-table
+    * probe side). */
   def ivfTopKQuantized(
       assignedQ: DataFrame, // assignToCentroids output + qvec (see quantize)
       vectors: DataFrame,   // full-precision (idCol, vecCol) for the rerank
@@ -384,20 +384,12 @@ object Similarity {
       rerank: Int = 100,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
-      qCol: String = "qvec",
-      probed: Option[Seq[Long]] = None): DataFrame = {
+      qCol: String = "qvec"): DataFrame = {
     require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
     val q = array(query.map(v => lit(v)): _*)
     val q8 = QuantizeInt8.of(q)
-    val probedDf = probed match {
-      case Some(ids) =>
-        val spark = centroids.sparkSession
-        import spark.implicits._
-        ids.toDF("centroid_id")
-      case None => probedCentroids(centroids, query, nprobe)
-    }
     val cands = assignedQ
-      .join(broadcast(probedDf), Seq("centroid_id"))
+      .join(broadcast(probedCentroids(centroids, query, nprobe)), Seq("centroid_id"))
       .select(col(idCol), Int8CosineSimilarity.of(col(qCol), q8).as("q_cos"))
       .orderBy(col("q_cos").desc, col(idCol).asc)
       .limit(rerank)

@@ -424,11 +424,11 @@ object MiscQueries {
       ORDER BY round(cos, 6) DESC, vec_id"""),
   )
 
-  /** IVF top-k answered by the SERVED index
-    * ([[graft.ext.ServedAnnIndex]]) — the retrieval tier built in r14:
-    * postings persisted in a generation store partitioned by centroid
-    * bucket (a search's scan statically prunes to its probed bucket
-    * DIRECTORIES on disk), centroids riding the same store in a
+  /** IVF top-k answered by a one-row search of the SERVED index
+    * ([[graft.ext.ServedAnnIndex.search]]) — the retrieval tier built
+    * in r14: postings persisted in a generation store partitioned by
+    * centroid bucket (a search's scan statically prunes to its probed
+    * bucket DIRECTORIES on disk), centroids riding the same store in a
     * reserved bucket so one manifest versions both halves, searches
     * resolved from one pinned version. The differential proves the
     * serving layer is TRANSPARENT: identical math to `ann_ivf_topk`,
@@ -453,8 +453,9 @@ object MiscQueries {
       val idx = new graft.ext.ServedAnnIndex(root, nCentroids = 16)
       idx.build(emb)
       val query = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-      idx.search(s, query, k = 20, nprobe = 4).get
+        .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
+      idx.search(query, k = 20, nprobe = 4).get
+        .select("vec_id", "cosine")
         .withColumn("cosine", round(col("cosine"), 6))
         .orderBy(col("cosine").desc, col("vec_id"))
     },
@@ -481,7 +482,7 @@ object MiscQueries {
   )
 
   /** BATCHED served-index search ([[graft.ext.ServedAnnIndex
-    * .searchBatch]]): a 10-query TABLE answered in ONE plan — per-query
+    * .search]]): a 10-query TABLE answered in ONE plan — per-query
     * centroid ranking as a broadcast product + window, all queries'
     * probed buckets unioned into one disk-pruned scan, per-query top-k
     * through the k-bounded TopKPerGroup heap. The serving analog of the
@@ -490,8 +491,8 @@ object MiscQueries {
     * tier prices Q queries as one job, not Q. The oracle replays the
     * whole per-query pipeline (probe ranking with the (sim DESC,
     * centroid_id) tie-break, probed-bucket scoring, (cos DESC, vec_id)
-    * rank) in DuckDB SQL; per-query equality to the one-vector
-    * `searchAt` and Q-independent job count are pinned in
+    * rank) in DuckDB SQL; per-query equality to a one-row `search`
+    * and Q-independent job count are pinned in
     * `ServedAnnIndexSpec`. Like `ann_served_topk`, the entry times the
     * full build+publish+search lifecycle. */
   private val annServedBatch = Q(
@@ -504,7 +505,7 @@ object MiscQueries {
       idx.build(emb)
       val queries = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-      idx.searchBatch(queries, k = 20, nprobe = 4).get
+      idx.search(queries, k = 20, nprobe = 4).get
         .withColumn("cosine", round(col("cosine"), 6))
         .orderBy("q_id", "rnk")
     },
@@ -542,8 +543,9 @@ object MiscQueries {
     * recomputes that rebuild in DuckDB: centroids id-initialized from
     * the ORIGINAL corpus (update never retrains — the freeze is the
     * contract), assignment and IVF probe over the post-update
-    * embeddings. No-duplication, pinned-version grace and delete-replay
-    * idempotence are spec-pinned in `ServedAnnIndexSpec`. */
+    * embeddings, answered by a one-row `search`. No-duplication,
+    * pinned-version grace and delete-replay idempotence are
+    * spec-pinned in `ServedAnnIndexSpec`. */
   private val annServedUpdate = Q(
     "ann_served_update",
     (s, dir) => {
@@ -555,8 +557,9 @@ object MiscQueries {
       idx.update(emb.filter(col("vec_id") % 10 === 3)
         .withColumn("embedding", reverse(col("embedding"))))
       val query = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-      idx.search(s, query, k = 20, nprobe = 4).get
+        .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
+      idx.search(query, k = 20, nprobe = 4).get
+        .select("vec_id", "cosine")
         .withColumn("cosine", round(col("cosine"), 6))
         .orderBy(col("cosine").desc, col("vec_id"))
     },
@@ -608,10 +611,10 @@ object MiscQueries {
     * full SQL oracle). Centroids freeze at the INITIAL build (id-init
     * over the init slice — the oracle replays exactly that subset
     * pick); two ingest batches then merge into only their touched
-    * buckets; the final search must equal a frozen-centroid IVF over
-    * the ENTIRE delivered corpus, which is what the oracle computes —
-    * proving per-bucket incremental merges converge to the one-shot
-    * assignment with no row lost, duplicated or mis-bucketed. */
+    * buckets; the final one-row `search` must equal a frozen-centroid
+    * IVF over the ENTIRE delivered corpus, which is what the oracle
+    * computes — proving per-bucket incremental merges converge to the
+    * one-shot assignment with no row lost, duplicated or mis-bucketed. */
   private val annServedIngest = Q(
     "ann_served_ingest",
     (s, dir) => {
@@ -623,8 +626,9 @@ object MiscQueries {
       idx.add(emb.filter(col("vec_id") % 8 === 0))
       idx.add(emb.filter(col("vec_id") % 8 === 4))
       val query = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-      idx.search(s, query, k = 20, nprobe = 4).get
+        .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
+      idx.search(query, k = 20, nprobe = 4).get
+        .select("vec_id", "cosine")
         .withColumn("cosine", round(col("cosine"), 6))
         .orderBy(col("cosine").desc, col("vec_id"))
     },
@@ -666,8 +670,9 @@ object MiscQueries {
       ORDER BY round(cos, 6) DESC, vec_id"""),
   )
 
-  /** QUANTIZED search on the served index ([[graft.ext.ServedAnnIndex
-    * .searchQuantized]]) — the full 100 TB probe priced end to end:
+  /** QUANTIZED search on the served index (a one-row
+    * [[graft.ext.ServedAnnIndex.search]] with `rerank = Some(100)`) —
+    * the full 100 TB probe priced end to end:
     * build stores an int8 copy beside every float vector; the search
     * prunes to probed bucket directories, scores candidates on a scan
     * whose ReadSchema is (vec_id, qvec) — the float column stays on
@@ -688,8 +693,9 @@ object MiscQueries {
       val idx = new graft.ext.ServedAnnIndex(root, nCentroids = 16)
       idx.build(emb)
       val query = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-      idx.searchQuantized(s, query, k = 20, nprobe = 4, rerank = 100).get
+        .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
+      idx.search(query, k = 20, nprobe = 4, rerank = Some(100)).get
+        .select("vec_id", "cosine")
         .withColumn("cosine", round(col("cosine"), 6))
         .orderBy(col("cosine").desc, col("vec_id"))
     },
@@ -750,14 +756,14 @@ object MiscQueries {
 
   /** The serving matrix's fourth cell: a query TABLE through the
     * QUANTIZED served probe ([[graft.ext.ServedAnnIndex
-    * .searchBatchQuantized]]) — `ann_served_batch`'s orchestration
+    * .search]] with `rerank`) — `ann_served_batch`'s orchestration
     * (per-query probe, one probed-union scan, Q-independent jobs) with
     * `ann_served_qtopk`'s byte discipline (candidate scan reads
     * (vec_id, qvec) only; one int8 encode per query riding the
     * broadcast). The oracle replays the per-query pipeline: probe
     * ranking, bit-exact int8 quantization of candidates AND queries,
     * integer-dot shortlists of `rerank` per query, exact-cosine
-    * re-rank. Per-query equality to the one-vector quantized search is
+    * re-rank. Per-query equality to a one-row quantized search is
     * spec-pinned in `ServedAnnIndexSpec`. */
   private val annServedQBatch = Q(
     "ann_served_qbatch",
@@ -769,7 +775,7 @@ object MiscQueries {
       idx.build(emb)
       val queries = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-      idx.searchBatchQuantized(queries, k = 20, nprobe = 4, rerank = 100).get
+      idx.search(queries, k = 20, nprobe = 4, rerank = Some(100)).get
         .withColumn("cosine", round(col("cosine"), 6))
         .orderBy("q_id", "rnk")
     },
@@ -836,12 +842,12 @@ object MiscQueries {
   )
 
   /** Recall harness ON THE SERVED PATH — `ann_eval_recall`'s sibling
-    * with the IVF side answered by [[graft.ext.ServedAnnIndex
-    * .searchBatchAt]] instead of in-memory operators: recall@10/20 of
-    * the served, disk-pruned, batch-searched index against brute-force
-    * ground truth, per query, in one plan. This is the post-build
-    * quality gate a retrieval tier actually runs (grade the INDEX YOU
-    * SERVE, not an in-memory replica of it). Differences from
+    * with the IVF side answered by a version-pinned [[graft.ext
+    * .ServedAnnIndex.search]] instead of in-memory operators:
+    * recall@10/20 of the served, disk-pruned, batch-searched index
+    * against brute-force ground truth, per query, in one plan. This is
+    * the post-build quality gate a retrieval tier actually runs (grade
+    * the INDEX YOU SERVE, not an in-memory replica of it). Differences from
     * `ann_eval_recall`, both deliberate: self-matches stay IN (search
     * semantics — a served search does return the query's own document;
     * the eval harness excludes them to grade neighbor quality), and
@@ -860,7 +866,7 @@ object MiscQueries {
       val v = idx.build(emb)
       val queries = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-      val served = idx.searchBatchAt(v, queries, k = 20, nprobe = 4).get
+      val served = idx.search(queries, k = 20, nprobe = 4, version = Some(v)).get
       val brute = emb.crossJoin(broadcast(queries))
         .select(col("q_id"), col("vec_id"),
           Similarity.cosine(col("embedding"), col("qv")).as("cosine"))

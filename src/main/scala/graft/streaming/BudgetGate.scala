@@ -81,7 +81,7 @@ object BudgetGate {
     * zero rows leaves nothing to infer from). */
   def readState(
       spark: SparkSession, statePath: String, sourceCol: String): DataFrame =
-    if (hasParquet(new java.io.File(statePath)))
+    if (hasParquet(spark, statePath))
       spark.read.parquet(statePath)
     else {
       import org.apache.spark.sql.types._
@@ -91,7 +91,15 @@ object BudgetGate {
           StructField("__cum_tokens", LongType))))
     }
 
-  private def hasParquet(f: java.io.File): Boolean =
-    if (f.isDirectory) Option(f.listFiles()).exists(_.exists(hasParquet))
-    else f.getName.endsWith(".parquet")
+  /** Resolved through the path's Hadoop `FileSystem`, so a qualified
+    * `file:`/`hdfs:` state path is found like a bare one. */
+  private def hasParquet(spark: SparkSession, statePath: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(statePath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(p) && {
+      val files = fs.listFiles(p, true)
+      Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+        .exists(_.getPath.getName.endsWith(".parquet"))
+    }
+  }
 }

@@ -244,10 +244,10 @@ object Streams {
     * postings, and the byte-identical merge publishes a fresh
     * generation serving the same rows (convergence pinned in
     * `StreamingAnnSpec`, composed with checkpoint restart). Searches
-    * running DURING ingest stay version-pinned ([[graft.ext
-    * .ServedAnnIndex.searchAt]]) — a micro-batch landing mid-search
-    * changes nothing the search reads. Per-batch cost is the batch's
-    * touched buckets, independent of index size. */
+    * running DURING ingest stay version-pinned (every [[graft.ext
+    * .ServedAnnIndex.search]] resolves one version) — a micro-batch
+    * landing mid-search changes nothing the search reads. Per-batch
+    * cost is the batch's touched buckets, independent of index size. */
   def indexIngest(
       vectors: DataFrame, // streaming (vec_id, embedding)
       index: graft.ext.ServedAnnIndex,

@@ -26,6 +26,19 @@ class ServedAnnIndexSpec extends AnyFunSuite {
   private def queryVec(of: Long = 0L): Seq[Float] =
     emb.filter(col("vec_id") === of).select("embedding").head().getSeq[Float](0)
 
+  /** A one-row `(q_id, qv)` query table built from the collected
+    * vector, so a search's `inputFiles` lists only index files. */
+  private def oneRow(q: Seq[Float]): DataFrame = {
+    val s0 = spark
+    import s0.implicits._
+    Seq((0L, q)).toDF("q_id", "qv")
+  }
+
+  /** A one-vector search: a one-row table, projected to (vec_id, cosine). */
+  private def searchOne(idx: ServedAnnIndex, q: Seq[Float], k: Int, nprobe: Int,
+      version: Option[Long] = None, rerank: Option[Int] = None): Option[DataFrame] =
+    idx.search(oneRow(q), k, nprobe, version, rerank).map(_.select("vec_id", "cosine"))
+
   private def rows(df: DataFrame): Seq[(Long, Double)] =
     df.withColumn("cosine", round(col("cosine"), 9))
       .orderBy(col("cosine").desc, col("vec_id"))
@@ -36,7 +49,7 @@ class ServedAnnIndexSpec extends AnyFunSuite {
     val idx = new ServedAnnIndex(root, nCentroids = 16)
     idx.build(emb)
     val q = queryVec()
-    val served = idx.search(spark, q, k = 20, nprobe = 4).get
+    val served = searchOne(idx, q, k = 20, nprobe = 4).get
 
     val centroids = Similarity.trainCentroidsById(emb, 16)
     val assigned = Similarity.assignToCentroids(emb, centroids)
@@ -64,7 +77,7 @@ class ServedAnnIndexSpec extends AnyFunSuite {
     val idx = new ServedAnnIndex(root, nCentroids = 16)
     val v0 = idx.build(init)
     val q = queryVec(1L)
-    val before = rows(idx.search(spark, q, 20, 4).get)
+    val before = rows(searchOne(idx, q, 20, 4).get)
 
     idx.add(b1)
     idx.add(b2)
@@ -74,20 +87,20 @@ class ServedAnnIndexSpec extends AnyFunSuite {
     val centroids = Similarity.trainCentroidsById(init, 16)
     val expected = Similarity.ivfTopK(
       Similarity.assignToCentroids(emb, centroids), centroids, q, 20, 4)
-    assert(rows(idx.search(spark, q, 20, 4).get) == rows(expected),
+    assert(rows(searchOne(idx, q, 20, 4).get) == rows(expected),
       "incremental index diverged from the frozen-centroid rebuild")
 
     // the pre-add version still answers EXACTLY as it did (keepVersions
     // = 2 retains it through one further publish; in-flight readers'
     // grace) while the live search serves the post-add index
-    assert(rows(idx.searchAt(spark, v0, q, 20, 4).get) == before,
+    assert(rows(searchOne(idx, q, 20, 4, Some(v0)).get) == before,
       "a pinned search must not see post-pin adds")
 
     // replaying an already-absorbed batch leaves every bucket's CONTENT
     // unchanged: the new generation serves the same rows
-    val liveBefore = rows(idx.search(spark, q, 20, 4).get)
+    val liveBefore = rows(searchOne(idx, q, 20, 4).get)
     idx.add(b2)
-    assert(rows(idx.search(spark, q, 20, 4).get) == liveBefore,
+    assert(rows(searchOne(idx, q, 20, 4).get) == liveBefore,
       "an idempotent replay changed served results")
   }
 
@@ -96,7 +109,7 @@ class ServedAnnIndexSpec extends AnyFunSuite {
     val idx = new ServedAnnIndex(root, nCentroids = 16)
     val v = idx.build(emb)
     val q = queryVec()
-    val served = idx.searchQuantizedAt(spark, v, q, k = 20, nprobe = 4, rerank = 100).get
+    val served = searchOne(idx, q, k = 20, nprobe = 4, version = Some(v), rerank = Some(100)).get
 
     // the in-memory quantized probe over the same corpus: quantize
     // before assignment vs the index's quantize-at-write — byte-equal
@@ -128,13 +141,13 @@ class ServedAnnIndexSpec extends AnyFunSuite {
     // one-vector form — the serving matrix's fourth cell
     val queries = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val batch = idx.searchBatchQuantizedAt(v, queries, k = 20, nprobe = 4, rerank = 100).get
+    val batch = idx.search(queries, k = 20, nprobe = 4, version = Some(v), rerank = Some(100)).get
     val got = batch.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         math.rint(r.getDouble(3) * 1e9)))
       .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(t => (t._3, t._4)).toSeq).toMap
     (0L until 10L).foreach { qid =>
-      val single = idx.searchQuantizedAt(spark, v, queryVec(qid), 20, 4, 100).get
+      val single = searchOne(idx, queryVec(qid), 20, 4, Some(v), Some(100)).get
         .collect().map(r => (r.getLong(0), math.rint(r.getDouble(1) * 1e9))).toSeq
       assert(got(qid) == single, s"quantized batch diverged from searchQuantizedAt for query $qid")
     }
@@ -145,10 +158,10 @@ class ServedAnnIndexSpec extends AnyFunSuite {
 
     // an EMPTY query batch against a live index is an empty ANSWER,
     // not a "version lost" None — callers .get without fear
-    val empty = idx.searchBatchAt(v, queries.filter(col("q_id") < 0), 20, 4)
+    val empty = idx.search(queries.filter(col("q_id") < 0), 20, 4, Some(v))
     assert(empty.isDefined && empty.get.count() == 0)
     assert(empty.get.columns.toSeq == Seq("q_id", "rnk", "vec_id", "cosine"))
-    val emptyQ = idx.searchBatchQuantizedAt(v, queries.filter(col("q_id") < 0), 20, 4, 100)
+    val emptyQ = idx.search(queries.filter(col("q_id") < 0), 20, 4, Some(v), Some(100))
     assert(emptyQ.isDefined && emptyQ.get.count() == 0)
   }
 
@@ -162,13 +175,13 @@ class ServedAnnIndexSpec extends AnyFunSuite {
     val v = idx.build(emb)
     val queries = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val batch = idx.searchBatchQuantizedAt(v, queries, k = 20, nprobe = 2, rerank = 60).get
+    val batch = idx.search(queries, k = 20, nprobe = 2, version = Some(v), rerank = Some(60)).get
     val got = batch.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         math.rint(r.getDouble(3) * 1e9)))
       .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(t => (t._3, t._4)).toSeq).toMap
     (0L until 10L).foreach { qid =>
-      val single = idx.searchQuantizedAt(spark, v, queryVec(qid), 20, 2, 60).get
+      val single = searchOne(idx, queryVec(qid), 20, 2, Some(v), Some(60)).get
         .collect().map(r => (r.getLong(0), math.rint(r.getDouble(1) * 1e9))).toSeq
       assert(got(qid) == single,
         s"nAssign=2 batch diverged from searchQuantizedAt for query $qid")
@@ -180,13 +193,13 @@ class ServedAnnIndexSpec extends AnyFunSuite {
     // the float batch form holds the same per-query equality under
     // multi-assignment (both forms admit a multi-assigned vector once
     // per query — the served-search contract oncePerQuery enforces)
-    val fbatch = idx.searchBatchAt(v, queries, k = 20, nprobe = 2).get
+    val fbatch = idx.search(queries, k = 20, nprobe = 2, version = Some(v)).get
     val fgot = fbatch.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         math.rint(r.getDouble(3) * 1e9)))
       .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(t => (t._3, t._4)).toSeq).toMap
     (0L until 10L).foreach { qid =>
-      val single = idx.searchAt(spark, v, queryVec(qid), 20, 2).get
+      val single = searchOne(idx, queryVec(qid), 20, 2, Some(v)).get
         .collect().map(r => (r.getLong(0), math.rint(r.getDouble(1) * 1e9))).toSeq
       assert(fgot(qid) == single,
         s"nAssign=2 float batch diverged from searchAt for query $qid")
@@ -197,8 +210,8 @@ class ServedAnnIndexSpec extends AnyFunSuite {
     // (and answer identically to the builder's handle) — the gate
     // reads the on-disk truth, not the constructor
     val readerHandle = new ServedAnnIndex(root, nCentroids = 16)
-    val viaReader = rows(readerHandle.searchAt(spark, v, queryVec(3L), 20, 2).get)
-    assert(viaReader == rows(idx.searchAt(spark, v, queryVec(3L), 20, 2).get),
+    val viaReader = rows(searchOne(readerHandle, queryVec(3L), 20, 2, Some(v)).get)
+    assert(viaReader == rows(searchOne(idx, queryVec(3L), 20, 2, Some(v)).get),
       "a default-constructed reader handle diverged from the builder's")
     assert(viaReader.map(_._1).distinct.size == viaReader.size,
       "a default-constructed reader handle let a multi-assigned vector double-rank")
@@ -212,7 +225,7 @@ class ServedAnnIndexSpec extends AnyFunSuite {
     val queries = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
 
-    val batch = idx.searchBatchAt(v, queries, k = 20, nprobe = 4).get
+    val batch = idx.search(queries, k = 20, nprobe = 4, version = Some(v)).get
     val got = batch.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         math.rint(r.getDouble(3) * 1e9)))
@@ -221,7 +234,7 @@ class ServedAnnIndexSpec extends AnyFunSuite {
     // per-query equality: every query's ranked ids+scores match the
     // one-vector search exactly
     qIds.foreach { q =>
-      val single = idx.searchAt(spark, v, queryVec(q), 20, 4).get.collect()
+      val single = searchOne(idx, queryVec(q), 20, 4, Some(v)).get.collect()
         .map(r => (r.getLong(0), math.rint(r.getDouble(1) * 1e9))).toSeq
       assert(got(q) == single, s"query $q diverged from searchAt")
     }
@@ -261,9 +274,9 @@ class ServedAnnIndexSpec extends AnyFunSuite {
       execs.size
     }
     val e2 = executions(
-      idx.searchBatchAt(v, queries.filter(col("q_id") < 2), 20, 4).get.collect())
+      idx.search(queries.filter(col("q_id") < 2), 20, 4, Some(v)).get.collect())
     val e10 = executions(
-      idx.searchBatchAt(v, queries, 20, 4).get.collect())
+      idx.search(queries, 20, 4, Some(v)).get.collect())
     assert(e2 == e10,
       s"execution count grew with the query count: Q=2 ran $e2, Q=10 ran $e10")
   }
@@ -293,13 +306,13 @@ class ServedAnnIndexSpec extends AnyFunSuite {
     val centroids = Similarity.trainCentroidsById(corpus2, 16)
     val memory = Similarity.ivfTopK(
       Similarity.assignToCentroids(corpus2, centroids), centroids, q, 20, 4)
-    assert(rows(idx.search(spark, q, 20, 4).get) == rows(memory))
+    assert(rows(searchOne(idx, q, 20, 4).get) == rows(memory))
 
     // the PREVIOUS build's version still answers as built (snapshot
     // grace), proving replacement didn't destroy history within
     // keepVersions
     val v1 = idx.versions(spark).head
-    assert(idx.searchAt(spark, v1, queryVec(0L), 20, 4).isDefined)
+    assert(searchOne(idx, queryVec(0L), 20, 4, Some(v1)).isDefined)
   }
 
   test("update (delete+add) re-embeds without duplicating; pinned pre-delete searches keep the old rows; delete replay is idempotent") {
@@ -314,7 +327,7 @@ class ServedAnnIndexSpec extends AnyFunSuite {
     val reembedded = emb.filter(col("vec_id") % 10 === 3)
       .withColumn("embedding", reverse(col("embedding")))
     val q = queryVec(0L)
-    val preDelete = rows(idx.searchAt(spark, vBuilt, q, 20, 4).get)
+    val preDelete = rows(searchOne(idx, q, 20, 4, Some(vBuilt)).get)
 
     idx.update(reembedded)
 
@@ -330,11 +343,11 @@ class ServedAnnIndexSpec extends AnyFunSuite {
     val centroids = Similarity.trainCentroidsById(emb, 16) // frozen at build
     val expected = Similarity.ivfTopK(
       Similarity.assignToCentroids(updated, centroids), centroids, q, 20, 4)
-    assert(rows(idx.search(spark, q, 20, 4).get) == rows(expected),
+    assert(rows(searchOne(idx, q, 20, 4).get) == rows(expected),
       "updated index diverged from the frozen-centroid rebuild on the updated corpus")
 
     // a search pinned BEFORE the delete still serves the old rows
-    assert(rows(idx.searchAt(spark, vBuilt, q, 20, 4).get) == preDelete,
+    assert(rows(searchOne(idx, q, 20, 4, Some(vBuilt)).get) == preDelete,
       "a pinned pre-delete search must not see the update")
 
     // idempotent delete replay: delete once, then replay the SAME
@@ -406,7 +419,7 @@ class ServedAnnIndexSpec extends AnyFunSuite {
         .withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= k).select("q_id", "vec_id")
       val nq = queries.count()
-      idx.searchBatchAt(v, queries, k, nprobe).get
+      idx.search(queries, k, nprobe, Some(v)).get
         .join(brute, Seq("q_id", "vec_id")).count().toDouble / (nq * k)
     }
 
@@ -457,7 +470,7 @@ class ServedAnnIndexSpec extends AnyFunSuite {
     catalog.commitCycle(spark)
     val pinned = catalog.snapshot(spark).get("ann_index")
     val q = queryVec(1L)
-    val atPin = rows(idx.searchAt(spark, pinned, q, 20, 4).get)
+    val atPin = rows(searchOne(idx, q, 20, 4, Some(pinned)).get)
 
     // an UNCOMMITTED add moves the live index but not the pin — and the
     // pin-retention hook keeps the pinned version alive through further
@@ -465,7 +478,7 @@ class ServedAnnIndexSpec extends AnyFunSuite {
     idx.add(emb.filter(col("vec_id") % 8 === 0))
     idx.add(emb.filter(col("vec_id") % 8 === 4))
     idx.add(emb.filter(col("vec_id") % 16 === 12)) // 3rd publish past keepVersions=2
-    assert(rows(idx.searchAt(spark, pinned, q, 20, 4).get) == atPin,
+    assert(rows(searchOne(idx, q, 20, 4, Some(pinned)).get) == atPin,
       "the catalog-pinned index version must keep serving identically")
     assert(catalog.readView(spark, "ann_index").isDefined)
 
@@ -473,7 +486,7 @@ class ServedAnnIndexSpec extends AnyFunSuite {
     catalog.commitCycle(spark)
     val advanced = catalog.snapshot(spark).get("ann_index")
     assert(advanced > pinned)
-    assert(rows(idx.searchAt(spark, advanced, q, 20, 4).get) ==
-      rows(idx.search(spark, q, 20, 4).get))
+    assert(rows(searchOne(idx, q, 20, 4, Some(advanced)).get) ==
+      rows(searchOne(idx, q, 20, 4).get))
   }
 }

@@ -221,12 +221,11 @@ class SimilaritySpec extends AnyFunSuite {
         !scanPlan.contains("PartitionFilters: []"),
         s"probe filter did not reach the partition layer:\n$scanPlan")
 
-      // the pruned store drops into the quantized probe with the SAME ids
-      // (the probed overload — the probe join cannot disagree with the
-      // prune) and agrees with the in-memory path
+      // the pruned store drops into the quantized probe (its in-plan
+      // probe picks the SAME ids the prune kept) and agrees with the
+      // in-memory path
       val viaStore = Similarity.ivfTopKQuantized(pruned, emb, cents, query, 10,
-        nprobe = 2, rerank = 20, probed = Some(probedIds))
-        .collect().map(_.getLong(0)).toSeq
+        nprobe = 2, rerank = 20).collect().map(_.getLong(0)).toSeq
       val inMemory = Similarity.ivfTopKQuantized(assigned, emb, cents, query, 10,
         nprobe = 2, rerank = 20).collect().map(_.getLong(0)).toSeq
       assert(viaStore == inMemory)

@@ -34,21 +34,25 @@ class EventSinkSpec extends AnyFunSuite {
   test("ProcessedIds: load empty → append → load → compact round-trips") {
     val spark0 = spark
     import spark0.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-state").toString
-    val path = s"$dir/processed"
-    assert(EventSink.ProcessedIds.load(spark, path, "event_id").count() == 0)
-    EventSink.ProcessedIds.append(Seq(1L, 2L, 3L).toDF("event_id"), path)
-    EventSink.ProcessedIds.append(Seq(3L, 4L).toDF("event_id"), path) // overlap
-    val loaded = EventSink.ProcessedIds.load(spark, path, "event_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(loaded == Set(1L, 2L, 3L, 4L))
-    EventSink.ProcessedIds.compact(spark, path, "event_id")
-    val after = EventSink.ProcessedIds.load(spark, path, "event_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(after == Set(1L, 2L, 3L, 4L))
-    // compacted to a single part file
-    val parts = new java.io.File(path).listFiles().count(_.getName.startsWith("part-"))
-    assert(parts == 1)
+    // the same store under a bare and a `file:`-qualified path
+    Seq("", "file:").foreach { scheme =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-state").toString
+      val path = s"$scheme$dir/processed"
+      assert(EventSink.ProcessedIds.load(spark, path, "event_id").count() == 0)
+      EventSink.ProcessedIds.append(Seq(1L, 2L, 3L).toDF("event_id"), path)
+      EventSink.ProcessedIds.append(Seq(3L, 4L).toDF("event_id"), path) // overlap
+      val loaded = EventSink.ProcessedIds.load(spark, path, "event_id")
+        .collect().map(_.getLong(0)).toSet
+      assert(loaded == Set(1L, 2L, 3L, 4L))
+      EventSink.ProcessedIds.compact(spark, path, "event_id")
+      val after = EventSink.ProcessedIds.load(spark, path, "event_id")
+        .collect().map(_.getLong(0)).toSet
+      assert(after == Set(1L, 2L, 3L, 4L))
+      // compacted to a single part file
+      val parts = new java.io.File(path.stripPrefix(scheme)).listFiles()
+        .count(_.getName.startsWith("part-"))
+      assert(parts == 1)
+    }
   }
 
   test("deliverBatchIdempotent: string ids bootstrap cleanly, in-batch dups and null ids excluded") {

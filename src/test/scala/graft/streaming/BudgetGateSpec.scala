@@ -24,36 +24,39 @@ class BudgetGateSpec extends AnyFunSuite {
   private def words(n: Int, tag: String) = (1 to n).map(i => s"$tag$i").mkString(" ")
 
   test("admissions across batches equal the one-shot greedy prefix") {
-    val statePath = Files.createTempDirectory("graft_budget").toString + "/state"
-    val budget = 25L
-    val b1 = docs(
-      (1L, "web", words(10, "a")),   // web: 10
-      (2L, "web", words(10, "b")),   // web: 20
-      (3L, "forum", words(24, "c"))) // forum: 24
-    val b2 = docs(
-      (4L, "web", words(5, "d")),    // web: 25 — exactly fills
-      (5L, "web", words(1, "e")),    // web: would be 26 → rejected
-      (6L, "forum", words(1, "f")),  // forum: 25 — fills
-      (7L, "news", words(30, "g")))  // news: 30 > 25 → rejected outright
-    val b3 = docs(
-      (8L, "web", words(1, "h")),    // web full → rejected
-      (9L, "news", words(20, "i")))  // news still empty: 20 admitted
+    // the same store under a bare and a `file:`-qualified path
+    Seq("", "file:").foreach { scheme =>
+      val statePath = scheme + Files.createTempDirectory("graft_budget").toString + "/state"
+      val budget = 25L
+      val b1 = docs(
+        (1L, "web", words(10, "a")),   // web: 10
+        (2L, "web", words(10, "b")),   // web: 20
+        (3L, "forum", words(24, "c"))) // forum: 24
+      val b2 = docs(
+        (4L, "web", words(5, "d")),    // web: 25 — exactly fills
+        (5L, "web", words(1, "e")),    // web: would be 26 → rejected
+        (6L, "forum", words(1, "f")),  // forum: 25 — fills
+        (7L, "news", words(30, "g")))  // news: 30 > 25 → rejected outright
+      val b3 = docs(
+        (8L, "web", words(1, "h")),    // web full → rejected
+        (9L, "news", words(20, "i")))  // news still empty: 20 admitted
 
-    val (a1, s1) = BudgetGate.admitBatch(b1, "doc_id", "source", "text", statePath, budget)
-    val (a2, s2) = BudgetGate.admitBatch(b2, "doc_id", "source", "text", statePath, budget)
-    val (a3, s3) = BudgetGate.admitBatch(b3, "doc_id", "source", "text", statePath, budget)
-    val got = (a1.collect() ++ a2.collect() ++ a3.collect()).map(_.getLong(0)).toSet
-    a1.unpersist(); a2.unpersist(); a3.unpersist()
+      val (a1, s1) = BudgetGate.admitBatch(b1, "doc_id", "source", "text", statePath, budget)
+      val (a2, s2) = BudgetGate.admitBatch(b2, "doc_id", "source", "text", statePath, budget)
+      val (a3, s3) = BudgetGate.admitBatch(b3, "doc_id", "source", "text", statePath, budget)
+      val got = (a1.collect() ++ a2.collect() ++ a3.collect()).map(_.getLong(0)).toSet
+      a1.unpersist(); a2.unpersist(); a3.unpersist()
 
-    assert(got == Set(1L, 2L, 3L, 4L, 6L, 9L), s"admitted $got")
-    assert(s1 == BudgetGate.GateStats(3, 3, 0))
-    assert(s2 == BudgetGate.GateStats(4, 2, 2))
-    assert(s3 == BudgetGate.GateStats(2, 1, 1))
+      assert(got == Set(1L, 2L, 3L, 4L, 6L, 9L), s"admitted $got")
+      assert(s1 == BudgetGate.GateStats(3, 3, 0))
+      assert(s2 == BudgetGate.GateStats(4, 2, 2))
+      assert(s3 == BudgetGate.GateStats(2, 1, 1))
 
-    // and the state is the per-source high water
-    val state = BudgetGate.readState(spark, statePath, "source")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(state == Map("web" -> 25L, "forum" -> 25L, "news" -> 20L))
+      // and the state is the per-source high water
+      val state = BudgetGate.readState(spark, statePath, "source")
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(state == Map("web" -> 25L, "forum" -> 25L, "news" -> 20L))
+    }
   }
 
   test("batch admission matches the mix_token_budget greedy semantics") {

@@ -165,7 +165,8 @@ class StreamingAnnSpec extends AnyFunSuite {
     // and searches agree at the live versions
     val qv = Seq(0.9f, 0.1f, 0f, 0f)
     def top(idx: ServedAnnIndex) =
-      idx.search(spark, qv, k = 5, nprobe = 2).get
+      idx.search(Seq((0L, qv)).toDF("q_id", "qv"), k = 5, nprobe = 2).get
+        .select("vec_id", "cosine")
         .collect().map(r => (r.getLong(0), math.rint(r.getDouble(1) * 1e9))).toSeq
     assert(top(streamed) == top(reference))
   }
