@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types._
 
 /** Scoped Spark job descriptions (guide §1.5: label your jobs). The
   * multi-job operators (materialized-view build/refresh, generation
@@ -20,8 +23,9 @@ object JobLabel {
 }
 
 /** Lineage-severing helpers shared by the iterative / read-overwrite
-  * operators (materialized-view refresh, connected components, the
-  * idempotent event sink).
+  * operators (materialized-view refresh, the idempotent event sink),
+  * plus the round loop and local-solve gate of the iterative graph
+  * operators (ConnectedComponents, Lpa, PageRank, KCore, BpeMerges).
   */
 object Lineage {
 
@@ -62,5 +66,117 @@ object Lineage {
         "graft.Lineage.checkpointed: no LogicalRDD leaf on the " +
           "checkpointed frame; its blocks will not be released")
     (cp, () => rdd.foreach(_.unpersist(blocking = false)))
+  }
+
+  /** The checkpointed round loop of the iterative graph operators.
+    * `seed` is round 0 as [[checkpointed]] returns it. Round r eagerly
+    * checkpoints `step(state, r)` — the per-round cut that keeps a loop's
+    * plan from doubling every round until planning dominates — and then
+    * releases round r-1, which nothing reads any more; without that, a
+    * long-lived session keeps one superseded block set per round. The
+    * loop ends when `step` returns None (no round r), when
+    * `done(built, state)` holds for the frame the step built and its
+    * checkpoint, or after `maxRounds` rounds. Returns the last round's
+    * frame and releaser: [[detach]] it or release it. */
+  private[graft] def rounds(seed: (DataFrame, () => Unit), maxRounds: Int)(
+      step: (DataFrame, Int) => Option[DataFrame],
+      done: (DataFrame, DataFrame) => Boolean): (DataFrame, () => Unit) = {
+    var (state, release) = seed
+    var r = 0
+    var stop = false
+    while (!stop && r < maxRounds) {
+      r += 1
+      step(state, r) match {
+        case None => stop = true
+        case Some(built) =>
+          val (next, releaseNext) = checkpointed(built)
+          release()
+          state = next
+          release = releaseNext
+          stop = done(built, next)
+      }
+    }
+    (state, release)
+  }
+
+  /** Detaches a result from checkpoint storage: persists `df` through
+    * the cache manager, materializes it, then runs the checkpoint's
+    * `release` — so the caller frees everything with `unpersist()`. */
+  private[graft] def detach(df: DataFrame, release: () => Unit): DataFrame = {
+    val out = df.persist()
+    out.count()
+    release()
+    out
+  }
+
+  /** Edge count at or below which the iterative graph operators solve
+    * DRIVER-SIDE over the collected edges instead of running distributed
+    * rounds. Cost-based, same doctrine as `BucketedView`'s
+    * `keyScopeMinStateBytes`: every distributed round pays its shuffles
+    * and an eager checkpoint REGARDLESS of data size, so a bounded edge
+    * list (2^20 two-field rows collect to a few tens of MB) is pure fixed
+    * overhead per round. History-sized edge lists (the 100 TB posture)
+    * keep the distributed rounds. Each operator's spec pins its two paths
+    * equal. */
+  private[graft] val LocalSolveMaxEdges: Long = 1L << 20
+
+  /** The local-solve gate. `edges` must be persisted or checkpointed:
+    * its count here is the gate's one job. Returns the ordering for a
+    * driver-side solve when `edges` has at most `maxEdges` rows and
+    * columns `a` and `b` share a type [[localOrdering]] covers; None
+    * sends the operator to its distributed rounds. The whitelist is the
+    * equality test too: the driver solves key `HashMap`s on raw boxed
+    * ids, and only for these types is boxed equality Spark's grouping
+    * equality (binary compares by reference, float/double split -0.0
+    * from 0.0). */
+  private[graft] def localSolveOrdering(
+      edges: DataFrame, maxEdges: Long, a: String, b: String): Option[Ordering[Any]] = {
+    val n = edges.count()
+    val idType = edges.schema(a).dataType
+    if (n <= maxEdges && edges.schema(b).dataType == idType) localOrdering(idType)
+    else None
+  }
+
+  /** Orderings that exactly mirror the distributed paths' `min`
+    * semantics on EXTERNAL (collected) values. Integral types share
+    * Spark's numeric order; strings must compare as UTF-8 BYTES (Spark's
+    * UTF8String binary order), not `String.compareTo` (UTF-16 code
+    * units) — they diverge on supplementary characters. Unlisted types
+    * (decimals, structs…) return None and take the distributed path,
+    * whose `min` needs no driver-side mirror. */
+  private def localOrdering(dt: DataType): Option[Ordering[Any]] = dt match {
+    case LongType => Some(Ordering.by((a: Any) => a.asInstanceOf[Long]))
+    case IntegerType => Some(Ordering.by((a: Any) => a.asInstanceOf[Int]))
+    case ShortType => Some(Ordering.by((a: Any) => a.asInstanceOf[Short]))
+    case ByteType => Some(Ordering.by((a: Any) => a.asInstanceOf[Byte]))
+    case StringType => Some(new Ordering[Any] {
+      def compare(a: Any, b: Any): Int = {
+        val x = a.asInstanceOf[String]
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        val y = b.asInstanceOf[String]
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        var i = 0
+        val n = math.min(x.length, y.length)
+        while (i < n) {
+          val c = (x(i) & 0xff) - (y(i) & 0xff)
+          if (c != 0) return c
+          i += 1
+        }
+        x.length - y.length
+      }
+    })
+    case _ => None
+  }
+
+  /** A driver solve's result as the distributed path returns it:
+    * persisted, materialized, freed by `unpersist()`. */
+  private[graft] def localResult(
+      spark: org.apache.spark.sql.SparkSession,
+      rows: Seq[Row],
+      fields: (String, DataType)*): DataFrame = {
+    val out = spark.createDataFrame(rows.asJava,
+      StructType(fields.map { case (name, dt) => StructField(name, dt) })).persist()
+    out.count()
+    out
   }
 }

@@ -13,10 +13,8 @@ import org.apache.spark.sql.functions._
   * compresses to its vocabulary before any iteration, so at 100 TB the
   * loop runs over millions of metadata rows, not billions of documents;
   * only the single argmax pair row crosses to the driver per round
-  * (bounded metadata, like the IVF centroid tables). Per-round
-  * checkpoint hygiene is [[graft.Lineage.checkpointed]], the same
-  * contract as [[ConnectedComponents]]: each round's blocks release as
-  * soon as the next round materializes.
+  * (bounded metadata, like the IVF centroid tables). Rounds run in
+  * [[graft.Lineage.rounds]].
   *
   * Symbol sequences are encoded as delimiter-wrapped strings — word
   * `ab` → `·a··b·` — so one compiled string `replace` applies a merge
@@ -42,15 +40,11 @@ object BpeMerges {
       freqCol: String,
       k: Int): Seq[(Long, String, String, Long)] = {
     require(k >= 1, s"need at least one merge round, got $k")
-    var (cur, release) = graft.Lineage.checkpointed(
+    val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
+    val (_, release) = graft.Lineage.rounds(graft.Lineage.checkpointed(
       words.select(
         regexp_replace(col(wordCol), "(.)", s"$Delim$$1$Delim").as("seq"),
-        col(freqCol).cast("long").as("freq")))
-    val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
-    var round = 0
-    var exhausted = false
-    while (round < k && !exhausted) {
-      round += 1
+        col(freqCol).cast("long").as("freq"))), k)({ (cur, round) =>
       val syms = split(
         regexp_replace(col("seq"), s"^$Delim|$Delim$$", ""), s"$Delim$Delim")
       val top = cur
@@ -64,19 +58,15 @@ object BpeMerges {
         .groupBy("lhs", "rhs").agg(sum(col("freq")).as("cnt"))
         .orderBy(col("cnt").desc, col("lhs"), col("rhs")).limit(1)
         .collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, r, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+      // no adjacent pair left: the vocabulary is exhausted, stop early
+      top.headOption.map { t =>
+        val (l, r, cnt) = (t.getString(0), t.getString(1), t.getLong(2))
         merges += ((round.toLong, l, r, cnt))
-        val (next, releaseNext) = graft.Lineage.checkpointed(
-          cur.withColumn("seq",
-            replace(col("seq"), lit(s"$Delim$l$Delim$Delim$r$Delim"),
-              lit(s"$Delim$l$r$Delim"))))
-        release()
-        release = releaseNext
-        cur = next
+        cur.withColumn("seq",
+          replace(col("seq"), lit(s"$Delim$l$Delim$Delim$r$Delim"),
+            lit(s"$Delim$l$r$Delim")))
       }
-    }
+    }, (_, _) => false)
     release()
     merges.toSeq
   }

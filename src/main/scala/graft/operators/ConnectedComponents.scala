@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Connected components over an edge list — the step that turns
@@ -20,14 +22,8 @@ import org.apache.spark.sql.functions._
   * Scale design (100 TB):
   *   - every round is 3 shuffles over the EDGE list, never a pairwise
   *     blowup; duplicate clusters are shallow so rounds stay single-digit;
-  *   - per-round eager `localCheckpoint` truncates the lineage — the
-  *     classic iterative-Spark failure mode is a plan that doubles every
-  *     round until planning itself dominates. Each round's checkpoint
-  *     blocks are released ([[graft.Lineage.checkpointed]]) the moment
-  *     the next round materializes — without that, a long-lived session
-  *     leaks one superseded label block set per iteration (checkpoint
-  *     storage is invisible to `Dataset.unpersist` and only reclaimed
-  *     if the driver happens to GC the dead RDD object);
+  *   - rounds run in [[graft.Lineage.rounds]]: each is cut by an eager
+  *     checkpoint and releases the round it supersedes;
   *   - convergence is exact, never "maxIter iterations and hope", and
   *     costs NO extra job: the changed-label count rides the round's own
   *     materialization via `Dataset.observe` (a `CollectMetrics` node —
@@ -46,26 +42,17 @@ object ConnectedComponents {
     * `ConnectedComponentsSpec` so that regression is loud, not slow. */
   private[graft] val probeFallbacks = new java.util.concurrent.atomic.AtomicLong
 
-  /** Edge count at or below which components are solved DRIVER-SIDE by
-    * union-find on the collected (deduped, symmetric-halved) edge list
-    * instead of iterating distributed rounds. Cost-based, same doctrine
-    * as `BucketedView`'s `keyScopeMinStateBytes`: every distributed
-    * round pays 3 shuffles + an eager checkpoint REGARDLESS of data
-    * size, so a bounded edge list (≤ ~16 MB collected at this default)
-    * is pure fixed overhead × O(log diameter) — the exact same labels
-    * come back from one collect + one createDataFrame. History-sized
-    * edge lists (the 100 TB posture) stay on the iterative path;
-    * [[incrementalMerge]]'s component-collapsed delta graph (bounded by
-    * the batch) is the case this is FOR. Path equivalence is pinned in
-    * `ConnectedComponentsSpec`. */
-  val LocalSolveMaxEdges: Long = 1L << 20
-
   /** Component label per vertex: `(id, comp)` where `comp` is the
     * SMALLEST vertex id in the component (deterministic canonical id).
     * Only vertices present in `edges` appear; callers attach
     * edge-less singletons with a left join + coalesce to own id.
     * Throws if `maxIter` rounds don't converge (with pointer jumping
     * that needs a component diameter over 2^maxIter).
+    *
+    * At or below `localSolveMaxEdges` deduped edges the components are
+    * solved on the driver ([[graft.Lineage.localSolveOrdering]]);
+    * [[incrementalMerge]]'s batch-bounded delta graph is the case that
+    * gate is for.
     *
     * The returned frame is MATERIALIZED and cache-manager persisted —
     * all internal checkpoint storage is already released; the caller
@@ -75,7 +62,7 @@ object ConnectedComponents {
       srcCol: String,
       dstCol: String,
       maxIter: Int = 30,
-      localSolveMaxEdges: Long = LocalSolveMaxEdges): DataFrame = {
+      localSolveMaxEdges: Long = graft.Lineage.LocalSolveMaxEdges): DataFrame = {
     // symmetric deduped edge list: propagation must flow both ways.
     // The local fast path needs only one direction; the symmetric
     // union stays lazy until the iterative path materializes it.
@@ -84,14 +71,9 @@ object ConnectedComponents {
       .filter(col("src") =!= col("dst")) // self-loops don't affect components
       .distinct()
       .persist()
-    val idType = half.schema("src").dataType
-    val nEdges = half.count() // also materializes the persist
-    // both endpoint types must agree for the driver-side solve: its maps
-    // key on raw boxed ids, so a mixed src/dst frame (which the iterative
-    // path's union would widen) must take the distributed path instead
-    if (nEdges <= localSolveMaxEdges && half.schema("dst").dataType == idType &&
-        localOrdering(idType).isDefined) {
-      val out = localSolve(half, idType)
+    val local = graft.Lineage.localSolveOrdering(half, localSolveMaxEdges, "src", "dst")
+    if (local.isDefined) {
+      val out = localSolve(half, local.get)
       half.unpersist()
       return out
     }
@@ -99,13 +81,13 @@ object ConnectedComponents {
       .union(half.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .persist()
-    var (labels, releaseLabels) = graft.Lineage.checkpointed(
-      sym.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("comp")))
+    // each round's state is `(id, …, new_comp)`: the seed's own id, then
+    // the pointer-jumped label the round computed
     var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      iter += 1
+    val (labels, release) = graft.Lineage.rounds(graft.Lineage.checkpointed(
+      sym.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("new_comp"))), maxIter)({ (state, _) =>
+      val labels = state.select(col("id"), col("new_comp").as("comp"))
       // smallest label among my neighbors (join on the edge list)
       val nbr = sym
         .join(labels.select(col("id").as("src"), col("comp").as("src_comp")), "src")
@@ -118,90 +100,36 @@ object ConnectedComponents {
       // The changed-label count is OBSERVED on the frame the checkpoint
       // materializes: one job per round does both the materialization
       // and the convergence test.
-      val observed = stepped
+      Some(stepped
         .join(labels.select(col("id").as("mid"), col("comp").as("jump")),
           Seq("mid"), "left")
         .select(col("id"), col("comp"),
           least(col("mid"), coalesce(col("jump"), col("mid"))).as("new_comp"))
-        .observe(s"graft_cc_$iter",
-          count(when(col("new_comp") =!= col("comp"), 1)).as("changed"))
-      val (jumped, releaseJumped) = graft.Lineage.checkpointed(observed)
-      converged = observed.queryExecution.observedMetrics
-        .get(s"graft_cc_$iter")
+        .observe("graft_cc", count(when(col("new_comp") =!= col("comp"), 1)).as("changed")))
+    }, { (observed, jumped) =>
+      converged = observed.queryExecution.observedMetrics.get("graft_cc")
         .map(_.getAs[Long]("changed") == 0L)
         .getOrElse {
           probeFallbacks.incrementAndGet()
           jumped.filter(col("new_comp") =!= col("comp")).isEmpty
         }
-      // this round's blocks are live (checkpointed() is eager); the
-      // previous round's labels are superseded — release them NOW, not
-      // when the driver's GC eventually notices the dead RDD
-      releaseLabels()
-      releaseLabels = releaseJumped
-      labels = jumped.select(col("id"), col("new_comp").as("comp"))
-    }
+      converged
+    })
     sym.unpersist()
     half.unpersist()
     if (!converged) {
-      releaseLabels()
+      release()
       throw new IllegalStateException(
         s"connected components did not converge in $maxIter rounds")
     }
-    // Detach the (vertex-sized) result from checkpoint storage: persist
-    // through the cache manager, materialize, then drop the final
-    // round's checkpoint — so the caller's ordinary `unpersist()` frees
-    // everything this operator allocated.
-    val out = labels.persist()
-    out.count()
-    releaseLabels()
-    out
-  }
-
-  /** Orderings that exactly mirror the distributed path's `min(comp)`
-    * semantics on EXTERNAL (collected) values. Integral/floating types
-    * share Spark's numeric order; strings must compare as UTF-8 BYTES
-    * (Spark's UTF8String binary order), not `String.compareTo` (UTF-16
-    * code units) — they diverge on supplementary characters. Unlisted
-    * types (decimals, structs…) return None and take the iterative
-    * path, whose `min` needs no driver-side mirror. Shared with the
-    * other cost-gated local solves ([[Lpa]]). */
-  private[operators] def localOrdering(
-      dt: org.apache.spark.sql.types.DataType): Option[Ordering[Any]] = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case LongType => Some(Ordering.by((a: Any) => a.asInstanceOf[Long]))
-      case IntegerType => Some(Ordering.by((a: Any) => a.asInstanceOf[Int]))
-      case ShortType => Some(Ordering.by((a: Any) => a.asInstanceOf[Short]))
-      case ByteType => Some(Ordering.by((a: Any) => a.asInstanceOf[Byte]))
-      case StringType => Some(new Ordering[Any] {
-        def compare(a: Any, b: Any): Int = {
-          val x = a.asInstanceOf[String]
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val y = b.asInstanceOf[String]
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          var i = 0
-          val n = math.min(x.length, y.length)
-          while (i < n) {
-            val c = (x(i) & 0xff) - (y(i) & 0xff)
-            if (c != 0) return c
-            i += 1
-          }
-          x.length - y.length
-        }
-      })
-      case _ => None
-    }
+    graft.Lineage.detach(labels.select(col("id"), col("new_comp").as("comp")), release)
   }
 
   /** Driver-side exact solve for a bounded edge list: union-find with
     * path halving over the collected edges, then per-root minimum under
-    * [[localOrdering]] so labels are canonical ("comp = smallest member
-    * id") exactly as the iterative path produces them. Output contract
-    * matches [[run]]: persisted, materialized, freed by `unpersist()`. */
-  private def localSolve(
-      half: DataFrame,
-      idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val ord = localOrdering(idType).get
+    * `ord` so labels are canonical ("comp = smallest member id") exactly
+    * as the iterative path produces them. */
+  private def localSolve(half: DataFrame, ord: Ordering[Any]): DataFrame = {
     val parent = new java.util.HashMap[Any, Any]()
     def find(x: Any): Any = {
       var r = x
@@ -229,17 +157,10 @@ object ConnectedComponents {
       val cur = minOfRoot.get(r)
       if (cur == null || ord.lt(v, cur)) minOfRoot.put(r, v)
     }
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](parent.size())
-    parent.keySet().forEach { v =>
-      rows.add(org.apache.spark.sql.Row(v, minOfRoot.get(find(v))))
-    }
-    val spark = half.sparkSession
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", idType),
-      org.apache.spark.sql.types.StructField("comp", idType)))
-    val out = spark.createDataFrame(rows, schema).persist()
-    out.count()
-    out
+    val idType = half.schema("src").dataType
+    graft.Lineage.localResult(half.sparkSession,
+      parent.keySet().asScala.toSeq.map(v => Row(v, minOfRoot.get(find(v)))),
+      "id" -> idType, "comp" -> idType)
   }
 
   /** Cluster every row of `df`: `(… , clusterCol)` where the cluster id

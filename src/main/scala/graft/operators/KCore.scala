@@ -14,26 +14,17 @@ import org.apache.spark.sql.functions._
   * replay at any scale.
   *
   * One round = one grouped count (map-side partials) + two semi-join
-  * restrictions of the edge list — no all-pairs stage anywhere; the
-  * per-round `Lineage.checkpointed` keeps the loop's lineage flat
-  * (measured necessary on LPA: 6.0 s → 27.3 s without).
+  * restrictions of the edge list — no all-pairs stage anywhere; rounds
+  * run in [[graft.Lineage.rounds]].
   *
-  * COST-GATED LOCAL SOLVE (same doctrine as ConnectedComponents and
-  * PageRank, r11): the symmetrized edge list is materialized once
-  * anyway (the round-0 checkpoint), so its size is known before any
-  * round runs. At or below [[LocalSolveMaxEdges]] directed edges the
-  * whole peel runs driver-side over the collected pairs — a graph that
-  * small makes the per-round job pair (stat collect + checkpoint) pure
-  * scheduling overhead, 2·rounds jobs to count a few MB. Above the
-  * gate the distributed rounds run unchanged; path equivalence is
-  * pinned in KCoreSpec.
+  * The symmetrized edge list is materialized once anyway (the round-0
+  * checkpoint), so its size is known before any round runs: below the
+  * [[graft.Lineage.localSolveOrdering]] gate the whole peel runs
+  * driver-side over the collected pairs — a graph that small makes the
+  * per-round job pair (stat collect + checkpoint) pure scheduling
+  * overhead. Path equivalence is pinned in KCoreSpec.
   */
 object KCore {
-
-  /** Directed-edge count at or below which the peel runs driver-side:
-    * 2^20 two-field rows collect to a few tens of MB — far below
-    * driver heap — and the driver loop is microseconds per round. */
-  val LocalSolveMaxEdges: Long = 1L << 20
 
   final case class RoundStat(round: Int, nodesAlive: Long, edgesAlive: Long)
 
@@ -46,7 +37,7 @@ object KCore {
       edges: DataFrame,
       k: Int,
       rounds: Int,
-      localSolveMaxEdges: Long = LocalSolveMaxEdges): Seq[RoundStat] = {
+      localSolveMaxEdges: Long = graft.Lineage.LocalSolveMaxEdges): Seq[RoundStat] = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // Edges with a null endpoint are inert from round 1 on in the
@@ -57,37 +48,24 @@ object KCore {
       .select(col("x").as("node"), col("y").as("nbr"))
       .unionByName(edges.filter(col("x").isNotNull && col("y").isNotNull)
         .select(col("y").as("node"), col("x").as("nbr")))
-    var (live, release) = graft.Lineage.checkpointed(sym)
-    // one cheap narrow job over the checkpoint — the gate's cost signal
-    val nDirected = live.count()
-    val idType = live.schema("node").dataType
-    // Ids are used for equality/hashing only here, but JVM boxed
-    // equality diverges from Spark's grouping for binary (reference
-    // equality) and float/double (-0.0 vs 0.0) — gate the local path on
-    // the same whitelist the ordered local solves use (long/int/short/
-    // byte/string), where boxed equality IS Spark equality, and on both
-    // endpoint columns sharing that type.
-    if (nDirected <= localSolveMaxEdges && live.schema("nbr").dataType == idType &&
-        ConnectedComponents.localOrdering(idType).isDefined) {
+    val seed @ (live, release) = graft.Lineage.checkpointed(sym)
+    if (graft.Lineage.localSolveOrdering(live, localSolveMaxEdges, "node", "nbr").isDefined) {
       val pairs = live.collect().map(r => (r.get(0), r.get(1)))
       release()
       return localPeel(pairs, k, rounds)
     }
-    val stats = scala.collection.mutable.ArrayBuffer(
-      stat(0, live))
-    for (r <- 1 to rounds) {
+    // round r's step first records round r-1's survivors
+    val stats = scala.collection.mutable.ArrayBuffer[RoundStat]()
+    val (last, releaseLast) = graft.Lineage.rounds(seed, rounds)({ (live, r) =>
+      stats += stat(r - 1, live)
       val keep = live.groupBy("node").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select("node")
-      val (next, releaseNext) = graft.Lineage.checkpointed(
-        live.join(keep, Seq("node"), "left_semi")
-          .join(keep.select(col("node").as("nbr")), Seq("nbr"), "left_semi")
-          .select("node", "nbr"))
-      release()
-      release = releaseNext
-      live = next
-      stats += stat(r, live)
-    }
-    release()
+      Some(live.join(keep, Seq("node"), "left_semi")
+        .join(keep.select(col("node").as("nbr")), Seq("nbr"), "left_semi")
+        .select("node", "nbr"))
+    }, (_, _) => false)
+    stats += stat(rounds, last)
+    releaseLast()
     stats.toSeq
   }
 

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Synchronous label propagation (Raghavan et al. 2007), fixed round
@@ -13,26 +15,18 @@ import org.apache.spark.sql.functions._
   *
   * One distributed round = (edge ⋈ labels) + three map-side collapsing
   * hash aggregates — count per (node, label), max count per node, min
-  * label at the max — no windows, no all-pairs. Per-round lineage is
-  * cut and released via [[graft.Lineage.checkpointed]] exactly like
-  * [[ConnectedComponents]]; the checkpoints are MEASURED load-bearing
-  * even at four fixed rounds (the lazy chain duplicates each round's
-  * count subtree and the copies do not collapse to ReusedExchange
-  * under AQE — 6.0 s → 27.3 s at sf0.1).
+  * label at the max — no windows, no all-pairs. Rounds run in
+  * [[graft.Lineage.rounds]]; its per-round checkpoints are MEASURED
+  * load-bearing even at four fixed rounds (the lazy chain duplicates
+  * each round's count subtree and the copies do not collapse to
+  * ReusedExchange under AQE — 6.0 s → 27.3 s at sf0.1).
   *
-  * COST-GATED LOCAL SOLVE (the r11 CC/PageRank doctrine): the
-  * symmetrized edge list is persisted and counted up front; at or
-  * below `localSolveMaxEdges` directed edges the rounds run
+  * Below the [[graft.Lineage.localSolveOrdering]] gate the rounds run
   * driver-side over the collected pairs — 2 jobs total instead of
-  * 2·rounds — with the same max-count/min-label semantics under
-  * [[ConnectedComponents.localOrdering]]. Unorderable id types take
-  * the distributed path. Path equivalence pinned in LpaSpec.
+  * 2·rounds — with the same max-count/min-label semantics. Path
+  * equivalence pinned in LpaSpec.
   */
 object Lpa {
-
-  /** Directed-edge count at or below which the rounds run driver-side
-    * (collected pairs are a few tens of MB at 2^20). */
-  val LocalSolveMaxEdges: Long = 1L << 20
 
   /** Labels after exactly `rounds` synchronous rounds: `(node, lbl)`,
     * one row per node of `edges` (undirected pairs `(xCol, yCol)`).
@@ -44,7 +38,7 @@ object Lpa {
       xCol: String,
       yCol: String,
       rounds: Int,
-      localSolveMaxEdges: Long = LocalSolveMaxEdges): DataFrame = {
+      localSolveMaxEdges: Long = graft.Lineage.LocalSolveMaxEdges): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // Null-endpoint edges are dropped up front: in the distributed
     // rounds the inner join on `nbr` already ignores them (null keys
@@ -55,47 +49,32 @@ object Lpa {
     val eb = nn.select(col(xCol).as("nbr"), col(yCol).as("node"))
       .unionByName(nn.select(col(yCol).as("nbr"), col(xCol).as("node")))
       .persist()
-    val idType = eb.schema("node").dataType
-    val nDirected = eb.count() // also materializes the persist
-    if (nDirected <= localSolveMaxEdges && eb.schema("nbr").dataType == idType &&
-        ConnectedComponents.localOrdering(idType).isDefined) {
-      val out = localSolve(eb, idType, rounds)
+    val local = graft.Lineage.localSolveOrdering(eb, localSolveMaxEdges, "node", "nbr")
+    if (local.isDefined) {
+      val out = localSolve(eb, local.get, rounds)
       eb.unpersist()
       return out
     }
-    var (labels, release) = graft.Lineage.checkpointed(
+    val (labels, release) = graft.Lineage.rounds(graft.Lineage.checkpointed(
       eb.select(col("node")).distinct()
-        .select(col("node"), col("node").as("lbl")))
-    for (_ <- 1 to rounds) {
+        .select(col("node"), col("node").as("lbl"))), rounds)({ (labels, _) =>
       val cnts = eb
         .join(labels.select(col("node").as("nbr"), col("lbl").as("nl")), "nbr")
         .groupBy(col("node"), col("nl"))
         .agg(count(lit(1)).as("cnt"))
       val best = cnts.groupBy("node").agg(max(col("cnt")).as("mc"))
-      val (next, releaseNext) = graft.Lineage.checkpointed(
-        cnts.join(best, Seq("node"))
-          .filter(col("cnt") === col("mc"))
-          .groupBy("node").agg(min(col("nl")).as("lbl")))
-      release()
-      release = releaseNext
-      labels = next
-    }
-    // detach the node-sized result from checkpoint storage (same
-    // contract as ConnectedComponents.run)
-    val out = labels.persist()
-    out.count()
-    release()
+      Some(cnts.join(best, Seq("node"))
+        .filter(col("cnt") === col("mc"))
+        .groupBy("node").agg(min(col("nl")).as("lbl")))
+    }, (_, _) => false)
+    val out = graft.Lineage.detach(labels, release)
     eb.unpersist()
     out
   }
 
   /** Driver-side replay of exactly the distributed rounds. Synchronous:
     * each round's counts read the PREVIOUS round's labels only. */
-  private def localSolve(
-      eb: DataFrame,
-      idType: org.apache.spark.sql.types.DataType,
-      rounds: Int): DataFrame = {
-    val ord = ConnectedComponents.localOrdering(idType).get
+  private def localSolve(eb: DataFrame, ord: Ordering[Any], rounds: Int): DataFrame = {
     val pairs = eb.collect().map(r => (r.get(0), r.get(1))) // (nbr, node)
     var lbl = new java.util.HashMap[Any, Any]()
     pairs.foreach { case (_, node) => lbl.put(node, node) }
@@ -117,14 +96,9 @@ object Lpa {
       }
       lbl = bestL // every node has ≥1 neighbour, so bestL covers all nodes
     }
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](lbl.size())
-    lbl.forEach { (node, l) => rows.add(org.apache.spark.sql.Row(node, l)) }
-    val spark = eb.sparkSession
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", idType),
-      org.apache.spark.sql.types.StructField("lbl", idType)))
-    val out = spark.createDataFrame(rows, schema).persist()
-    out.count()
-    out
+    val idType = eb.schema("node").dataType
+    graft.Lineage.localResult(eb.sparkSession,
+      lbl.asScala.toSeq.map { case (node, l) => Row(node, l) },
+      "node" -> idType, "lbl" -> idType)
   }
 }

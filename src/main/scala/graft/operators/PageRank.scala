@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Weighted PageRank over an edge list, in fixed-point integer
   * arithmetic — graph centrality as an iterative DataFrame loop.
@@ -39,30 +40,21 @@ import org.apache.spark.sql.functions._
   * `RelationalQueries.graph_event_pagerank`). The loop itself runs
   * over the collapsed edge list, whose size is bounded by distinct
   * (src, dst) keys, not by corpus rows. Each round is one join + one
-  * aggregate on that edge frame; per-round eager checkpoints truncate
-  * the lineage (the iterative-plan-doubling failure mode) and each
-  * superseded round's blocks are released immediately via
-  * [[graft.Lineage.checkpointed]] — same hygiene contract as
-  * [[ConnectedComponents]].
+  * aggregate on that edge frame, run in [[graft.Lineage.rounds]].
+  *
+  * Below the [[graft.Lineage.localSolveOrdering]] gate the ITERATION
+  * runs driver-side. Unlike CC's min-labels this is not merely
+  * equivalent but BIT-IDENTICAL by construction: every operation is
+  * LONG arithmetic with per-edge floors before order-independent integer
+  * sums — the exact cross-engine determinism contract the oracle already
+  * relies on. The corpus-sized work (transition aggregate, probability
+  * scaling) stays distributed either way; only the loop over the
+  * collapsed (distinct src,dst) frame localizes.
   */
 object PageRank {
 
   /** Scaled transition probabilities: per-source weight fractions. */
   val ProbScale: Long = 1000000L
-
-  /** Collapsed-edge count at or below which the ITERATION runs
-    * driver-side instead of as `iterations` distributed rounds — the
-    * same cost doctrine as [[ConnectedComponents.LocalSolveMaxEdges]]:
-    * each round costs a join + aggregate + eager checkpoint REGARDLESS
-    * of size, pure fixed overhead on a bounded graph. Unlike CC's
-    * min-labels this is not merely equivalent but BIT-IDENTICAL by
-    * construction: every operation is LONG arithmetic with per-edge
-    * floors before order-independent integer sums — the exact
-    * cross-engine determinism contract the oracle already relies on.
-    * The corpus-sized work (transition aggregate, probability scaling)
-    * stays distributed either way; only the loop over the collapsed
-    * (distinct src,dst) frame localizes. */
-  val LocalSolveMaxEdges: Long = 1L << 20
 
   /** Fixed-iteration weighted PageRank. Returns `(id, pr)` — `pr` is
     * the scaled LONG rank; only vertices present in `edges` appear.
@@ -86,7 +78,7 @@ object PageRank {
       iterations: Int = 8,
       damping: Int = 85,
       scale: Long = 1000000000L,
-      localSolveMaxEdges: Long = LocalSolveMaxEdges): DataFrame = {
+      localSolveMaxEdges: Long = graft.Lineage.LocalSolveMaxEdges): DataFrame = {
     require(iterations >= 1, "pagerank needs at least one round")
     require(damping > 0 && damping < 100, "damping is a percent in (0, 100)")
     val e = edges
@@ -100,9 +92,7 @@ object PageRank {
       .select(col("src"), col("dst"),
         expr(s"($ProbScale * w) div outw").as("p"))
       .persist()
-    val nEdges = probs.count() // also materializes the persist
-    if (nEdges <= localSolveMaxEdges &&
-      probs.schema("src").dataType == probs.schema("dst").dataType) {
+    if (graft.Lineage.localSolveOrdering(probs, localSolveMaxEdges, "src", "dst").isDefined) {
       val out = localSolve(probs, iterations, damping, scale)
       probs.unpersist()
       return out
@@ -113,9 +103,8 @@ object PageRank {
       .select(col("src").as("id"))
       .persist()
     val base = (100L - damping) * scale / 100L
-    var (rank, releaseRank) = graft.Lineage.checkpointed(
-      verts.select(col("id"), lit(scale).as("pr")))
-    for (_ <- 1 to iterations) {
+    val (rank, release) = graft.Lineage.rounds(graft.Lineage.checkpointed(
+      verts.select(col("id"), lit(scale).as("pr"))), iterations)({ (rank, _) =>
       // per-edge floored contribution, THEN the exact long sum — the
       // floor placement is the cross-engine determinism contract
       val contrib = probs
@@ -123,30 +112,19 @@ object PageRank {
         .groupBy(col("dst").as("id"))
         .agg(sum(expr(s"(${damping}L * pr * p) div ${100L * ProbScale}L"))
           .as("c"))
-      val (next, releaseNext) = graft.Lineage.checkpointed(
-        verts.join(contrib, Seq("id"), "left")
-          .select(col("id"),
-            (lit(base) + coalesce(col("c"), lit(0L))).as("pr")))
-      releaseRank()
-      releaseRank = releaseNext
-      rank = next
-    }
+      Some(verts.join(contrib, Seq("id"), "left")
+        .select(col("id"),
+          (lit(base) + coalesce(col("c"), lit(0L))).as("pr")))
+    }, (_, _) => false)
     probs.unpersist()
     verts.unpersist()
-    // detach the (vertex-sized) result from checkpoint storage so the
-    // caller's ordinary unpersist() frees everything this run allocated
-    val out = rank.persist()
-    out.count()
-    releaseRank()
-    out
+    graft.Lineage.detach(rank, release)
   }
 
   /** Driver-side replica of the distributed loop on the collected
     * collapsed-edge frame — bit-identical by construction: `div` on
     * positive LONGs is the same truncation as Scala `/`, per-edge
-    * floors precede the sums, and LONG addition is order-independent.
-    * Output contract matches [[run]]: persisted, materialized, freed
-    * by `unpersist()`. */
+    * floors precede the sums, and LONG addition is order-independent. */
   private def localSolve(
       probs: DataFrame, iterations: Int, damping: Int, scale: Long): DataFrame = {
     val es = probs.collect().map(r => (r.get(0), r.get(1), r.getLong(2)))
@@ -163,15 +141,8 @@ object PageRank {
       pr.keysIterator.foreach(v => next(v) = base + contrib.getOrElse(v, 0L))
       pr = next
     }
-    val idType = probs.schema("src").dataType
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](pr.size)
-    pr.foreach { case (v, p) => rows.add(org.apache.spark.sql.Row(v, p)) }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", idType),
-      org.apache.spark.sql.types.StructField("pr",
-        org.apache.spark.sql.types.LongType)))
-    val out = probs.sparkSession.createDataFrame(rows, schema).persist()
-    out.count()
-    out
+    graft.Lineage.localResult(probs.sparkSession,
+      pr.toSeq.map { case (v, p) => Row(v, p) },
+      "id" -> probs.schema("src").dataType, "pr" -> LongType)
   }
 }

@@ -1197,8 +1197,10 @@ object CurationQueries {
     * linear, same rows, same bits (the BPE merge CTEs at
     * [[bpeRoundCtes]] learned the identical lesson). */
   private def lrCtes: String = {
+    val rep = REP_CTE.replaceFirst("rep AS \\(", "rep AS MATERIALIZED (")
+    require(rep != REP_CTE, "REP_CTE does not open with `rep AS (`: the MATERIALIZED hint was not applied")
     val sb = new StringBuilder
-    sb ++= s"""WITH ${REP_CTE.replaceFirst("rep AS \\(", "rep AS MATERIALIZED (")},
+    sb ++= s"""WITH $rep,
       feat AS MATERIALIZED (
         SELECT r.doc_id, r.dup_token_frac AS x1, r.dup_bigram_frac AS x2,
                CAST(r.n_tok AS DOUBLE) / 64.0 AS x3,

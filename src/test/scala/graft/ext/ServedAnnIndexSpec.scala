@@ -149,7 +149,7 @@ class ServedAnnIndexSpec extends AnyFunSuite {
     (0L until 10L).foreach { qid =>
       val single = searchOne(idx, queryVec(qid), 20, 4, Some(v), Some(100)).get
         .collect().map(r => (r.getLong(0), math.rint(r.getDouble(1) * 1e9))).toSeq
-      assert(got(qid) == single, s"quantized batch diverged from searchQuantizedAt for query $qid")
+      assert(got(qid) == single, s"quantized query-table search diverged from its one-row search for query $qid")
     }
     val bplan = batch.queryExecution.executedPlan.toString
     assert(bplan.linesIterator.exists(l =>
@@ -184,7 +184,7 @@ class ServedAnnIndexSpec extends AnyFunSuite {
       val single = searchOne(idx, queryVec(qid), 20, 2, Some(v), Some(60)).get
         .collect().map(r => (r.getLong(0), math.rint(r.getDouble(1) * 1e9))).toSeq
       assert(got(qid) == single,
-        s"nAssign=2 batch diverged from searchQuantizedAt for query $qid")
+        s"nAssign=2 quantized query-table search diverged from its one-row search for query $qid")
       // and no vec_id occupies two ranks for one query
       val ids = got(qid).map(_._1)
       assert(ids.distinct.size == ids.size,
@@ -202,7 +202,7 @@ class ServedAnnIndexSpec extends AnyFunSuite {
       val single = searchOne(idx, queryVec(qid), 20, 2, Some(v)).get
         .collect().map(r => (r.getLong(0), math.rint(r.getDouble(1) * 1e9))).toSeq
       assert(fgot(qid) == single,
-        s"nAssign=2 float batch diverged from searchAt for query $qid")
+        s"nAssign=2 float query-table search diverged from its one-row search for query $qid")
     }
 
     // the multiplicity is PERSISTED: a reader handle constructed with
@@ -217,7 +217,7 @@ class ServedAnnIndexSpec extends AnyFunSuite {
       "a default-constructed reader handle let a multi-assigned vector double-rank")
   }
 
-  test("searchBatch == per-query searchAt; one pruned scan; job count independent of Q") {
+  test("query-table search == per-query one-row search; one pruned scan; job count independent of Q") {
     val root = Files.createTempDirectory("graft_served_ann_batch").toString
     val idx = new ServedAnnIndex(root, nCentroids = 16)
     val v = idx.build(emb)
@@ -236,7 +236,7 @@ class ServedAnnIndexSpec extends AnyFunSuite {
     qIds.foreach { q =>
       val single = searchOne(idx, queryVec(q), 20, 4, Some(v)).get.collect()
         .map(r => (r.getLong(0), math.rint(r.getDouble(1) * 1e9))).toSeq
-      assert(got(q) == single, s"query $q diverged from searchAt")
+      assert(got(q) == single, s"query $q diverged from its one-row search")
     }
 
     // ONE scan over the probed-bucket UNION: every file read sits in

@@ -18,7 +18,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   }
 
   private def components(
-      es: Seq[(Long, Long)], localMax: Long = ConnectedComponents.LocalSolveMaxEdges
+      es: Seq[(Long, Long)], localMax: Long = graft.Lineage.LocalSolveMaxEdges
   ): Map[Long, Long] = {
     val labels =
       ConnectedComponents.run(edgesDf(es), "src", "dst", localSolveMaxEdges = localMax)
@@ -79,7 +79,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       val got = l.collect().map(r => r.getString(0) -> r.getString(1)).toMap
       l.unpersist(); got
     }
-    assert(m(ConnectedComponents.LocalSolveMaxEdges) == m(0L))
+    assert(m(graft.Lineage.LocalSolveMaxEdges) == m(0L))
   }
 
   test("self-loops and reversed duplicate edges are harmless") {

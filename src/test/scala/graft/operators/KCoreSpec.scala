@@ -87,4 +87,15 @@ class KCoreSpec extends AnyFunSuite {
     // round 0 already excludes the two null edges: 3 nodes, 6 directed
     assert(local.head == KCore.RoundStat(0, 3L, 6L), local.head)
   }
+
+  test("the distributed peel releases every checkpoint it allocates") {
+    val sc = spark.sparkContext
+    // settle: evict anything a previously-run suite left to the cleaner
+    System.gc()
+    val baseline = sc.getPersistentRDDs.size
+    KCore.peelStats(edges((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)),
+      k = 2, rounds = 3, localSolveMaxEdges = 0L)
+    assert(sc.getPersistentRDDs.size <= baseline,
+      s"leaked persistent RDDs: baseline $baseline, now ${sc.getPersistentRDDs.size}")
+  }
 }

@@ -12,7 +12,7 @@ class PageRankSpec extends AnyFunSuite {
 
   private def prMap(
       es: Seq[(String, String, Long)], iters: Int = 8,
-      localMax: Long = PageRank.LocalSolveMaxEdges): Map[String, Long] = {
+      localMax: Long = graft.Lineage.LocalSolveMaxEdges): Map[String, Long] = {
     val s = spark
     import s.implicits._
     val ranks = PageRank.run(es.toDF("src", "dst", "w"), "src", "dst", "w", iters,
@@ -70,6 +70,27 @@ class PageRankSpec extends AnyFunSuite {
     val dup = Seq(("a", "b", 2L), ("a", "b", 3L), ("b", "a", 4L))
     val summed = Seq(("a", "b", 5L), ("b", "a", 4L))
     assert(prMap(dup) == prMap(summed))
+  }
+
+  test("binary vertex ids take the distributed path — both gates agree") {
+    // Array[Byte] HashMap keys compare by reference, so the driver solve
+    // would split one vertex into several rows with split ranks; the
+    // gate's type whitelist routes binary ids to the distributed rounds
+    val s = spark; import s.implicits._
+    val es = Seq(("a", "b", 1L), ("b", "c", 2L), ("c", "a", 1L), ("a", "c", 3L))
+      .map { case (x, y, w) => (x.getBytes("UTF-8"), y.getBytes("UTF-8"), w) }
+      .toDF("src", "dst", "w")
+    def ranks(gate: Long) = {
+      val r = PageRank.run(es, "src", "dst", "w", 6, localSolveMaxEdges = gate)
+      val got = r.collect()
+        .map(row => new String(row.getAs[Array[Byte]](0), "UTF-8") -> row.getLong(1))
+        .toSeq.sorted
+      r.unpersist()
+      got
+    }
+    val dflt = ranks(graft.Lineage.LocalSolveMaxEdges)
+    assert(dflt == ranks(0L), s"default gate $dflt vs distributed")
+    assert(dflt.map(_._1) == Seq("a", "b", "c"), dflt)
   }
 
   test("releases every block it allocates (checkpoint + cache hygiene)") {

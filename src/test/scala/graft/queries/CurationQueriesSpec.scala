@@ -423,4 +423,12 @@ class CurationQueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(4)))
     assert(out.sameElements(again))
   }
+
+  test("quality_lr_train's oracle SQL materializes the rep CTE") {
+    // the DuckDB chain re-evaluates every non-MATERIALIZED CTE once per
+    // reference; the hint on `rep` is a string rewrite of REP_CTE
+    val sql = SparkEntry.allQueries.find(_.name == "quality_lr_train")
+      .flatMap(_.oracle).get
+    assert(sql.contains("rep AS MATERIALIZED ("), sql.take(200))
+  }
 }

@@ -48,7 +48,7 @@ class LpaSpec extends AnyFunSuite {
       df.unpersist()
       m
     }
-    val local = labelsOf(graft.operators.Lpa.LocalSolveMaxEdges)
+    val local = labelsOf(graft.Lineage.LocalSolveMaxEdges)
     val dist = labelsOf(0L)
     assert(local.nonEmpty && local == dist,
       s"paths diverged: ${local.toSeq.diff(dist.toSeq).take(5)} vs " +
@@ -71,9 +71,24 @@ class LpaSpec extends AnyFunSuite {
       df.unpersist()
       m
     }
-    val local = labelsOf(graft.operators.Lpa.LocalSolveMaxEdges)
+    val local = labelsOf(graft.Lineage.LocalSolveMaxEdges)
     val dist = labelsOf(0L)
     assert(local == dist, s"paths diverged on null input: $local vs $dist")
     assert(!local.keySet.contains(null), "null node leaked into labels")
+  }
+
+  test("the distributed rounds release every block they allocate") {
+    val s = spark; import s.implicits._
+    val sc = spark.sparkContext
+    // settle: evict anything a previously-run suite left to the cleaner
+    System.gc()
+    val baseline = sc.getPersistentRDDs.size
+    val labels = graft.operators.Lpa.run(
+      Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("x", "y"), "x", "y",
+      rounds = 3, localSolveMaxEdges = 0L)
+    assert(labels.count() == 4)
+    labels.unpersist(blocking = true)
+    assert(sc.getPersistentRDDs.size <= baseline,
+      s"leaked persistent RDDs: baseline $baseline, now ${sc.getPersistentRDDs.size}")
   }
 }

@@ -19,7 +19,7 @@ import graft.functions.TextFunctions
 class ShingleHashSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
 
-  for (sf <- Seq("sf0.001", "sf0.01")) {
+  for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
     test(s"xxhash64 has no collisions over $sf's distinct 4-shingles") {
       val dir = s"/root/testdata/$sf"
       assume(new java.io.File(s"$dir/documents.parquet").exists())
