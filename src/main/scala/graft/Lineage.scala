@@ -44,11 +44,19 @@ object Lineage {
     // checkpoint): a second localCheckpoint would only copy the stored
     // blocks into a duplicate set. Reuse the frame as-is with a no-op
     // releaser — the blocks belong to the original owner, which is
-    // exactly why they must NOT be released here.
-    val existing = org.apache.spark.sql.GraftSqlShim.leafRdd(df)
-    if (existing.exists(_.getStorageLevel !=
-        org.apache.spark.storage.StorageLevel.NONE))
-      return (df, () => ())
+    // exactly why they must NOT be released here. A checkpoint leaf
+    // whose blocks were already released has no lineage left to
+    // recompute from: re-checkpointing it fails inside a task (or
+    // silently succeeds while stray blocks remain), so refuse it here.
+    org.apache.spark.sql.GraftSqlShim.leafRdd(df) match {
+      case Some(rdd) if rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE =>
+        return (df, () => ())
+      case Some(rdd) if rdd.isCheckpointed =>
+        throw new IllegalStateException(
+          s"graft.Lineage.checkpointed: checkpoint leaf $rdd was already " +
+            "released; its frame cannot be read")
+      case _ =>
+    }
     // measured-size stats (see SharedFrames.cached): a checkpointed CDC
     // batch is usually tiny, and re-stamping it with its real block
     // bytes lets the planner broadcast it in the refresh's anti/semi
@@ -60,12 +68,12 @@ object Lineage {
     // under concurrent jobs — unlike diffing getPersistentRDDs, which
     // could capture (and later drop) someone else's localCheckpoint
     // blocks, an unrecoverable loss once their lineage is severed.
-    val rdd = org.apache.spark.sql.GraftSqlShim.leafRdd(cp)
-    if (rdd.isEmpty)
-      System.err.println(
-        "graft.Lineage.checkpointed: no LogicalRDD leaf on the " +
-          "checkpointed frame; its blocks will not be released")
-    (cp, () => rdd.foreach(_.unpersist(blocking = false)))
+    val rdd = org.apache.spark.sql.GraftSqlShim.leafRdd(cp).getOrElse(
+      throw new IllegalStateException(
+        "graft.Lineage.checkpointed: the checkpointed frame's leaf is " +
+          s"${cp.queryExecution.analyzed.nodeName}, not a LogicalRDD; " +
+          "its blocks could not be released"))
+    (cp, () => rdd.unpersist(blocking = false))
   }
 
   /** The checkpointed round loop of the iterative graph operators.

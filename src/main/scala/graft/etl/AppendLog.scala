@@ -24,6 +24,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Paths resolve through the Hadoop `FileSystem` of the state path (the
   * [[GenerationStore]] rule), so a qualified `file:`/`hdfs:` path reads
   * the same store the Spark writer appended to.
+  *
+  * The log OWNS its schema: the first append and every compact write
+  * the [[BucketedView.SchemaSidecar]], so [[load]] reads without a
+  * footer-inference job (one bare Spark job per call otherwise), and an
+  * append whose schema differs from it fails before writing. Logs that
+  * predate the sidecar load through inference until their next
+  * compact.
   */
 object AppendLog {
 
@@ -37,13 +44,25 @@ object AppendLog {
     val dir = new Path(statePath)
     val old = new Path(statePath + ".old")
     if (!f.exists(dir) && f.exists(old)) f.rename(old, dir)
-    if (f.exists(dir)) fold(spark.read.parquet(statePath))
+    if (f.exists(dir)) fold(BucketedView.readState(spark, statePath))
     else empty
   }
 
-  /** Append one batch's rows — atomic per batch (parquet append). */
-  def append(rows: DataFrame, statePath: String): Unit =
+  /** Append one batch's rows — atomic per batch (parquet append). The
+    * first append into a fresh log also writes its schema sidecar. */
+  def append(rows: DataFrame, statePath: String): Unit = {
+    val spark = rows.sparkSession
+    val conf = spark.sparkContext.hadoopConfiguration
+    AtomicText.read(new Path(statePath, BucketedView.SchemaSidecar), conf).foreach { json =>
+      val logged = org.apache.spark.sql.types.DataType.fromJson(json)
+      require(GenerationStore.sameTypeIgnoreNullability(logged, rows.schema),
+        s"append to $statePath: batch schema ${rows.schema.simpleString} differs " +
+          s"from the log's ${logged.simpleString}")
+    }
+    val fresh = !fs(spark, statePath).exists(new Path(statePath))
     rows.write.mode("append").parquet(statePath)
+    if (fresh) BucketedView.writeSchemaSidecar(spark, statePath, rows.schema)
+  }
 
   /** Rewrite the append log as one folded snapshot. Swap order is
     * crash-safe on a local/posix fs: snapshot → .tmp, live → .old,
@@ -59,6 +78,7 @@ object AppendLog {
     val dir = new Path(statePath)
     f.delete(tmp, true); f.delete(old, true) // stale leftovers from a past crash
     snap.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    BucketedView.writeSchemaSidecar(spark, tmp.toString, snap.schema)
     snap.unpersist()
     if (f.exists(dir) && !f.rename(dir, old))
       throw new java.io.IOException(s"compact: cannot stage $dir aside")

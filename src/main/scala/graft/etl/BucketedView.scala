@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -54,16 +55,18 @@ import graft.operators.Dedup
   * fired mid-stream interleaves between micro-batches instead of
   * racing one; any serial order converges.
   *
-  * REFRESH (one side's batch), four jobs on a ≤64-bucket store:
+  * REFRESH (one side's batch), four SQL executions on a ≤64-bucket store:
   *
   *   1. batch checkpoint — the batch plan can be arbitrarily expensive
   *      and is read three times; its bucket ids ride the job as an
   *      observed bitmask metric ([[bucketMask]]), not a probe job.
   *   2. fold + flag — the side's dirty buckets (partition-pruned read)
-  *      ∪ batch fold to winners in one bucket-clustered exchange; a
-  *      map-safe JSON-fingerprint compare flags changed rows
-  *      ([[flagChanged]]) and the changed bucket ids ride the checkpoint
-  *      that also severs lineage before the read-overwrite.
+  *      ∪ batch go through ONE bucket-clustered exchange and one window
+  *      pass over (bucket, keys) that picks each key's winner and flags
+  *      it changed against the old row's map-safe JSON fingerprint
+  *      ([[foldFlagged]]: no probe joins, so no broadcast jobs); the
+  *      changed bucket ids ride the checkpoint that also severs lineage
+  *      before the read-overwrite.
   *   3. derive + publish — only CHANGED buckets; a bucket whose fold is
   *      byte-identical is skipped, so a replayed batch publishes NO
   *      generation (the idempotence at-least-once delivery relies on).
@@ -141,20 +144,26 @@ abstract class BucketedView private[etl] (
     df.withColumn(bucketCol,
       pmod(xxhash64(bucketKeys.map(col): _*), lit(nBuckets.toLong)))
 
-  /** One task per bucket before a `partitionBy(bucket)` write: without
-    * it every shuffle task holds rows of every bucket and each write
-    * emits up to tasks×buckets files, a small-file explosion that
-    * compounds per refresh. */
-  private def clustered(df: DataFrame): DataFrame = df.repartition(nBuckets, col(bucketCol))
+  /** Each bucket in exactly one task before a `partitionBy(bucket)`
+    * write: without it every shuffle task holds rows of every bucket and
+    * each write emits up to tasks×buckets files, a small-file explosion
+    * that compounds per refresh. The exchange is hash-on-bucket with NO
+    * fixed count, so AQE sizes it by data: coalescing merges whole hash
+    * partitions, so a task may hold several buckets but a bucket never
+    * spans two tasks — still one file per bucket, without paying
+    * `nBuckets` tasks (each deserializing the writer) for a CDC batch
+    * that fits one. */
+  private def clustered(df: DataFrame): DataFrame = df.repartition(col(bucketCol))
 
   /** Latest-per-key fold whose output is already bucket-clustered: one
-    * exchange serves both the window and the state write
+    * data-sized exchange serves both the window and the state write
     * ([[Dedup.latestByKeyClustered]]; sound because the bucket is
     * constant within a key group, by the second precondition). The
     * clustering survives filter and localCheckpoint physically, so the
-    * refresh's state write needs no second shuffle. */
+    * state write needs no second shuffle, and one bucket per task holds
+    * as for [[clustered]]. */
   private def foldClustered(df: DataFrame, side: Side): DataFrame =
-    Dedup.latestByKeyClustered(df, side.keys, side.order, bucketCol, nBuckets)
+    Dedup.latestByKeyClustered(df, side.keys, side.order, bucketCol)
 
   /** Full initial build of every side's state and the whole view. Each
     * state write IS its fold's materialization (a fresh root has no
@@ -238,13 +247,10 @@ abstract class BucketedView private[etl] (
     val keyScoped =
       statePaths.map(bucketBytes(spark, _, bucketCol, buckets)).sum >= keyScopeMinStateBytes
     val oldState = readState(spark, statePath).filter(col(bucketCol).isin(buckets: _*))
-    val batchKeys = b.select(keys.map(col): _*).distinct()
     // resolved with the fold, BEFORE any write, while oldState's input
-    // files are intact; the broadcast probes keep the fold's bucket
+    // files are intact; the window pass keeps the fold's bucket
     // clustering intact to the state write
-    val flagged0 = flagChanged(
-      foldClustered(oldState.unionByName(b.select(oldState.columns.map(col): _*)), sides(side)),
-      oldState, batchKeys, keys, bucketCol)
+    val flagged0 = foldFlagged(oldState, b, keys, sides(side).order, bucketCol)
     val flagged =
       if (mask) flagged0.observe("graft_mv_changed", bucketMask(bucketCol, col(ChangedCol)))
       else flagged0
@@ -373,55 +379,54 @@ object BucketedView {
     }.sum
   }
 
-  /** Marker column [[flagChanged]] appends: true exactly on the
+  /** Marker column [[foldFlagged]] appends: true exactly on the
     * new-state rows whose latest-per-key fold CHANGED anything. */
   private[graft] val ChangedCol = "__mv_changed"
 
-  /** `newState` plus [[ChangedCol]]: true on rows whose key appears in
-    * `batchKeys` (the per-key fold can only change those) AND whose
-    * fingerprint is absent from the old state (the fold never drops a
-    * key, so new-minus-old captures every insert and update).
+  /** The refresh fold: the latest row per `keys` of `oldState` ∪ `batch`
+    * (one row per key, `bucketCol`-clustered like
+    * [[Dedup.latestByKeyClustered]]) plus [[ChangedCol]] — true iff the
+    * key is in the batch (the per-key fold can change no other) AND the
+    * winner's fingerprint differs from the old row's, or there is no old
+    * row (the fold never drops a key, so that captures every insert and
+    * update).
+    *
+    * ONE hash exchange on `bucketCol` and window aggregates over
+    * `(bucket, keys)`: `row_number` under `order` picks the winner, a
+    * whole-frame OR of the batch tag says whether the key is in the
+    * batch, and a whole-frame max carries the OLD row's fingerprint —
+    * computed only for keys in the batch, so a dirty bucket's untouched
+    * keys are never serialized. Window partitioning groups NULL keys like
+    * any value, so the flag is null-safe with no join. Every window
+    * function here has a whole-partition frame or depends on one, so
+    * Spark plants no WindowGroupLimit that would drop the old row
+    * before its fingerprint is read.
     *
     * The fingerprint is the row's JSON (columns in sorted name order,
     * nulls KEPT so the encoding is injective per schema), not a raw-row
-    * set operation: Spark set operations reject MapType columns, and
-    * state schemas in the reference family carry JSONB-style maps. A map
-    * whose physical entry order differs can only FALSELY REPORT a change
-    * (a wasted republish), never hide one. LEFT probe joins, not
-    * `exceptAll`: fingerprints embed their key, so each side is unique
-    * per (bucket, json), and the joins stay whole-stage-codegen where
-    * exceptAll plans an interpreted Generate (PlanAuditSpec's heavies
-    * audit). Both probe sides are BROADCAST by hint — the batch is
-    * CDC-bounded — so the flag rides the fold's checkpoint job as narrow
-    * operators and the fold's bucket clustering survives to the state
-    * write. `batchKeys` must be DISTINCT, or the probe would duplicate
-    * state rows. */
-  private[graft] def flagChanged(
-      newState: DataFrame, oldState: DataFrame, batchKeys: DataFrame,
-      keys: Seq[String], bucketCol: String): DataFrame = {
-    def rowJson(df: DataFrame) = to_json(
-      struct(df.columns.filter(_ != bucketCol).sorted.map(col): _*),
+    * compare: state schemas in the reference family carry JSONB-style
+    * maps, which Spark cannot compare for equality. A map whose physical
+    * entry order differs can only FALSELY REPORT a change (a wasted
+    * republish), never hide one. */
+  private[graft] def foldFlagged(
+      oldState: DataFrame, batch: DataFrame, keys: Seq[String], order: Seq[Column],
+      bucketCol: String): DataFrame = {
+    val cols = oldState.columns
+    val rowJson = to_json(struct(cols.filter(_ != bucketCol).sorted.map(col): _*),
       Map("ignoreNullFields" -> "false"))
-    val renamed = keys.map(k => s"__mvk_$k")
-    val inBatch = broadcast(batchKeys.select(keys.map(col): _*).toDF(renamed: _*)
-      .withColumn("__mv_in_batch", lit(true)))
-    val old = semiOnKeys(oldState, batchKeys, keys)
-    // cast: a store read back through partition-column type inference can
-    // carry the bucket as int while the in-flight side computes a long
-    val oldFp = broadcast(old.select(col(bucketCol).cast("long").as(bucketCol),
-      rowJson(old).as("__mv_row_json"), lit(true).as("__mv_seen")))
-    newState
-      .withColumn(bucketCol, col(bucketCol).cast("long"))
-      .join(inBatch,
-        keys.zip(renamed).map { case (l, r) => col(l) <=> col(r) }.reduce(_ && _),
-        "left")
-      .drop(renamed: _*)
-      // fingerprint ONLY in-batch rows; a null join key matches nothing
-      .withColumn("__mv_row_json", when(col("__mv_in_batch"), rowJson(newState)))
-      .join(oldFp, Seq(bucketCol, "__mv_row_json"), "left")
-      .withColumn(ChangedCol,
-        coalesce(col("__mv_in_batch"), lit(false)) && col("__mv_seen").isNull)
-      .drop("__mv_in_batch", "__mv_row_json", "__mv_seen")
+    val byKey = Window.partitionBy((bucketCol +: keys).map(col): _*).orderBy(order: _*)
+    val wholeKey = byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    oldState.withColumn("__mv_from_batch", lit(false))
+      .unionByName(batch.select(cols.map(col): _*).withColumn("__mv_from_batch", lit(true)))
+      .repartition(col(bucketCol))
+      .withColumn("__mv_rn", row_number().over(byKey))
+      .withColumn("__mv_in_batch", max(col("__mv_from_batch")).over(wholeKey))
+      .withColumn("__mv_old_json",
+        max(when(col("__mv_in_batch") && !col("__mv_from_batch"), rowJson)).over(wholeKey))
+      .filter(col("__mv_rn") === 1)
+      .withColumn(ChangedCol, col("__mv_in_batch") &&
+        (col("__mv_old_json").isNull || col("__mv_old_json") =!= rowJson))
+      .drop("__mv_rn", "__mv_from_batch", "__mv_in_batch", "__mv_old_json")
   }
 
   /** Times [[observedBuckets]] found no metric and a refresh fell back

@@ -42,11 +42,14 @@ object Dedup {
     * and hash-partitioning on `clusterCol` alone already satisfies
     * that window's clustered distribution, so Spark plans no second
     * exchange (verified: 1 Exchange in the executed plan). At 100 TB
-    * this halves the shuffled bytes of every state materialization. */
+    * this halves the shuffled bytes of every state materialization.
+    * The exchange carries no fixed partition count, so AQE sizes it by
+    * data (coalescing small partitions); coalescing merges whole hash
+    * partitions, so each `clusterCol` value still lands in one task. */
   def latestByKeyClustered(df: DataFrame, keys: Seq[String], order: Seq[Column],
-      clusterCol: String, numPartitions: Int): DataFrame = {
+      clusterCol: String): DataFrame = {
     val w = Window.partitionBy((clusterCol +: keys).map(col): _*).orderBy(order: _*)
-    df.repartition(numPartitions, col(clusterCol))
+    df.repartition(col(clusterCol))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")

@@ -172,6 +172,76 @@ class MaterializedViewSpec extends AnyFunSuite {
     }
   }
 
+  /** Runs `body` under a listener; returns, per job description, the
+    * number of scheduler jobs and the task count of every stage that ran. */
+  private def jobsByLabel(body: => Unit): Map[String, (Int, Seq[Int])] = {
+    import scala.jdk.CollectionConverters._
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val stageLabel = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val stageTasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val label = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        jobs.put(js.jobId, label)
+        js.stageIds.foreach(stageLabel.put(_, label))
+      }
+      override def onStageCompleted(
+          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stageTasks.put(sc.stageInfo.stageId, sc.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.GraftCoreShim.flushListeners(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val tasks = stageTasks.asScala.toSeq.groupBy { case (st, _) => stageLabel.get(st) }
+    jobs.asScala.values.groupBy(identity).map { case (label, js) =>
+      label -> (js.size, tasks.getOrElse(label, Seq.empty).map(_._2))
+    }
+  }
+
+  test("fold+flag runs at most 2 scheduler jobs: one exchange, no broadcast probes") {
+    // the fold and the change flag share one bucket exchange and one
+    // window pass; each broadcast probe the flag once joined against was
+    // a job of its own (6 per fold+flag before the fusion)
+    val (_, mv) = mk()
+    mv.build(rows((1L, 1L, false, "a1"), (2L, 1L, false, "b1")))
+    val shapes = ("mv", () => mv.refresh(rows((1L, 2L, false, "a2"), (9L, 1L, false, "j1")))) +:
+      twoSidedRefreshes().map { case (_, r) => ("av", r) }
+    for ((phase, refresh) <- shapes) {
+      val fold = jobsByLabel(refresh()).get(s"$phase:refresh fold+flag").map(_._1)
+      assert(fold.exists(n => n >= 1 && n <= 2),
+        s"$phase fold+flag ran ${fold.getOrElse(0)} jobs; the ceiling is 2")
+    }
+  }
+
+  test("a small multi-bucket refresh writes with fewer tasks than buckets, one file per bucket") {
+    // the refresh exchanges are sized by data, not pinned to nBuckets:
+    // a CDC batch that fits one task is written by one task, and AQE's
+    // coalescing keeps each bucket inside a single task, so every
+    // rewritten bucket partition still holds exactly one file
+    def bucketFiles(dir: String): Map[String, Int] =
+      new java.io.File(dir).listFiles().filter(_.getName.startsWith("__mv_bucket="))
+        .map(b => b.getName -> b.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    val (root, mv) = mk(nBuckets = 8)
+    mv.build(rows((1L to 40L).map(i => (i % 12, i, false, s"p$i")): _*))
+    val byLabel = jobsByLabel(
+      mv.refresh(rows((0L until 12L).map(k => (k, 99L, false, s"r$k")): _*)))
+    val rewritten = bucketFiles(s"$root/state")
+    assert(rewritten.size >= 3, s"fixture should span several buckets: $rewritten")
+    for (label <- Seq("mv:refresh derive+publish", "mv:refresh state-write")) {
+      val tasks = byLabel.get(label).map(_._2).getOrElse(Seq.empty)
+      assert(tasks.nonEmpty && tasks.forall(_ < rewritten.size),
+        s"$label ran stages of $tasks tasks for ${rewritten.size} buckets")
+    }
+    assert(rewritten.values.forall(_ == 1), s"state left multi-file buckets: $rewritten")
+    val gens = new java.io.File(s"$root/view").listFiles().filter(_.isDirectory)
+      .flatMap(g => bucketFiles(g.getPath).values)
+    assert(gens.nonEmpty && gens.forall(_ == 1), "a view generation left multi-file buckets")
+    assert(viewMap(mv) == (0L until 12L).map(k => k -> (s"r$k", 990L)).toMap)
+  }
+
   test("a winner turning soft-deleted disappears from the view (even emptying its bucket)") {
     // nBuckets=1: every key shares one bucket, so the delete case also
     // exercises partition replacement when rows remain; the second mv

@@ -73,7 +73,7 @@ class OperatorsSpec extends AnyFunSuite {
       .toDF("k", "ver", "v")
       .withColumn("__b", pmod(xxhash64(col("k")), lit(4L)))
     val fused = Dedup.latestByKeyClustered(
-      df, Seq("k"), Seq(col("ver").desc, col("v").asc), "__b", 4)
+      df, Seq("k"), Seq(col("ver").desc, col("v").asc), "__b")
     val plain = Dedup.latestByKey(df, Seq("k"), Seq(col("ver").desc, col("v").asc))
     assert(rows(fused.select("k", "v")) == rows(plain.select("k", "v")))
     // the fusion's whole point: hash-on-bucket satisfies the window's

@@ -55,6 +55,46 @@ class EventSinkSpec extends AnyFunSuite {
     }
   }
 
+  test("ProcessedIds loads through its schema sidecar: no inference job, .old recovery reads") {
+    val spark0 = spark
+    import spark0.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft-state5").toString + "/processed"
+    // jobs with no SQL execution id whose stage is a `parquet at` read are
+    // footer schema inference, the job the sidecar exists to remove
+    def inferenceJobs(body: => Set[Long]): (Set[Long], Int) = {
+      val bare = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(js.properties).flatMap(p =>
+                Option(p.getProperty("spark.sql.execution.id"))).isEmpty &&
+              js.stageInfos.exists(_.name.contains("parquet at")))
+            bare.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val out = body
+        org.apache.spark.GraftCoreShim.flushListeners(spark.sparkContext)
+        (out, bare.get)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    def load() = EventSink.ProcessedIds.load(spark, path, "event_id")
+      .collect().map(_.getLong(0)).toSet
+    EventSink.ProcessedIds.append(Seq(1L, 2L).toDF("event_id"), path)
+    EventSink.ProcessedIds.append(Seq(2L, 3L).toDF("event_id"), path)
+    assert(inferenceJobs(load()) == (Set(1L, 2L, 3L), 0))
+    // a compact that died between its renames leaves only `.old`; load
+    // restores it and still reads through the sidecar
+    EventSink.ProcessedIds.compact(spark, path, "event_id")
+    val dir = new java.io.File(path)
+    assert(dir.renameTo(new java.io.File(path + ".old")))
+    assert(inferenceJobs(load()) == (Set(1L, 2L, 3L), 0))
+    // an append whose schema differs from the log's fails before writing
+    val e = intercept[IllegalArgumentException](
+      EventSink.ProcessedIds.append(Seq("x").toDF("event_id"), path))
+    assert(e.getMessage.contains("differs from the log"))
+    assert(load() == Set(1L, 2L, 3L))
+  }
+
   test("deliverBatchIdempotent: string ids bootstrap cleanly, in-batch dups and null ids excluded") {
     val spark0 = spark
     import spark0.implicits._
