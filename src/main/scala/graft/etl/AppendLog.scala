@@ -3,50 +3,56 @@ package graft.etl
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The append-log state mechanism shared by every small cross-batch
-  * state store: appends are atomic-per-batch parquet writes, reads FOLD
-  * the whole log through a store-specific collapse (distinct for an id
-  * set, bitwise-OR for a bloom bitset), and [[compact]] rewrites the
-  * log as one folded snapshot with a crash-safe swap.
+/** The append-log state mechanism shared by the set-like cross-batch
+  * state stores: appends are atomic-per-batch parquet writes into the
+  * log directory, reads FOLD the log through a store-specific collapse
+  * (distinct for an id set, bitwise-OR for a bloom bitset), and
+  * [[compact]] folds the appends into one snapshot.
   *
   * Extracted from [[graft.sinks.EventSink.ProcessedIds]] (which now
   * delegates here) when [[graft.operators.BloomDedup]] needed the same
   * discipline for its bitset state — the load/append/compact dance must
-  * not drift between stores, and the crash-recovery contract is pinned
-  * once: a compact that died between its two renames leaves the
-  * previous snapshot at `<path>.old`, and [[load]] restores it rather
-  * than silently starting empty.
+  * not drift between stores.
   *
-  * The fold MUST be idempotent over re-appended rows (set-union,
-  * bitwise-OR): that is what makes at-least-once replay of a state
-  * append harmless, and what makes compact ≡ no-compact for readers.
+  * The snapshot is a single-bucket [[GenerationStore]] in the
+  * `_snapshot.parquet` child (a parquet dataset directory, named like
+  * the lake's tables; `_`-prefixed, so Spark's listing of the log
+  * directory skips it). It commits through the store's manifest swap,
+  * and [[load]] folds snapshot ∪ appends. The fold MUST be idempotent over
+  * re-appended rows (set-union, bitwise-OR): that is what makes
+  * at-least-once replay of a state append harmless, what makes
+  * compact ≡ no-compact for readers, and what makes a compact that died
+  * between its publish and its delete of the folded appends harmless
+  * (those rows fold twice until the next compact removes them).
   *
   * Paths resolve through the Hadoop `FileSystem` of the state path (the
   * [[GenerationStore]] rule), so a qualified `file:`/`hdfs:` path reads
   * the same store the Spark writer appended to.
   *
-  * The log OWNS its schema: the first append and every compact write
-  * the [[BucketedView.SchemaSidecar]], so [[load]] reads without a
-  * footer-inference job (one bare Spark job per call otherwise), and an
-  * append whose schema differs from it fails before writing. Logs that
-  * predate the sidecar load through inference until their next
-  * compact.
+  * The log OWNS its schema: the first append writes the
+  * [[BucketedView.SchemaSidecar]] (the snapshot store keeps its own), so
+  * [[load]] reads without a footer-inference job (one bare Spark job per
+  * call otherwise), and an append whose schema differs from it fails
+  * before writing. Logs that predate the sidecar load through inference
+  * until their next compact.
   */
 object AppendLog {
 
   private def fs(spark: SparkSession, statePath: String): FileSystem =
     new Path(statePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  private def snapshot(statePath: String): GenerationStore =
+    GenerationStore.single(s"$statePath/_snapshot.parquet")
+
   /** Read the folded state; `empty` bootstraps a missing store. */
   def load(spark: SparkSession, statePath: String,
-      fold: DataFrame => DataFrame, empty: => DataFrame): DataFrame = {
-    val f = fs(spark, statePath)
-    val dir = new Path(statePath)
-    val old = new Path(statePath + ".old")
-    if (!f.exists(dir) && f.exists(old)) f.rename(old, dir)
-    if (f.exists(dir)) fold(BucketedView.readState(spark, statePath))
-    else empty
-  }
+      fold: DataFrame => DataFrame, empty: => DataFrame): DataFrame =
+    if (!fs(spark, statePath).exists(new Path(statePath))) empty
+    else fold(withSnapshot(spark, statePath, BucketedView.readState(spark, statePath)))
+
+  private def withSnapshot(
+      spark: SparkSession, statePath: String, appends: DataFrame): DataFrame =
+    snapshot(statePath).read(spark).fold(appends)(_.unionByName(appends))
 
   /** Append one batch's rows — atomic per batch (parquet append). The
     * first append into a fresh log also writes its schema sidecar. */
@@ -64,28 +70,25 @@ object AppendLog {
     if (fresh) BucketedView.writeSchemaSidecar(spark, statePath, rows.schema)
   }
 
-  /** Rewrite the append log as one folded snapshot. Swap order is
-    * crash-safe on a local/posix fs: snapshot → .tmp, live → .old,
-    * .tmp → live, drop .old. Every failure mode leaves either the live
-    * dir or .old intact, and [[load]] knows to restore .old. */
+  /** Fold snapshot ∪ appends into one file, publish it as the snapshot's
+    * next generation, then delete exactly the append files the fold
+    * read (an append landing meanwhile stays for the next compact). A
+    * crash anywhere leaves every row readable: before the publish the
+    * old snapshot and the appends serve; after it, the idempotent fold
+    * absorbs the appends not yet deleted. No-op when nothing was
+    * appended since the last compact. */
   def compact(spark: SparkSession, statePath: String,
-      fold: DataFrame => DataFrame, empty: => DataFrame): Unit = {
-    val snap = load(spark, statePath, fold, empty).cache()
-    snap.count() // materialize before touching the live dir
-    val f = fs(spark, statePath)
-    val tmp = new Path(statePath + ".tmp")
-    val old = new Path(statePath + ".old")
-    val dir = new Path(statePath)
-    f.delete(tmp, true); f.delete(old, true) // stale leftovers from a past crash
-    snap.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    BucketedView.writeSchemaSidecar(spark, tmp.toString, snap.schema)
-    snap.unpersist()
-    if (f.exists(dir) && !f.rename(dir, old))
-      throw new java.io.IOException(s"compact: cannot stage $dir aside")
-    if (!f.rename(tmp, dir)) {
-      f.rename(old, dir) // roll back to the previous snapshot
-      throw new java.io.IOException(s"compact: cannot activate $tmp")
+      fold: DataFrame => DataFrame): Unit =
+    if (fs(spark, statePath).exists(new Path(statePath))) {
+      val appends = BucketedView.readState(spark, statePath)
+      val folded = appends.inputFiles
+      if (folded.nonEmpty) {
+        snapshot(statePath).replace(
+          fold(withSnapshot(spark, statePath, appends)).coalesce(1))
+        // a log that predates the sidecar gets one before its appends go
+        BucketedView.writeSchemaSidecar(spark, statePath, appends.schema)
+        val f = fs(spark, statePath)
+        folded.foreach(p => f.delete(new Path(p), false))
+      }
     }
-    f.delete(old, true)
-  }
 }

@@ -310,6 +310,12 @@ final class GenerationStore(
     nextGen
   }
 
+  /** Single-bucket use: `rows` (no bucket column) become the whole
+    * store's next generation — the commit path of the small cross-batch
+    * state stores. Returns the committed generation. */
+  private[graft] def replace(rows: DataFrame): Long =
+    publish(rows.withColumn(bucketCol, org.apache.spark.sql.functions.lit(0L)), Seq(0L))
+
   private def liveSchemaJson(spark: SparkSession): Option[String] =
     commit.read(new Path(root, BucketedView.SchemaSidecar), conf(spark))
 
@@ -443,6 +449,12 @@ final class GenerationStore(
 }
 
 object GenerationStore {
+
+  /** A store with one bucket ([[GenerationStore.replace]] publishes it
+    * whole): [[graft.streaming.BudgetGate]] state, [[AppendLog]]
+    * snapshots, [[graft.streaming.IdentityComponents]]. */
+  private[graft] def single(root: String): GenerationStore =
+    new GenerationStore(root, "__store_bucket")
 
   /** Structural type equality with nullability masked at every level —
     * the evolution check's comparator. A refresh batch routinely

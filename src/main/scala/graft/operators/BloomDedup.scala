@@ -132,10 +132,11 @@ object BloomDedup {
 
   /** The CROSS-BATCH bitset state as an [[graft.etl.AppendLog]] store:
     * each micro-batch appends its (word, bits) rows; reads fold the log
-    * with the bitwise-OR groupBy; compact rewrites it as ≤ [[Words]]
+    * with the bitwise-OR groupBy; compact folds it into ≤ [[Words]]
     * rows. The fold is idempotent over re-appended rows (OR), so an
-    * at-least-once replay of a state append changes nothing — the
-    * crash-safety contract the streaming screen leans on. */
+    * at-least-once replay of a state append (or of a compact's fold)
+    * changes nothing — the crash-safety contract the streaming screen
+    * leans on. */
   object State {
     private def empty(spark: org.apache.spark.sql.SparkSession): DataFrame = {
       import org.apache.spark.sql.types._
@@ -154,6 +155,6 @@ object BloomDedup {
       graft.etl.AppendLog.append(bitset, statePath)
 
     def compact(spark: org.apache.spark.sql.SparkSession, statePath: String): Unit =
-      graft.etl.AppendLog.compact(spark, statePath, fold, empty(spark))
+      graft.etl.AppendLog.compact(spark, statePath, fold)
   }
 }

@@ -24,7 +24,7 @@ import graft.views.Customer360
   */
 object DomainQueries {
 
-  private val asOf = lit("2024-06-01").cast("date")
+  private[graft] val asOf = lit("2024-06-01").cast("date")
 
   /** Oracle-unambiguous output types; see Q's determinism rules. */
   private[queries] def pinTypes(df: DataFrame): DataFrame = pin(df)
@@ -47,7 +47,7 @@ object DomainQueries {
 
   /** customer_master-shaped rows: one version per order (dedup fodder),
     * dirty contact data, soft-delete flags. Also feeds PipelineQueries. */
-  private[queries] def customerMaster(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def customerMaster(s: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(s, dir)
     val c = Tables.customer(s, dir)
     val k = col("o_custkey")
@@ -109,7 +109,7 @@ object DomainQueries {
 
   /** vehicle_sales-shaped rows: one deal per order plus a modified later
     * version for every 4th deal (latest-version-wins fodder). */
-  private[queries] def vehicleSales(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def vehicleSales(s: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(s, dir)
     val k = col("o_orderkey")
     val base = o.select(

@@ -114,7 +114,10 @@ object EventSink {
     * JSON state file (`lambda:97-135`: load set, union, save). Parquet
     * append keeps writes cheap and atomic-per-batch; reads are a
     * distributed distinct (never a driver-side set); [[compact]] folds
-    * the append log back to one file set when it fragments. */
+    * the append log into one snapshot when it fragments. The log, its
+    * snapshot commit and the fold are [[graft.etl.AppendLog]]'s — ONE
+    * definition shared with the other append-log state stores (see its
+    * scaladoc). */
   object ProcessedIds {
 
     /** `idType` types the EMPTY bootstrap frame (no state dir yet). It
@@ -122,9 +125,6 @@ object EventSink {
       * the first batch's anti-join insert a cast on the key — under
       * ANSI mode a string messageId vs the old hardcoded bigint threw
       * NumberFormatException on the very first delivery. */
-    /** Crash recovery and the fold (a distinct over the append log) are
-      * [[graft.etl.AppendLog]]'s — ONE definition shared with the other
-      * append-log state stores (see its scaladoc). */
     def load(spark: SparkSession, statePath: String, idCol: String,
         idType: org.apache.spark.sql.types.DataType =
           org.apache.spark.sql.types.LongType): DataFrame =
@@ -136,14 +136,9 @@ object EventSink {
     def append(ids: DataFrame, statePath: String): Unit =
       graft.etl.AppendLog.append(ids, statePath)
 
-    /** Rewrite the append log as one deduplicated snapshot
+    /** Fold the append log into one deduplicated snapshot
       * (crash-safety: [[graft.etl.AppendLog.compact]]). */
-    def compact(spark: SparkSession, statePath: String, idCol: String,
-        idType: org.apache.spark.sql.types.DataType =
-          org.apache.spark.sql.types.LongType): Unit =
-      graft.etl.AppendLog.compact(spark, statePath,
-        fold = _.select(idCol).distinct(),
-        empty = spark.emptyDataFrame
-          .withColumn(idCol, lit(null).cast(idType)).limit(0))
+    def compact(spark: SparkSession, statePath: String, idCol: String): Unit =
+      graft.etl.AppendLog.compact(spark, statePath, fold = _.select(idCol).distinct())
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.etl.GenerationStore
 import graft.functions.TextFunctions
 
 /** Streaming token-budget admission — the per-stratum quota of
@@ -14,9 +15,12 @@ import graft.functions.TextFunctions
   *
   * Within a batch the running sum is [[graft.operators.PrefixSum]]
   * (bounded tasks even when one source dominates a batch); the state is
-  * one row per stratum (bounded metadata), read once per batch and
-  * overwritten behind an eager checkpoint — the same read-overwrite
-  * discipline as the event sink and corpus ingest.
+  * one row per stratum (bounded metadata) in a single-bucket
+  * [[GenerationStore]]: each batch reads the committed generation and
+  * publishes the new state as a fresh one behind an atomic manifest
+  * swap, so the write never replaces files the read holds, and a failed
+  * write leaves the previous state serving (a lost state would restart
+  * every stratum at 0 and admit a second full budget).
   *
   * Replay safety: admission mutates state, so the gate must sit AFTER
   * an idempotence boundary — in the [[CorpusIngest]] pipeline that is
@@ -41,65 +45,45 @@ object BudgetGate {
     val spark = batch.sparkSession
     val input = batch.count()
     val prior = readState(spark, statePath, sourceCol)
-    val ranked = graft.operators.PrefixSum.runningSum(
-        batch.withColumn("__tok", TextFunctions.tokenCount(col(textCol))),
-        Seq(sourceCol), Seq(col(idCol)), col("__tok"), "__cum_in_batch")
-      .join(prior, Seq(sourceCol), "left")
-      .withColumn("__cum_total",
-        col("__cum_in_batch") + coalesce(col("__cum_tokens"), lit(0L)))
-    val admitted = ranked.filter(col("__cum_total") <= budget)
-    // new state = per-source high water of admitted totals, carrying
-    // forward untouched strata; checkpoint severs the read of the
-    // directory the write below replaces
-    val (newState, release) = graft.Lineage.checkpointed(
-      prior.join(
-          admitted.groupBy(sourceCol)
-            .agg(max(col("__cum_total")).as("__batch_cum")),
-          Seq(sourceCol), "full_outer")
-        .select(col(sourceCol),
-          greatest(coalesce(col("__cum_tokens"), lit(0L)),
-            coalesce(col("__batch_cum"), lit(0L))).as("__cum_tokens")))
+    // computed once: the returned rows and the new state both derive
+    // from this checkpoint
+    val (admitted, release) = graft.Lineage.checkpointed(
+      graft.operators.PrefixSum.runningSum(
+          batch.withColumn("__tok", TextFunctions.tokenCount(col(textCol))),
+          Seq(sourceCol), Seq(col(idCol)), col("__tok"), "__cum_in_batch")
+        .join(prior, Seq(sourceCol), "left")
+        .withColumn("__cum_total",
+          col("__cum_in_batch") + coalesce(col("__cum_tokens"), lit(0L)))
+        .filter(col("__cum_total") <= budget))
     try {
-      val (out, releaseOut) = graft.Lineage.checkpointed(
-        admitted.select(batch.columns.map(col): _*))
-      try {
-        newState.write.mode("overwrite").parquet(statePath)
-        val n = out.count()
-        // the returned frame is detached from both the state dir and
-        // the batch plan; persist through the cache manager so the
-        // caller's unpersist() releases it (checkpoint blocks released
-        // here, in the finally)
-        val pinned = out.persist()
-        pinned.count()
-        (pinned, GateStats(input, n, input - n))
-      } finally releaseOut()
+      // new state = per-source high water of admitted totals, carrying
+      // forward untouched strata
+      GenerationStore.single(statePath).replace(
+        prior.join(
+            admitted.groupBy(sourceCol)
+              .agg(max(col("__cum_total")).as("__batch_cum")),
+            Seq(sourceCol), "full_outer")
+          .select(col(sourceCol),
+            greatest(coalesce(col("__cum_tokens"), lit(0L)),
+              coalesce(col("__batch_cum"), lit(0L))).as("__cum_tokens")))
+      // persisted through the cache manager so the caller's unpersist()
+      // releases it; the checkpoint blocks are released in the finally
+      val out = admitted.select(batch.columns.map(col): _*).persist()
+      val n = out.count()
+      (out, GateStats(input, n, input - n))
     } finally release()
   }
 
-  /** The persistent `(sourceCol, __cum_tokens)` state, empty on first
-    * use (schema built rather than inferred: a partitioned write of
-    * zero rows leaves nothing to infer from). */
+  /** The persistent `(sourceCol, __cum_tokens)` state, read through the
+    * store's schema sidecar; empty on first use (schema built rather
+    * than inferred: a publish of zero rows leaves no files). */
   def readState(
       spark: SparkSession, statePath: String, sourceCol: String): DataFrame =
-    if (hasParquet(spark, statePath))
-      spark.read.parquet(statePath)
-    else {
+    GenerationStore.single(statePath).read(spark).getOrElse {
       import org.apache.spark.sql.types._
       spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
         StructType(Seq(StructField(sourceCol, StringType),
           StructField("__cum_tokens", LongType))))
     }
-
-  /** Resolved through the path's Hadoop `FileSystem`, so a qualified
-    * `file:`/`hdfs:` state path is found like a bare one. */
-  private def hasParquet(spark: SparkSession, statePath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(statePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && {
-      val files = fs.listFiles(p, true)
-      Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
-        .exists(_.getPath.getName.endsWith(".parquet"))
-    }
-  }
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.etl.AtomicText
+import graft.etl.GenerationStore
 import graft.operators.ConnectedComponents
 
 /** Continuously-maintained identity components — the streaming shell
@@ -14,38 +13,34 @@ import graft.operators.ConnectedComponents
   * CONTINUOUSLY instead of nightly, at batch-sized incremental cost.
   *
   * Crash contract (the CorpusIngest posture, simplified by algebra):
-  * state generations are immutable parquet dirs (`gen=N/`) named by an
-  * [[AtomicText]] `_CURRENT` marker — write the new generation fully,
-  * THEN swap the marker. A crash before the swap leaves the old map
-  * serving; a replay re-applies the batch. No processed-batch ledger
-  * is needed, because folding a batch in is IDEMPOTENT — merging edges
-  * already inside their components is a no-op — so at-least-once
-  * delivery converges without dedup (pinned in
-  * `IdentityComponentsStreamSpec`, including the double-apply case).
+  * the map is a single-bucket [[GenerationStore]] — each batch writes a
+  * new immutable generation fully, THEN swaps the store's manifest. A
+  * crash before the swap leaves the old map serving; a replay
+  * re-applies the batch. No processed-batch ledger is needed, because
+  * folding a batch in is IDEMPOTENT — merging edges already inside
+  * their components is a no-op — so at-least-once delivery converges
+  * without dedup (pinned in `IdentityComponentsStreamSpec`, including
+  * the double-apply case). The store keeps the committed and the
+  * previous generation (the widest window a concurrent reader can
+  * straddle); each publish collects older ones and crashed partials.
   *
   * 100 TB design: per batch, the delta CC runs on component-collapsed
   * METADATA (≤ batch edges); the full map is rewritten once per batch
-  * — at the scale where that rewrite dominates, shard the map with
-  * [[graft.etl.GenerationStore]]'s bucketed protocol and rewrite only
-  * buckets holding relabeled components (same manifest algebra, per
-  * bucket); the previous generation is pruned after each swap. */
+  * — at the scale where that rewrite dominates, shard the map over the
+  * store's buckets and republish only buckets holding relabeled
+  * components (same manifest algebra, per bucket). */
 object IdentityComponents {
 
-  private def markerPath(statePath: String) = new Path(statePath, "_CURRENT")
-  private def genDir(statePath: String, g: Long) = s"$statePath/gen=$g"
-
   /** Hook for crash-window tests: runs after the new generation is
-    * fully written, before the marker swap. */
+    * fully written, before the manifest swap. */
   @volatile var onBeforeSwap: () => Unit = () => ()
 
   def currentGen(spark: SparkSession, statePath: String): Option[Long] =
-    AtomicText.read(markerPath(statePath),
-      spark.sessionState.newHadoopConf()).map(_.trim.toLong)
+    GenerationStore.single(statePath).manifest(spark).flatMap(_.get(0L))
 
   /** The served component map, exactly as last committed. */
   def labels(spark: SparkSession, statePath: String): Option[DataFrame] =
-    currentGen(spark, statePath)
-      .map(g => spark.read.parquet(genDir(statePath, g)))
+    GenerationStore.single(statePath).read(spark)
 
   /** Fold one micro-batch of edges into the persisted map; returns the
     * committed generation. First batch bootstraps with a full CC. */
@@ -55,8 +50,6 @@ object IdentityComponents {
       srcCol: String,
       dstCol: String,
       statePath: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val cur = currentGen(spark, statePath)
     val (upd, release) = labels(spark, statePath) match {
       case Some(l) =>
         ConnectedComponents.incrementalMerge(l, batchEdges, srcCol, dstCol)
@@ -64,21 +57,8 @@ object IdentityComponents {
         val full = ConnectedComponents.run(batchEdges, srcCol, dstCol)
         (full, () => { full.unpersist(); () })
     }
-    val next = cur.map(_ + 1).getOrElse(0L)
-    try {
-      // full new generation on disk FIRST; the old marker still serves
-      upd.write.mode("overwrite").parquet(genDir(statePath, next))
-      onBeforeSwap()
-      AtomicText.write(markerPath(statePath), next.toString, conf)
-    } finally release()
-    // prune all but the committed and previous generation (the widest
-    // window a concurrent reader can straddle)
-    val fs = new Path(statePath).getFileSystem(conf)
-    val keep = Set(next, next - 1).map(g => s"gen=$g")
-    Option(fs.listStatus(new Path(statePath))).getOrElse(Array.empty)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen=") &&
-        !keep.contains(s.getPath.getName))
-      .foreach(s => fs.delete(s.getPath, true))
-    next
+    val store = GenerationStore.single(statePath)
+    store.onBeforeSwap = () => onBeforeSwap()
+    try store.replace(upd) finally release()
   }
 }

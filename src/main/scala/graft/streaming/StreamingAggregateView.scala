@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.etl.{AggregateView, AtomicText}
+import graft.etl.AtomicText
 
 /** Streaming-driven aggregate-MV maintenance — the reference's
   * activation loop (`scripts/lambda_redshift_to_segment.py:137-209`
@@ -18,9 +18,9 @@ import graft.etl.{AggregateView, AtomicText}
   *   1. select the fact rows with `versionCol` beyond the stored
   *      high-water mark — whole version groups only, so a bounded
   *      batch can never split one version's rows across two marks;
-  *   2. [[AggregateView.refreshFacts]] — dirty buckets re-aggregate;
-  *      the fact state is latest-wins and the view publish is atomic
-  *      (generation manifest);
+  *   2. `refresh` (an [[graft.etl.AggregateView.refreshFacts]]) — dirty
+  *      buckets re-aggregate; the fact state is latest-wins and the
+  *      view publish is atomic (generation manifest);
   *   3. advance the mark (atomic temp-file rename, [[AtomicText]]).
   *
   * Crash anywhere, replay converges, nothing double-applies:
@@ -42,7 +42,7 @@ import graft.etl.{AggregateView, AtomicText}
   * avoids only by its processed-ID `NOT IN` list.
   */
 final class StreamingAggregateView(
-    av: AggregateView,
+    refresh: DataFrame => Unit,
     hwmPath: String,
     versionCol: String) {
 
@@ -69,7 +69,7 @@ final class StreamingAggregateView(
     if (versions.isEmpty) return Seq.empty
     val cutoff = versions.max
     val batch = feed.filter(col(versionCol) > floor && col(versionCol) <= cutoff)
-    av.refreshFacts(batch)
+    refresh(batch)
     AtomicText.write(new Path(hwmPath), cutoff.toString, conf(spark))
     versions
   }

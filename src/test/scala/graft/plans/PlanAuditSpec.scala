@@ -48,7 +48,26 @@ class PlanAuditSpec extends AnyFunSuite {
   /** Storage delta of the executing sweep (leak pin reads it). */
   @volatile private var sweepLeak: Option[(Int, Int)] = None
 
-  /** ONE memoized sweep over every registered query. `q.run` EXECUTES
+  /** The SharedFrames build expressions, before memoization: a
+    * consumer's plan shows only their cached leaf, so their exchange
+    * ceilings are pinned on the expressions themselves. */
+  private def builds: Seq[(String, () => org.apache.spark.sql.DataFrame)] = {
+    import org.apache.spark.sql.functions.col
+    import graft.queries.DomainQueries
+    import graft.views.Customer360
+    def profiles = Customer360.customerProfiles(
+      DomainQueries.customerMaster(spark, dir), DomainQueries.asOf,
+      Seq(col("sourcerowid").desc))
+    Seq(
+      "build:vehicle_history" -> (() => Customer360.vehicleHistory(
+        DomainQueries.vehicleSales(spark, dir), DomainQueries.asOf)),
+      "build:customer_profiles" -> (() => profiles),
+      "build:validated_sales" -> (() => Customer360.validatedSales(
+        DomainQueries.vehicleSales(spark, dir), profiles)))
+  }
+
+  /** ONE memoized sweep over every registered query (and the
+    * [[builds]]). `q.run` EXECUTES
     * the imperative entries (mv builds, pair materializations), and the
     * r16 full-suite run measured the previous FOUR independent
     * all-queries passes (cartesian + lambda sweep, two window sweeps,
@@ -92,8 +111,9 @@ class PlanAuditSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     def unaccounted = sc.getPersistentRDDs.size - graft.SharedFrames.entryCount
     val baseline = unaccounted
-    val out = SparkEntry.allQueries.map { q =>
-      val df = q.run(spark, dir)
+    val runs = SparkEntry.allQueries.map(q => q.name -> (() => q.run(spark, dir))) ++ builds
+    val out = runs.map { case (name, run) =>
+      val df = run()
       val logicalBare = df.queryExecution.optimizedPlan.collect {
         case w: LWindow if w.partitionSpec.isEmpty && !isOffsetsFrame(w) => w
       }.size
@@ -107,7 +127,7 @@ class PlanAuditSpec extends AnyFunSuite {
       val plan = df.queryExecution.executedPlan.toString
       df.count() // materialize: lazy internal persists must still be released
       df.unpersist(blocking = true)
-      q.name -> Swept(plan, logicalBare, physBare.toSeq)
+      name -> Swept(plan, logicalBare, physBare.toSeq)
     }.toMap
     sweepLeak = Some((baseline, unaccounted))
     out
@@ -540,6 +560,31 @@ class PlanAuditSpec extends AnyFunSuite {
       if (c > cap) Some(s"$n: $c > $cap") else None
     }
     assert(over.isEmpty, s"exchange ceilings exceeded: ${over.mkString(", ")}")
+  }
+
+  test("customer-360 build and dedup plan shapes: exchange ceilings") {
+    // Static (pre-AQE) counts by this spec's counter, which also counts
+    // broadcast exchanges.
+    val ceilings = Map(
+      // the dedup and the purchase-sequence window share ONE custno
+      // exchange
+      "build:vehicle_history" -> 1,
+      // one dedup exchange + the customer-dimension broadcast
+      "build:customer_profiles" -> 2,
+      // one exchange per join input + the customer-dimension broadcast
+      // inside the profiles side
+      "build:validated_sales" -> 3,
+      "v_vehicle_history" -> 1,
+      "v_validated_sales" -> 3)
+    val over = ceilings.toSeq.sortBy(_._1).flatMap { case (n, cap) =>
+      val c = "Exchange".r.findAllIn(stripCachedBuilds(sweep(n).plan)).length
+      if (c > cap) Some(s"$n: $c > $cap") else None
+    }
+    assert(over.isEmpty, s"exchange ceilings exceeded: ${over.mkString(", ")}")
+    // dedup_ngram_jaccard serves a persisted result, so its exchanges
+    // are all in the cached build: count them unstripped
+    val ngram = "Exchange".r.findAllIn(sweep("dedup_ngram_jaccard").plan).length
+    assert(ngram <= 26, s"dedup_ngram_jaccard gained exchanges: $ngram > 26")
   }
 
   test("round-7 query plan shapes: exchange ceilings") {

@@ -49,13 +49,13 @@ class EventSinkSpec extends AnyFunSuite {
         .collect().map(_.getLong(0)).toSet
       assert(after == Set(1L, 2L, 3L, 4L))
       // compacted to a single part file
-      val parts = new java.io.File(path.stripPrefix(scheme)).listFiles()
-        .count(_.getName.startsWith("part-"))
+      val parts = java.nio.file.Files.walk(java.nio.file.Paths.get(path.stripPrefix(scheme)))
+        .filter(_.getFileName.toString.startsWith("part-")).count()
       assert(parts == 1)
     }
   }
 
-  test("ProcessedIds loads through its schema sidecar: no inference job, .old recovery reads") {
+  test("ProcessedIds loads through its schema sidecar: no inference job, a compact that crashed before its delete reads and converges") {
     val spark0 = spark
     import spark0.implicits._
     val path = java.nio.file.Files.createTempDirectory("graft-state5").toString + "/processed"
@@ -82,11 +82,19 @@ class EventSinkSpec extends AnyFunSuite {
     EventSink.ProcessedIds.append(Seq(1L, 2L).toDF("event_id"), path)
     EventSink.ProcessedIds.append(Seq(2L, 3L).toDF("event_id"), path)
     assert(inferenceJobs(load()) == (Set(1L, 2L, 3L), 0))
-    // a compact that died between its renames leaves only `.old`; load
-    // restores it and still reads through the sidecar
+    // a compact that crashed after publishing its snapshot but before
+    // deleting the append files it folded: both are on disk at once
+    def appendFiles() = new java.io.File(path).listFiles()
+      .filter(_.getName.startsWith("part-")).toSeq
+    val folded = appendFiles().map(f => f -> java.nio.file.Files.readAllBytes(f.toPath))
     EventSink.ProcessedIds.compact(spark, path, "event_id")
-    val dir = new java.io.File(path)
-    assert(dir.renameTo(new java.io.File(path + ".old")))
+    assert(appendFiles().isEmpty)
+    folded.foreach { case (f, bytes) => java.nio.file.Files.write(f.toPath, bytes) }
+    assert(inferenceJobs(load()) == (Set(1L, 2L, 3L), 0))
+    // the next compact converges: the folded appends are gone, the set
+    // is unchanged
+    EventSink.ProcessedIds.compact(spark, path, "event_id")
+    assert(appendFiles().isEmpty)
     assert(inferenceJobs(load()) == (Set(1L, 2L, 3L), 0))
     // an append whose schema differs from the log's fails before writing
     val e = intercept[IllegalArgumentException](

@@ -61,7 +61,7 @@ class StreamingAggregateViewSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_sav").toString
     val av = mkAv(root)
     av.build(dims(d0: _*), facts())
-    val loop = new StreamingAggregateView(av, s"$root/_HWM", "fversion")
+    val loop = new StreamingAggregateView(av.refreshFacts, s"$root/_HWM", "fversion")
     val feed = facts(feedRows: _*)
     assert(loop.highWaterMark(spark).isEmpty)
     assert(loop.processNext(feed) == Seq(1L))
@@ -77,7 +77,7 @@ class StreamingAggregateViewSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_sav_kill").toString
     val av = mkAv(root)
     av.build(dims(d0: _*), facts())
-    val loop = new StreamingAggregateView(av, s"$root/_HWM", "fversion")
+    val loop = new StreamingAggregateView(av.refreshFacts, s"$root/_HWM", "fversion")
     val feed = facts(feedRows: _*)
     assert(loop.processNext(feed) == Seq(1L))
     val afterV1 = viewMap(av)
@@ -104,7 +104,7 @@ class StreamingAggregateViewSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_sav_replay").toString
     val av = mkAv(root)
     av.build(dims(d0: _*), facts())
-    val loop = new StreamingAggregateView(av, s"$root/_HWM", "fversion")
+    val loop = new StreamingAggregateView(av.refreshFacts, s"$root/_HWM", "fversion")
     val feed = facts(feedRows: _*)
     assert(loop.processAvailable(feed, maxVersions = 3) == 1)
     val applied = viewMap(av)
