@@ -13,6 +13,20 @@ import graft.queries.{CurationQueries, DomainQueries, FunctionQueries, LlmQuerie
   */
 object SparkEntry {
 
+  /** The engine's session settings, shared by `Bench`, `Verify`,
+    * `SpillProbe` and the test session: `cores` local threads and shuffle
+    * partitions, the graft extensions on by default, UTC, no UI. Callers
+    * add their own settings with `.config` before `getOrCreate()`. */
+  def sessionBuilder(cores: String): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.session.timeZone", "UTC")
+      // events.parquet is TIMESTAMP(NANOS): read nanos as long engine-wide
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+
   /** All registered queries, one per operator family. */
   def allQueries: Seq[Q] =
     RelationalQueries.all ++ TpchQueries.all ++ DomainQueries.all ++

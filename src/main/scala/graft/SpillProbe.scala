@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Memory-pressure proof harness: re-runs the bench's heaviest shapes in
@@ -51,13 +51,8 @@ object SpillProbe {
   def main(args: Array[String]): Unit = {
     val outPath = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
+    val spark = SparkEntry.sessionBuilder("4")
       .appName("graft-spill-probe")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", "/tmp/graft_spill_warehouse")
       // ---- the constraint set ----
       // squeeze unified memory so sorters hit pressure early

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** The TWO-SIDED [[BucketedView]]: a DIMENSION store (`$root/dims`) and
   * a FACT store (`$root/facts`), each latest-version-wins per its own
-  * key, feeding one aggregate view bucketed on the AGGREGATION key
+  * key and each a [[GenerationStore]] bucketed like the view, feeding
+  * one aggregate view (`$root/view`) bucketed on the AGGREGATION key
   * `bucketKeys` (reference: the nightly `marketing.customer_segments`
   * rebuild, `customer_360_views.sql:376-515` — at 100× the segments view
   * is the expensive one to recompute). */

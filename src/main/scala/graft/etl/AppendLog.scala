@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The append-log state mechanism shared by the set-like cross-batch
   * state stores: appends are atomic-per-batch parquet writes into the
@@ -30,11 +31,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the same store the Spark writer appended to.
   *
   * The log OWNS its schema: the first append writes the
-  * [[BucketedView.SchemaSidecar]] (the snapshot store keeps its own), so
-  * [[load]] reads without a footer-inference job (one bare Spark job per
-  * call otherwise), and an append whose schema differs from it fails
-  * before writing. Logs that predate the sidecar load through inference
-  * until their next compact.
+  * [[GenerationStore.SchemaSidecar]] (the snapshot store keeps its own;
+  * no other log-shaped store remains), so [[load]] reads without a
+  * footer-inference job (one bare Spark job per call otherwise), and an
+  * append whose schema differs from it fails before writing. Logs that
+  * predate the sidecar load through inference until their next compact.
   */
 object AppendLog {
 
@@ -44,11 +45,27 @@ object AppendLog {
   private def snapshot(statePath: String): GenerationStore =
     GenerationStore.single(s"$statePath/_snapshot.parquet")
 
+  private def sidecar(statePath: String): Path =
+    new Path(statePath, GenerationStore.SchemaSidecar)
+
+  private def recordSchema(spark: SparkSession, statePath: String, schema: StructType): Unit =
+    AtomicText.write(sidecar(statePath), schema.json, spark.sparkContext.hadoopConfiguration)
+
+  /** The schema the log recorded; None for a log that predates it. */
+  private def loggedSchema(spark: SparkSession, statePath: String): Option[StructType] =
+    AtomicText.read(sidecar(statePath), spark.sparkContext.hadoopConfiguration)
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+
+  /** The log's append files, read through the recorded schema when
+    * there is one, else through footer inference. */
+  private def readAppends(spark: SparkSession, statePath: String): DataFrame =
+    loggedSchema(spark, statePath).fold(spark.read)(spark.read.schema(_)).parquet(statePath)
+
   /** Read the folded state; `empty` bootstraps a missing store. */
   def load(spark: SparkSession, statePath: String,
       fold: DataFrame => DataFrame, empty: => DataFrame): DataFrame =
     if (!fs(spark, statePath).exists(new Path(statePath))) empty
-    else fold(withSnapshot(spark, statePath, BucketedView.readState(spark, statePath)))
+    else fold(withSnapshot(spark, statePath, readAppends(spark, statePath)))
 
   private def withSnapshot(
       spark: SparkSession, statePath: String, appends: DataFrame): DataFrame =
@@ -58,16 +75,14 @@ object AppendLog {
     * first append into a fresh log also writes its schema sidecar. */
   def append(rows: DataFrame, statePath: String): Unit = {
     val spark = rows.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    AtomicText.read(new Path(statePath, BucketedView.SchemaSidecar), conf).foreach { json =>
-      val logged = org.apache.spark.sql.types.DataType.fromJson(json)
+    loggedSchema(spark, statePath).foreach { logged =>
       require(GenerationStore.sameTypeIgnoreNullability(logged, rows.schema),
         s"append to $statePath: batch schema ${rows.schema.simpleString} differs " +
           s"from the log's ${logged.simpleString}")
     }
     val fresh = !fs(spark, statePath).exists(new Path(statePath))
     rows.write.mode("append").parquet(statePath)
-    if (fresh) BucketedView.writeSchemaSidecar(spark, statePath, rows.schema)
+    if (fresh) recordSchema(spark, statePath, rows.schema)
   }
 
   /** Fold snapshot ∪ appends into one file, publish it as the snapshot's
@@ -80,13 +95,13 @@ object AppendLog {
   def compact(spark: SparkSession, statePath: String,
       fold: DataFrame => DataFrame): Unit =
     if (fs(spark, statePath).exists(new Path(statePath))) {
-      val appends = BucketedView.readState(spark, statePath)
+      val appends = readAppends(spark, statePath)
       val folded = appends.inputFiles
       if (folded.nonEmpty) {
         snapshot(statePath).replace(
           fold(withSnapshot(spark, statePath, appends)).coalesce(1))
         // a log that predates the sidecar gets one before its appends go
-        BucketedView.writeSchemaSidecar(spark, statePath, appends.schema)
+        recordSchema(spark, statePath, appends.schema)
         val f = fs(spark, statePath)
         folded.foreach(p => f.delete(new Path(p), false))
       }

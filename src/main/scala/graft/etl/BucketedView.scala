@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,21 +13,23 @@ import graft.operators.Dedup
   * recompute (`sql/customer_360_views.sql`) survive 100 TB.
   * [[MaterializedView]] fixes one side, [[AggregateView]] two.
   *
-  * Every store is hive-partitioned by the same `__mv_bucket =
-  * pmod(xxhash64(bucketKeys), nBuckets)`:
+  * Every store is a [[GenerationStore]] bucketed by the same
+  * `__mv_bucket = pmod(xxhash64(bucketKeys), nBuckets)`: rewritten
+  * buckets land in an immutable new generation and one atomic manifest
+  * swap publishes them, so a concurrent reader (or a crash anywhere)
+  * sees a complete old-or-new store, and a bucket whose rows all
+  * disappear publishes that emptiness too.
   *
-  *   - STATE, per side — the latest source row per side key, BEFORE any
-  *     view filter (a key whose winner fails the view's gate must keep
-  *     that winner, or an older resurfacing row would wrongly win the
-  *     next refresh). Latest-per-key is associative, so (state ∪ batch)
-  *     → latest is exactly (full history) → latest: the base table is
-  *     never read again after the build.
-  *   - VIEW — `derive(states)`, served through a [[GenerationStore]]:
-  *     refreshed buckets land in an immutable new generation and one
-  *     atomic manifest swap publishes them, so a concurrent reader (or
-  *     a crash anywhere) sees a complete old-or-new view, and a bucket
-  *     whose rows all disappear publishes that emptiness too — dynamic
-  *     partition overwrite could express neither. Deletes fall out: a
+  *   - STATE, per side (`$root/<side.dir>`, one retained version) — the
+  *     latest source row per side key, BEFORE any view filter (a key
+  *     whose winner fails the view's gate must keep that winner, or an
+  *     older resurfacing row would wrongly win the next refresh).
+  *     Latest-per-key is associative, so (state ∪ batch) → latest is
+  *     exactly (full history) → latest: the base table is never read
+  *     again after the build. A store read resolves leaf bucket
+  *     directories, so it re-adds the bucket column with the write's
+  *     own expression — sound by the second precondition below.
+  *   - VIEW (`$root/view`) — `derive(states)`. Deletes fall out: a
   *     winner turning soft-deleted drops out of `derive`, no tombstones.
   *
   * Preconditions, each load-bearing at 100 TB:
@@ -70,16 +72,21 @@ import graft.operators.Dedup
   *   3. derive + publish — only CHANGED buckets; a bucket whose fold is
   *      byte-identical is skipped, so a replayed batch publishes NO
   *      generation (the idempotence at-least-once delivery relies on).
-  *   4. state write — dynamic overwrite of the changed bucket partitions.
+  *   4. state write — the changed buckets' new state, published into the
+  *      side's store as one generation behind its manifest swap.
   *
   * CRASH CONTRACT — publish BEFORE the state write. The no-op skip keys
   * off the state fold, so the state write must be the last durable
   * step: a crash anywhere leaves state old, and replaying the batch
   * re-detects the change, re-publishes idempotently and completes the
   * state write (state-first plus the skip made a crash between the two
-  * skip the publish forever). The mirror window — view published, state
-  * not yet written — is closed by any later replay of the crashed batch
-  * (latest-version-wins).
+  * skip the publish forever). The state write is all-or-nothing across
+  * its buckets (a crash before its manifest swap leaves every bucket
+  * old): no torn multi-bucket state. The mirror window — view published,
+  * state not yet written — is closed by any later replay of the crashed
+  * batch (latest-version-wins). The fold+flag checkpoint materializes
+  * every read of the old state first, so the state publish's GC never
+  * removes files a pending plan still reads.
   *
   * COST-BASED derive scope, chosen by the dirty buckets' on-disk state
   * size over every side (an FS-metadata probe, zero jobs): below
@@ -102,7 +109,6 @@ abstract class BucketedView private[etl] (
   import BucketedView._
 
   private val bucketCol = "__mv_bucket"
-  private val statePaths = sides.map(s => s"$root/${s.dir}")
   // JobLabel prefix of every phase: `mv:` one-sided, `av:` two-sided
   private val phase = if (sides.size == 1) "mv" else "av"
 
@@ -110,7 +116,10 @@ abstract class BucketedView private[etl] (
     * the catalog and the crash/concurrency specs). */
   private[graft] val store = new GenerationStore(s"$root/view", bucketCol, keepVersions)
 
-  /** Test hook: runs between the view publish and the state overwrite —
+  /** Each side's latest-row-per-key state, one retained version. */
+  private val stateStores = sides.map(s => new GenerationStore(s"$root/${s.dir}", bucketCol))
+
+  /** Test hook: runs between the view publish and the state publish —
     * the mirror crash window of the publish-first ordering. */
   private[graft] var onAfterPublish: () => Unit = () => ()
 
@@ -136,23 +145,30 @@ abstract class BucketedView private[etl] (
   def view(spark: SparkSession): DataFrame =
     store.read(spark).getOrElse(derive(sides.indices.map(sideState(spark, _).limit(0))))
 
-  /** Side `side`'s latest-row-per-key state store. */
-  protected def sideState(spark: SparkSession, side: Int): DataFrame =
-    readState(spark, statePaths(side)).drop(bucketCol)
+  /** Side `side`'s latest-row-per-key state (only `buckets`' when given),
+    * without the bucket column; an all-empty store reads as an empty
+    * frame of its recorded schema. */
+  protected def sideState(
+      spark: SparkSession, side: Int, buckets: Option[Seq[Long]] = None): DataFrame = {
+    val st = stateStores(side)
+    buckets.fold(st.read(spark))(st.readBuckets(spark, _)).getOrElse(
+      spark.createDataFrame(new java.util.ArrayList[Row](), st.schema(spark).getOrElse(
+        throw new IllegalStateException(s"${st.root}: the view was never built"))))
+  }
 
   private def withBucket(df: DataFrame): DataFrame =
     df.withColumn(bucketCol,
       pmod(xxhash64(bucketKeys.map(col): _*), lit(nBuckets.toLong)))
 
-  /** Each bucket in exactly one task before a `partitionBy(bucket)`
-    * write: without it every shuffle task holds rows of every bucket and
-    * each write emits up to tasks×buckets files, a small-file explosion
-    * that compounds per refresh. The exchange is hash-on-bucket with NO
-    * fixed count, so AQE sizes it by data: coalescing merges whole hash
-    * partitions, so a task may hold several buckets but a bucket never
-    * spans two tasks — still one file per bucket, without paying
-    * `nBuckets` tasks (each deserializing the writer) for a CDC batch
-    * that fits one. */
+  /** Each bucket in exactly one task before a store publish (a
+    * `partitionBy(bucket)` write): without it every shuffle task holds
+    * rows of every bucket and each write emits up to tasks×buckets
+    * files, a small-file explosion that compounds per refresh. The
+    * exchange is hash-on-bucket with NO fixed count, so AQE sizes it by
+    * data: coalescing merges whole hash partitions, so a task may hold
+    * several buckets but a bucket never spans two tasks — still one file
+    * per bucket, without paying `nBuckets` tasks (each deserializing the
+    * writer) for a CDC batch that fits one. */
   private def clustered(df: DataFrame): DataFrame = df.repartition(col(bucketCol))
 
   /** Latest-per-key fold whose output is already bucket-clustered: one
@@ -166,15 +182,15 @@ abstract class BucketedView private[etl] (
     Dedup.latestByKeyClustered(df, side.keys, side.order, bucketCol)
 
   /** Full initial build of every side's state and the whole view. Each
-    * state write IS its fold's materialization (a fresh root has no
-    * read-overwrite hazard); the derive then re-reads the states — a
-    * column-pruned scan of fresh parquet, cheaper than holding
-    * full-width block copies across the pass. Sides are independent
-    * jobs (disjoint inputs and paths), submitted concurrently. */
+    * state publish (every bucket) IS its fold's materialization; the
+    * derive then re-reads the states — a column-pruned scan of fresh
+    * parquet, cheaper than holding full-width block copies across the
+    * pass. Sides are independent jobs (disjoint inputs and stores),
+    * submitted concurrently. */
   protected def build(sources: Seq[DataFrame]): Unit =
     withWriterLock { graft.plans.MvRewrite.withRuleDisabled {
       val spark = sources.head.sparkSession
-      val writes = sides.zip(sources).zip(statePaths).map { case ((side, source), path) =>
+      val writes = sides.zip(sources).zip(stateStores).map { case ((side, source), st) =>
         // BUILD-ONLY fold shape: the initial load is the high-version-
         // fanout case, where aggregating FIRST wins (the dedup rewrite's
         // map-side partial combine ships ~|keys| rows per mapper) and only
@@ -193,10 +209,8 @@ abstract class BucketedView private[etl] (
           if (sides.size == 1) "fold+state-write" else s"${side.dir.stripSuffix("s")}-state-write"
         // labels are thread-local: set inside the job body
         () => graft.JobLabel(spark, s"$phase:build $label") {
-          folded.write.mode("overwrite").partitionBy(bucketCol).parquet(path)
-          // a zero-row partitioned write emits no files: the sidecar
-          // alone keeps an empty side readable and refreshable
-          writeSchemaSidecar(spark, path, folded.schema)
+          st.publish(folded, 0L until nBuckets.toLong)
+          ()
         }
       }
       runAll(writes)
@@ -230,7 +244,6 @@ abstract class BucketedView private[etl] (
     withWriterLock { graft.plans.MvRewrite.withRuleDisabled {
     val spark = batch.sparkSession
     val keys = sides(side).keys
-    val statePath = statePaths(side)
     val mask = maskable(nBuckets)
     val bucketed = withBucket(batch)
     val observedBatch =
@@ -245,8 +258,8 @@ abstract class BucketedView private[etl] (
         .getOrElse(b.select(bucketCol).distinct().collect().map(_.getLong(0)).toSeq)
     if (buckets.isEmpty) return
     val keyScoped =
-      statePaths.map(bucketBytes(spark, _, bucketCol, buckets)).sum >= keyScopeMinStateBytes
-    val oldState = readState(spark, statePath).filter(col(bucketCol).isin(buckets: _*))
+      stateStores.map(_.bucketBytes(spark, buckets)).sum >= keyScopeMinStateBytes
+    val oldState = withBucket(sideState(spark, side, Some(buckets)))
     // resolved with the fold, BEFORE any write, while oldState's input
     // files are intact; the window pass keeps the fold's bucket
     // clustering intact to the state write
@@ -264,20 +277,19 @@ abstract class BucketedView private[etl] (
         (if (mask) observedBuckets(flagged, "graft_mv_changed") else None)
           .getOrElse(changedRows.select(bucketCol).distinct().collect().map(_.getLong(0)).toSeq)
       if (changed.isEmpty) return
-      val inChanged = col(bucketCol).isin(changed: _*)
-      val inputs = statePaths.indices.map { i =>
-        if (i == side) newState.filter(inChanged)
-        else readState(spark, statePaths(i)).filter(inChanged)
+      val newStateRows = newState.filter(col(bucketCol).isin(changed: _*))
+      val inputs = sides.indices.map { i =>
+        if (i == side) newStateRows.drop(bucketCol) else sideState(spark, i, Some(changed))
       }
       val newViewRows =
-        if (!keyScoped) withBucket(derive(inputs.map(_.drop(bucketCol))))
+        if (!keyScoped) withBucket(derive(inputs))
         else {
           // re-derive only the changed `bucketKeys` values; the rest of
           // each republished bucket rides along from the served
           // generation, whose files a publish never mutates
           val changedAgg = changedRows.select(bucketKeys.map(col): _*).distinct()
           val derived = withBucket(derive(
-            inputs.map(semiOnKeys(_, changedAgg, bucketKeys).drop(bucketCol))))
+            inputs.map(semiOnKeys(_, changedAgg, bucketKeys))))
           store.readBuckets(spark, changed)
             .map(v => derived.unionByName(withBucket(antiOnKeys(v, changedAgg, bucketKeys))))
             .getOrElse(derived)
@@ -287,11 +299,7 @@ abstract class BucketedView private[etl] (
       }
       onAfterPublish()
       graft.JobLabel(spark, s"$phase:refresh state-write") {
-        // dynamic overwrite replaces only bucket partitions; root-level
-        // files (the schema sidecar) survive
-        newState.filter(inChanged).write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(bucketCol).parquet(statePath)
+        stateStores(side).publish(newStateRows, changed)
       }
     } finally release()
     } finally releaseB()
@@ -311,35 +319,6 @@ object BucketedView {
     * scoped path's extra stages dominate; above it recomputing unchanged
     * keys dominates (O(batch) instead of O(dirty buckets) compute). */
   val DefaultKeyScopeMinStateBytes: Long = 4L << 30
-
-  /** Name of the schema sidecar written beside every state store and
-    * generation root. The `_` prefix hides it from Spark's data-file
-    * discovery; content is `StructType.json` of the frame as written
-    * (bucket column included, typed LONG — which also pins the
-    * partition-column type instead of re-inferring int per read). */
-  private[graft] val SchemaSidecar = "_graft_schema.json"
-
-  /** Persist `schema` beside `path` (atomic replace). Written AFTER the
-    * data (a full overwrite clears the directory first). */
-  private[graft] def writeSchemaSidecar(
-      spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): Unit =
-    AtomicText.write(new org.apache.hadoop.fs.Path(path, SchemaSidecar),
-      schema.json, spark.sparkContext.hadoopConfiguration)
-
-  /** Read a state store WITHOUT a schema-inference pass when the sidecar
-    * is present: footer sampling is a distributed job per read (four-plus
-    * reads per refresh), and the store OWNS its schema — it wrote it. The
-    * sidecar also keeps a store written from zero rows (no data files)
-    * readable. Falls back to inference for stores that predate it. */
-  private[graft] def readState(spark: SparkSession, path: String): DataFrame =
-    AtomicText.read(new org.apache.hadoop.fs.Path(path, SchemaSidecar),
-      spark.sparkContext.hadoopConfiguration) match {
-      case Some(json) =>
-        spark.read.schema(org.apache.spark.sql.types.DataType.fromJson(json)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]).parquet(path)
-      case None => spark.read.parquet(path)
-    }
 
   /** Conservative mirror of [[graft.plans.DedupWindowToMaxBy]]'s fire
     * conditions, checkable BEFORE planning: all sort directions identical
@@ -363,20 +342,6 @@ object BucketedView {
       // default null ordering: DESC NULLS LAST / ASC NULLS FIRST
       sos.forall { case (_, desc, nullsLast) => desc == nullsLast } &&
       df.schema.forall(f => RowOrdering.isOrderable(f.dataType))
-  }
-
-  /** Total on-disk bytes of `path`'s hive partitions for `buckets` —
-    * pure FS metadata (no Spark job), the cost signal the refresh's
-    * scope decision reads. A missing bucket directory contributes 0. */
-  private[graft] def bucketBytes(
-      spark: SparkSession, path: String, bucketCol: String,
-      buckets: Seq[Long]): Long = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    buckets.map { b =>
-      val p = new org.apache.hadoop.fs.Path(root, s"$bucketCol=$b")
-      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-    }.sum
   }
 
   /** Marker column [[foldFlagged]] appends: true exactly on the

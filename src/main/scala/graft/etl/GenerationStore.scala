@@ -200,10 +200,10 @@ final class GenerationStore(
   private def genDir(gen: Long): String = s"$root/gen=$gen"
   private def versionPath(v: Long): Path = new Path(root, s"$manifestName.v$v")
   private val schemaVersionRe =
-    (raw"${java.util.regex.Pattern.quote(BucketedView.SchemaSidecar)}" +
+    (raw"${java.util.regex.Pattern.quote(GenerationStore.SchemaSidecar)}" +
       raw"\.v(\d+)$$").r
   private def schemaVersionPath(v: Long): Path =
-    new Path(root, s"${BucketedView.SchemaSidecar}.v$v")
+    new Path(root, s"${GenerationStore.SchemaSidecar}.v$v")
 
   private def parse(text: String): Map[Long, Long] =
     text.linesIterator.filter(_.nonEmpty).map { line =>
@@ -303,7 +303,7 @@ final class GenerationStore(
     // version-archived copy FIRST (crash leaves an orphan the next gc
     // sweeps), then the live one.
     commit.write(schemaVersionPath(nextGen), newSchema.json, conf(spark))
-    commit.write(new Path(root, BucketedView.SchemaSidecar),
+    commit.write(new Path(root, GenerationStore.SchemaSidecar),
       newSchema.json, conf(spark))
     onBeforeSwap()
     swap(spark, current ++ buckets.map(_ -> nextGen), nextGen)
@@ -317,7 +317,12 @@ final class GenerationStore(
     publish(rows.withColumn(bucketCol, org.apache.spark.sql.functions.lit(0L)), Seq(0L))
 
   private def liveSchemaJson(spark: SparkSession): Option[String] =
-    commit.read(new Path(root, BucketedView.SchemaSidecar), conf(spark))
+    commit.read(new Path(root, GenerationStore.SchemaSidecar), conf(spark))
+
+  /** The live data columns (no bucket column) from the publish sidecar;
+    * None = never published. Keeps an all-empty store readable. */
+  private[graft] def schema(spark: SparkSession): Option[org.apache.spark.sql.types.StructType] =
+    readSchema(liveSchemaJson(spark))
 
   /** The schema version `v` committed under. A version that predates
     * per-version schema archives resolves with NO pinned schema —
@@ -385,11 +390,7 @@ final class GenerationStore(
       spark: SparkSession,
       m: Map[Long, Long],
       schemaJson: Option[String]): Option[DataFrame] = {
-    val f = fs(spark)
-    val paths = m.toSeq.sortBy(_._1).flatMap { case (b, g) =>
-      val p = new Path(s"${genDir(g)}/$bucketCol=$b")
-      if (f.exists(p)) Some(p.toString) else None
-    }
+    val paths = bucketDirs(spark, m).map(_.toString)
     if (paths.isEmpty) None
     else readSchema(schemaJson) match {
       case Some(schema) => Some(spark.read.schema(schema).parquet(paths: _*))
@@ -401,6 +402,25 @@ final class GenerationStore(
       case None =>
         Some(spark.read.option("mergeSchema", "true").parquet(paths: _*))
     }
+  }
+
+  /** The existing directories of `m`'s buckets, in bucket order (an
+    * empty bucket writes none). */
+  private def bucketDirs(spark: SparkSession, m: Map[Long, Long]): Seq[Path] = {
+    val f = fs(spark)
+    m.toSeq.sortBy(_._1).map { case (b, g) => new Path(s"${genDir(g)}/$bucketCol=$b") }
+      .filter(f.exists)
+  }
+
+  /** On-disk bytes of `buckets`' live directories, as the manifest names
+    * them: FS metadata only (no Spark job), the cost signal of a
+    * [[BucketedView]] refresh's scope decision. */
+  private[graft] def bucketBytes(spark: SparkSession, buckets: Seq[Long]): Long = {
+    val want = buckets.toSet
+    val f = fs(spark)
+    manifest(spark).fold(0L)(m =>
+      bucketDirs(spark, m.filter { case (b, _) => want(b) })
+        .map(f.getContentSummary(_).getLength).sum)
   }
 
   /** Delete what nothing retained references: generation dirs outside
@@ -449,6 +469,10 @@ final class GenerationStore(
 }
 
 object GenerationStore {
+
+  /** The schema sidecar's name (`_`-prefixed: hidden from Spark's file
+    * discovery); content is `StructType.json`. [[AppendLog]] uses it too. */
+  private[graft] val SchemaSidecar = "_graft_schema.json"
 
   /** A store with one bucket ([[GenerationStore.replace]] publishes it
     * whole): [[graft.streaming.BudgetGate]] state, [[AppendLog]]

@@ -4,9 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The ONE-SIDED [[BucketedView]]: a keyed, latest-version-wins source
-  * in `$root/state`, bucketed on its own `keys`, feeding a view whose
-  * `derive` is per-key local (the engine's bucket-closed precondition
-  * with `bucketKeys == keys`). Cross-key views belong in
+  * whose latest row per key lives in the [[GenerationStore]] at
+  * `$root/state`, bucketed on its own `keys`, feeding a view (in
+  * `$root/view`) whose `derive` is per-key local (the engine's
+  * bucket-closed precondition with `bucketKeys == keys`). View and state
+  * publish through the same manifest swap. Cross-key views belong in
   * [[AggregateView]]. */
 final class MaterializedView(
     root: String,

@@ -6,17 +6,10 @@ import org.apache.spark.sql.SparkSession
   * test JVM; building a session per spec would dominate runtime). */
 object SharedSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    // the engine's session settings, as Verify/Bench use them, so every
+    // spec exercises the native functions + optimizer rewrite path
+    val s = SparkEntry.sessionBuilder("4")
       .appName("graft-tests")
-      // same engine-default extensions as Verify/Bench, so every spec
-      // exercises the native functions + optimizer rewrite path
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet is TIMESTAMP(NANOS): read nanos as long engine-wide
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       // Spark 4.1's checksum checkpoint manager deadlocked the whole
       // suite under the streaming tests (all executor threads parked in
       // ChecksumCheckpointFileManager.awaitResult); tests don't need

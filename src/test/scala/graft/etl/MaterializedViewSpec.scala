@@ -76,6 +76,40 @@ class MaterializedViewSpec extends AnyFunSuite {
     }
   }
 
+  test("a state write that fails between two bucket commits leaves the whole old state") {
+    // the second bucket directory moved into the state store fails: a
+    // commit that replaces buckets one at a time loses that bucket's old
+    // keys; a publish behind one manifest swap keeps every bucket old
+    val dir = Files.createTempDirectory("graft_mv_torn").toString
+    graft.Refusing.install(spark.sparkContext.hadoopConfiguration)
+    val mv = new MaterializedView(graft.Refusing.path(dir), Seq("id"),
+      Seq(col("version").desc), derive, nBuckets = 4)
+    val base = rows((1L to 12L).map(i => (i, 1L, false, s"p$i")): _*)
+    val batch = rows((1L to 12L by 3).map(i => (i, 2L, false, s"q$i")): _*)
+    def sortedRows(d: DataFrame): Seq[String] = d.collect().map(_.toString).sorted.toSeq
+    // fixture: the batch spans >= 2 buckets, each also holding keys the
+    // batch does not touch
+    val bucketOf = base.select(col("id"), pmod(xxhash64(col("id")), lit(4L)))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val batchIds = (1L to 12L by 3).toSet
+    val hit = batchIds.map(bucketOf)
+    assert(hit.size >= 2 && hit.forall(b => bucketOf.exists { case (k, kb) =>
+      kb == b && !batchIds(k) }), s"fixture buckets: $bucketOf")
+    mv.build(base)
+    val before = sortedRows(mv.state(spark))
+    graft.Refusing.refusingSecondBucketRename(s"$dir/state") {
+      intercept[Exception](mv.refresh(batch))
+    }
+    assert(sortedRows(mv.state(spark)) == before,
+      "a failed state write must leave the pre-refresh state, every bucket")
+    // replayed once the fault clears: view and state converge
+    mv.refresh(batch)
+    val (_, full) = mk(nBuckets = 4)
+    full.build(base.unionByName(batch))
+    assert(sortedRows(mv.view(spark)) == sortedRows(full.view(spark)))
+    assert(sortedRows(mv.state(spark)) == sortedRows(full.state(spark)))
+  }
+
   test("state writes stay one-file-per-bucket through build and refresh") {
     // The bounded-files-per-bucket layout is a load-bearing contract
     // (small-file explosion compounds per refresh at 100 TB) and it is
@@ -83,14 +117,14 @@ class MaterializedViewSpec extends AnyFunSuite {
     // whatever physical shape the dedup-window rewrite picks (the
     // all-DESC orders every MV uses make the rewrite fire) plus the
     // r12 flag joins and checkpoint. Pin it on disk, not by reading
-    // plans: every bucket partition of the state store holds exactly
-    // ONE parquet file after a build and after a refresh.
-    def bucketFiles(root: String): Map[String, Int] = {
-      val d = new java.io.File(s"$root/state")
-      d.listFiles().filter(_.getName.startsWith("__mv_bucket="))
-        .map(b => b.getName -> b.listFiles().count(_.getName.endsWith(".parquet")))
+    // plans: every bucket directory of the state store's generations
+    // holds exactly ONE parquet file after a build and after a refresh.
+    def bucketFiles(root: String): Map[String, Int] =
+      new java.io.File(s"$root/state").listFiles().filter(_.getName.startsWith("gen="))
+        .flatMap(g => g.listFiles().filter(_.getName.startsWith("__mv_bucket="))
+          .map(b => s"${g.getName}/${b.getName}" ->
+            b.listFiles().count(_.getName.endsWith(".parquet"))))
         .toMap
-    }
     val (root, mv) = mk()
     // 40 versioned rows over 12 keys: several versions per key, keys
     // spread over several buckets
@@ -220,10 +254,16 @@ class MaterializedViewSpec extends AnyFunSuite {
     // the refresh exchanges are sized by data, not pinned to nBuckets:
     // a CDC batch that fits one task is written by one task, and AQE's
     // coalescing keeps each bucket inside a single task, so every
-    // rewritten bucket partition still holds exactly one file
-    def bucketFiles(dir: String): Map[String, Int] =
-      new java.io.File(dir).listFiles().filter(_.getName.startsWith("__mv_bucket="))
+    // rewritten bucket partition still holds exactly one file. Given a
+    // store root, it lists the newest generation: the buckets the last
+    // publish rewrote
+    def bucketFiles(dir: String): Map[String, Int] = {
+      val d = new java.io.File(dir)
+      val gens = d.listFiles().filter(_.getName.startsWith("gen="))
+      (if (gens.isEmpty) d else gens.maxBy(_.getName.drop(4).toLong)).listFiles()
+        .filter(_.getName.startsWith("__mv_bucket="))
         .map(b => b.getName -> b.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    }
     val (root, mv) = mk(nBuckets = 8)
     mv.build(rows((1L to 40L).map(i => (i % 12, i, false, s"p$i")): _*))
     val byLabel = jobsByLabel(

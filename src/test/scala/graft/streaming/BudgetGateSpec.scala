@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SharedSpark
+import graft.{JobSites, Refusing, SharedSpark}
 
 /** Streaming budget admission must equal the ONE-SHOT greedy prefix
   * over the concatenated batches: state carries each stratum's high
@@ -76,11 +76,8 @@ class BudgetGateSpec extends AnyFunSuite {
   test("a failed state write leaves the previous batch's state readable") {
     // the store on a scheme whose part-file creation fails while armed:
     // the second batch's state write job starts and then fails
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.refusing.impl", classOf[BudgetGateSpec.RefusingFileSystem].getName)
-    conf.set("fs.AbstractFileSystem.refusing.impl", classOf[BudgetGateSpec.RefusingFs].getName)
-    val statePath = "refusing://" +
-      Files.createTempDirectory("graft_budget4").toString + "/state"
+    Refusing.install(spark.sparkContext.hadoopConfiguration)
+    val statePath = Refusing.path(Files.createTempDirectory("graft_budget4").toString + "/state")
     def state() = BudgetGate.readState(spark, statePath, "source")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val (a1, _) = BudgetGate.admitBatch(
@@ -88,12 +85,32 @@ class BudgetGateSpec extends AnyFunSuite {
       "doc_id", "source", "text", statePath, 25L)
     a1.unpersist()
     assert(state() == Map("web" -> 10L, "forum" -> 4L))
-    BudgetGateSpec.armed = true
+    Refusing.armed = true
     try intercept[Exception](BudgetGate.admitBatch(
       docs((3L, "web", words(5, "c"))), "doc_id", "source", "text", statePath, 25L))
-    finally BudgetGateSpec.armed = false
+    finally Refusing.armed = false
     assert(state() == Map("web" -> 10L, "forum" -> 4L),
       "a failed state write must leave the first batch's state serving")
+  }
+
+  test("admitBatch runs no more Spark jobs than its measured count") {
+    // a ceiling at the measured count per batch, not a target: a new job
+    // fails here with the per-call-site breakdown
+    val statePath = Files.createTempDirectory("graft_budget5").toString + "/state"
+    val batches = Seq(
+      docs((1L, "web", words(10, "a")), (2L, "web", words(10, "b")),
+        (3L, "forum", words(24, "c"))),
+      docs((4L, "web", words(5, "d")), (5L, "web", words(1, "e")),
+        (6L, "forum", words(1, "f")), (7L, "news", words(30, "g"))),
+      docs((8L, "web", words(1, "h")), (9L, "news", words(20, "i"))))
+    for (((batch, ceiling), i) <- batches.zip(Seq(14, 16, 16)).zipWithIndex) {
+      val ((a, _), sites) = JobSites(spark)(
+        BudgetGate.admitBatch(batch, "doc_id", "source", "text", statePath, 25L))
+      a.unpersist()
+      info(s"batch ${i + 1}: ${sites.values.sum} jobs: $sites")
+      assert(sites.values.sum <= ceiling,
+        s"batch ${i + 1}: admitBatch ran ${sites.values.sum} jobs, ceiling $ceiling: $sites")
+    }
   }
 
   test("gate leaves no persisted storage behind once results release") {
@@ -106,58 +123,4 @@ class BudgetGateSpec extends AnyFunSuite {
     a.unpersist(blocking = true)
     assert(sc.getPersistentRDDs.size == before, "budget gate stranded storage")
   }
-}
-
-object BudgetGateSpec {
-  import java.net.URI
-  import org.apache.hadoop.conf.Configuration
-  import org.apache.hadoop.fs.{CreateFlag, DelegateToFileSystem, FSDataOutputStream,
-    FileStatus, Path, RawLocalFileSystem}
-  import org.apache.hadoop.fs.permission.FsPermission
-  import org.apache.hadoop.util.Progressable
-
-  /** While set, [[RefusingFileSystem]] fails every part-file create. */
-  @volatile var armed = false
-
-  /** The local filesystem under the `refusing` scheme. Statuses are
-    * built plainly: the local ones read their permissions through a
-    * `file:` URI of their own path. */
-  class RefusingFileSystem extends RawLocalFileSystem {
-    override def getUri: URI = URI.create("refusing:///")
-    override def getScheme: String = "refusing"
-    override def getFileStatus(f: Path): FileStatus = {
-      val file = pathToFile(f)
-      if (!file.exists) throw new java.io.FileNotFoundException(f.toString)
-      new FileStatus(file.length, file.isDirectory, 1, getDefaultBlockSize(f),
-        file.lastModified, makeQualified(f))
-    }
-    override def listStatus(f: Path): Array[FileStatus] = {
-      val st = getFileStatus(f)
-      if (!st.isDirectory) Array(st)
-      else pathToFile(f).list().map(n => getFileStatus(new Path(f, n)))
-    }
-    private def refuse(f: Path): Unit =
-      if (armed && f.getName.startsWith("part-"))
-        throw new java.io.IOException(s"refusing to create $f")
-    override def create(f: Path, overwrite: Boolean, bufferSize: Int,
-        replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
-      refuse(f); super.create(f, overwrite, bufferSize, replication, blockSize, progress)
-    }
-    override def create(f: Path, permission: FsPermission, overwrite: Boolean,
-        bufferSize: Int, replication: Short, blockSize: Long,
-        progress: Progressable): FSDataOutputStream = {
-      refuse(f)
-      super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
-    }
-    override def createNonRecursive(f: Path, permission: FsPermission,
-        flags: java.util.EnumSet[CreateFlag], bufferSize: Int, replication: Short,
-        blockSize: Long, progress: Progressable): FSDataOutputStream = {
-      refuse(f)
-      super.createNonRecursive(f, permission, flags, bufferSize, replication, blockSize, progress)
-    }
-  }
-
-  /** The `FileContext` binding of the same filesystem. */
-  class RefusingFs(uri: URI, conf: Configuration)
-      extends DelegateToFileSystem(uri, new RefusingFileSystem, conf, "refusing", false)
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SharedSpark
+import graft.{JobSites, SharedSpark}
 import graft.operators.ConnectedComponents
 
 /** The streaming identity-components contract: batches fold forward to
@@ -69,6 +69,20 @@ class IdentityComponentsStreamSpec extends AnyFunSuite {
     // generations are pruned to committed + previous
     val gens = new java.io.File(statePath).list().filter(_.startsWith("gen="))
     assert(gens.length <= 2, s"stale generations not pruned: ${gens.toSeq}")
+  }
+
+  test("applyBatch runs no more Spark jobs than its measured count") {
+    // a ceiling at the measured count per batch, not a target: a new job
+    // fails here with the per-call-site breakdown
+    val statePath = Files.createTempDirectory("graft_idc_jobs").toString
+    val batches = Seq(Seq((1L, 2L), (3L, 4L)), Seq((2L, 5L)), Seq((4L, 6L)))
+    for (((b, ceiling), i) <- batches.zip(Seq(9, 18, 18)).zipWithIndex) {
+      val (_, sites) = JobSites(spark)(
+        IdentityComponents.applyBatch(spark, edges(b), "src", "dst", statePath))
+      info(s"batch ${i + 1}: ${sites.values.sum} jobs: $sites")
+      assert(sites.values.sum <= ceiling,
+        s"batch ${i + 1}: applyBatch ran ${sites.values.sum} jobs, ceiling $ceiling: $sites")
+    }
   }
 
   test("the maintainer leaves no persisted storage behind") {

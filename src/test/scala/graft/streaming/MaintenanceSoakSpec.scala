@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
-import graft.etl.{MaterializedView, SnapshotCatalog}
+import graft.etl.{GenerationStore, MaterializedView, SnapshotCatalog}
 
 /** LONG-HORIZON soak of the maintenance stack: the MV/GenerationStore/
   * SnapshotCatalog loop is proven correct over a handful of cycles by
@@ -21,9 +21,10 @@ import graft.etl.{MaterializedView, SnapshotCatalog}
   *
   *   - GENERATIONS: on-disk generation dirs and archived manifest
   *     versions stay within the keepVersions window (+1 live), i.e.
-  *     GC reclaimed ~197 of 200 — and superseded catalog PINS release
-  *     (the pin-retention hook must extend retention while pinned,
-  *     never leak it after the pin advances);
+  *     GC reclaimed ~197 of 200, in the view store and in the state
+  *     store (one retained version) alike — and superseded catalog PINS
+  *     release (the pin-retention hook must extend retention while
+  *     pinned, never leak it after the pin advances);
   *   - FILES: the view tree holds a bounded file count (one parquet
   *     file per touched bucket per retained generation, plus marker/
   *     sidecar files), state tree likewise — no sprawl;
@@ -88,6 +89,16 @@ class MaintenanceSoakSpec extends AnyFunSuite {
     // to (keepVersions+1) + (nBuckets-1) distinct generations = 4 here
     assert(genDirs.size <= 4,
       s"${genDirs.size} generation dirs after $Cycles cycles — GC not reclaiming")
+    // the state store retains one version: the same bound gives
+    // (1+1) archived versions and (1+1) + (nBuckets-1) = 3 generations
+    val stateVersions = new GenerationStore(s"$root/mv/state", "__mv_bucket").versionsOnDisk(spark)
+    assert(stateVersions.size <= 2,
+      s"${stateVersions.size} archived state versions after $Cycles cycles — GC not reclaiming")
+    val stateGenDirs = Option(new java.io.File(s"$root/mv/state").listFiles())
+      .map(_.toSeq).getOrElse(Seq.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith("gen="))
+    assert(stateGenDirs.nonEmpty && stateGenDirs.size <= 3,
+      s"${stateGenDirs.size} state generation dirs after $Cycles cycles — GC not reclaiming")
 
     // FILES: bounded by retention x buckets, not by cycle count.
     // Per generation: <= nBuckets bucket dirs x (1 parquet + _SUCCESS
