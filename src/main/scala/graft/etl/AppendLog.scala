@@ -30,12 +30,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * [[GenerationStore]] rule), so a qualified `file:`/`hdfs:` path reads
   * the same store the Spark writer appended to.
   *
-  * The log OWNS its schema: the first append writes the
-  * [[GenerationStore.SchemaSidecar]] (the snapshot store keeps its own;
-  * no other log-shaped store remains), so [[load]] reads without a
-  * footer-inference job (one bare Spark job per call otherwise), and an
-  * append whose schema differs from it fails before writing. Logs that
-  * predate the sidecar load through inference until their next compact.
+  * The log OWNS its schema: the first append writes it to a sidecar
+  * file at the log root (the snapshot store's schema rides its
+  * manifest; the appends have no manifest to carry theirs), so [[load]]
+  * reads without a footer-inference job (one bare Spark job per call
+  * otherwise), and an append whose schema differs from it fails before
+  * writing. Logs that predate the sidecar load through inference until
+  * their next compact.
   */
 object AppendLog {
 
@@ -45,8 +46,10 @@ object AppendLog {
   private def snapshot(statePath: String): GenerationStore =
     GenerationStore.single(s"$statePath/_snapshot.parquet")
 
+  /** `_`-prefixed: hidden from Spark's listing of the log directory;
+    * content is `StructType.json`. */
   private def sidecar(statePath: String): Path =
-    new Path(statePath, GenerationStore.SchemaSidecar)
+    new Path(statePath, "_graft_schema.json")
 
   private def recordSchema(spark: SparkSession, statePath: String, schema: StructType): Unit =
     AtomicText.write(sidecar(statePath), schema.json, spark.sparkContext.hadoopConfiguration)

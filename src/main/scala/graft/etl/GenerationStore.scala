@@ -107,9 +107,14 @@ private[graft] object AtomicText {
   *     `{root}/gen=N/{bucket}=K/…`; a publish writes the refreshed
   *     buckets' rows to a brand-new generation — never touching any
   *     directory a reader could currently hold;
-  *   - a single small MANIFEST file (`{root}/_MANIFEST`, one
-  *     `bucket:generation` line per bucket) names the live generation
-  *     of every bucket. It is replaced ATOMICALLY through a pluggable
+  *   - a single small MANIFEST file (`{root}/_MANIFEST`) names the
+  *     data schema and the live generation of every bucket: its first
+  *     line is the schema's `StructType.json` (one line; a JSON line
+  *     starts with `{`, which no bucket line can), then one
+  *     `bucket:generation` line per bucket. A manifest is the complete
+  *     description of its version, so the columns and the rows they
+  *     describe commit in ONE write. It is replaced ATOMICALLY through
+  *     a pluggable
   *     [[CommitProtocol]] — [[RenameCommit]] (temp name +
   *     rename-with-overwrite, the atomic spelling on HDFS/POSIX) by
   *     default, [[ScanCommit]] (immutable sequenced keys + validated
@@ -120,7 +125,7 @@ private[graft] object AtomicText {
   *     reader serves the complete old state; after the swap it serves
   *     the complete new state. There is no instant at which a bucket
   *     is missing;
-  *   - every committed swap also archives its manifest as
+  *   - every swap first archives the same manifest text as
   *     `_MANIFEST.v{N}` (N = the swap's generation id), giving
   *     Iceberg-style SNAPSHOT READS: [[readVersion]] serves the exact
   *     state any retained version published. `keepVersions` bounds the
@@ -199,25 +204,25 @@ final class GenerationStore(
 
   private def genDir(gen: Long): String = s"$root/gen=$gen"
   private def versionPath(v: Long): Path = new Path(root, s"$manifestName.v$v")
-  private val schemaVersionRe =
-    (raw"${java.util.regex.Pattern.quote(GenerationStore.SchemaSidecar)}" +
-      raw"\.v(\d+)$$").r
-  private def schemaVersionPath(v: Long): Path =
-    new Path(root, s"${GenerationStore.SchemaSidecar}.v$v")
 
-  private def parse(text: String): Map[Long, Long] =
-    text.linesIterator.filter(_.nonEmpty).map { line =>
-      val Array(b, g) = line.split(':')
-      b.toLong -> g.toLong
-    }.toMap
+  /** A manifest file: (schema JSON line, bucket → generation). The
+    * schema is None in a manifest written before manifests carried it. */
+  private def load(spark: SparkSession, path: Path): Option[(Option[String], Map[Long, Long])] =
+    commit.read(path, conf(spark)).map { text =>
+      val (schema, buckets) = text.linesIterator.filter(_.nonEmpty).toSeq.span(_.startsWith("{"))
+      schema.headOption -> buckets.map { line =>
+        val Array(b, g) = line.split(':')
+        b.toLong -> g.toLong
+      }.toMap
+    }
 
   /** The live (bucket → generation) map; None = never published. */
   private[graft] def manifest(spark: SparkSession): Option[Map[Long, Long]] =
-    commit.read(manifestPath, conf(spark)).map(parse)
+    load(spark, manifestPath).map(_._2)
 
   /** The archived manifest of version `v`, if retained. */
   private[graft] def manifestAt(spark: SparkSession, v: Long): Option[Map[Long, Long]] =
-    commit.read(versionPath(v), conf(spark)).map(parse)
+    load(spark, versionPath(v)).map(_._2)
 
   /** All version ids with an archived manifest on disk, ascending
     * (crashed partials included until the next publish GCs them).
@@ -263,24 +268,27 @@ final class GenerationStore(
     *     schema and parquet back-fills absent columns with null);
     *   - a FULL publish (every live bucket republished) may change the
     *     schema freely — nothing old is carried forward;
-    *   - every publish archives its schema beside its manifest
-    *     (`_graft_schema.json.v{N}`), and snapshot reads
-    *     ([[readVersion]]/[[readBucketsAt]]) resolve under the schema
-    *     ARCHIVED AT that version — an old pin reads bit-identically
-    *     no matter what later publishes added (they can't see columns
-    *     that postdate them, and a column added before them keeps its
-    *     position). A PRE-archive version (store written before
-    *     schemas were versioned) resolves by merged footer inference —
-    *     never the live sidecar, which a later full publish may
-    *     legally have retyped. */
+    *   - the schema is committed WITH its manifest (its first line), so
+    *     every read resolves under the schema of the manifest it
+    *     resolves buckets from: a live reader never sees columns before
+    *     the rows they describe, and snapshot reads ([[readVersion]]/
+    *     [[readBucketsAt]]) resolve an old pin bit-identically no
+    *     matter what later publishes added (they can't see columns that
+    *     postdate them, and a column added before them keeps its
+    *     position). A manifest without a schema line (a store written
+    *     before manifests carried one) resolves by merged footer
+    *     inference, and so does its add-only check here — never another
+    *     version's schema, which a later full publish may legally have
+    *     retyped. */
   def publish(rows: DataFrame, buckets: Seq[Long]): Long = {
     require(buckets.nonEmpty, "publish needs at least one bucket")
     val spark = rows.sparkSession
-    val current = manifest(spark).getOrElse(Map.empty)
+    val (liveJson, current) = load(spark, manifestPath).getOrElse(None -> Map.empty[Long, Long])
     val newSchema = org.apache.spark.sql.types.StructType(
       rows.schema.filter(_.name != bucketCol))
     val carried = current.keySet -- buckets.toSet
-    if (carried.nonEmpty) readSchema(liveSchemaJson(spark)).foreach { live =>
+    if (carried.nonEmpty) readSchema(liveJson)
+        .orElse(resolve(spark, current, None).map(_.schema)).foreach { live =>
       val newTypes = newSchema.map(f => f.name -> f.dataType).toMap
       val broken = live.filterNot(f =>
         newTypes.get(f.name).exists(GenerationStore.sameTypeIgnoreNullability(_, f.dataType)))
@@ -294,19 +302,11 @@ final class GenerationStore(
     gc(spark, current)
     val nextGen = maxGen(current) + 1
     rows.write.mode("overwrite").partitionBy(bucketCol).parquet(genDir(nextGen))
-    // schema sidecars at the ROOT (never inside a generation — gc
-    // sweeps those): readers resolve leaf bucket dirs directly, so the
-    // served schema is the data columns WITHOUT the bucket partition
-    // column. Written per publish THROUGH the commit protocol
-    // (ScanCommit's gc treats unsequenced strays as temps), read by
-    // [[resolve]] to skip the per-read footer-inference job. The
-    // version-archived copy FIRST (crash leaves an orphan the next gc
-    // sweeps), then the live one.
-    commit.write(schemaVersionPath(nextGen), newSchema.json, conf(spark))
-    commit.write(new Path(root, GenerationStore.SchemaSidecar),
-      newSchema.json, conf(spark))
     onBeforeSwap()
-    swap(spark, current ++ buckets.map(_ -> nextGen), nextGen)
+    // readers resolve leaf bucket dirs directly, so the manifest's
+    // schema is the data columns WITHOUT the bucket partition column;
+    // it lets [[resolve]] skip the per-read footer-inference job
+    swap(spark, newSchema.json, current ++ buckets.map(_ -> nextGen), nextGen)
     nextGen
   }
 
@@ -316,23 +316,10 @@ final class GenerationStore(
   private[graft] def replace(rows: DataFrame): Long =
     publish(rows.withColumn(bucketCol, org.apache.spark.sql.functions.lit(0L)), Seq(0L))
 
-  private def liveSchemaJson(spark: SparkSession): Option[String] =
-    commit.read(new Path(root, GenerationStore.SchemaSidecar), conf(spark))
-
-  /** The live data columns (no bucket column) from the publish sidecar;
+  /** The live data columns (no bucket column) from the live manifest;
     * None = never published. Keeps an all-empty store readable. */
   private[graft] def schema(spark: SparkSession): Option[org.apache.spark.sql.types.StructType] =
-    readSchema(liveSchemaJson(spark))
-
-  /** The schema version `v` committed under. A version that predates
-    * per-version schema archives resolves with NO pinned schema —
-    * parquet footer inference, which reads the truth out of the files
-    * themselves. Falling back to the LIVE sidecar would be wrong, not
-    * just slow: a later FULL publish may legally retype or drop
-    * columns, and a pre-archive pin read under that newer schema would
-    * corrupt or fail instead of serving bit-identically. */
-  private def schemaJsonAt(spark: SparkSession, v: Long): Option[String] =
-    commit.read(schemaVersionPath(v), conf(spark))
+    readSchema(load(spark, manifestPath).flatMap(_._1))
 
   private def readSchema(json: Option[String]): Option[org.apache.spark.sql.types.StructType] =
     json.map(org.apache.spark.sql.types.DataType.fromJson(_)
@@ -342,18 +329,14 @@ final class GenerationStore(
     * bucket's generation directory. None = never published (caller owns
     * the empty-schema fallback) — also the answer when every live
     * bucket is empty, since an empty bucket writes no files. */
-  def read(spark: SparkSession): Option[DataFrame] =
-    manifest(spark).flatMap(resolve(spark, _, liveSchemaJson(spark)))
+  def read(spark: SparkSession): Option[DataFrame] = resolveAt(spark, manifestPath)
 
   /** Bucket-scoped manifest read: just `buckets`' live rows (the
     * carry-forward input of a key-scoped refresh — untouched buckets
     * are never opened). None = never published, or those buckets are
     * all currently empty. */
-  private[graft] def readBuckets(spark: SparkSession, buckets: Seq[Long]): Option[DataFrame] = {
-    val want = buckets.toSet
-    manifest(spark).flatMap(m =>
-      resolve(spark, m.filter { case (b, _) => want(b) }, liveSchemaJson(spark)))
-  }
+  private[graft] def readBuckets(spark: SparkSession, buckets: Seq[Long]): Option[DataFrame] =
+    resolveAt(spark, manifestPath, Some(buckets))
 
   /** SNAPSHOT READ: the complete state exactly as committed version `v`
     * served it. None once the version has aged past `keepVersions` (or
@@ -361,8 +344,7 @@ final class GenerationStore(
     * was built with. */
   def readVersion(spark: SparkSession, v: Long): Option[DataFrame] =
     if (!versions(spark).contains(v)) None
-    else manifestAt(spark, v).flatMap(
-      resolve(spark, _, schemaJsonAt(spark, v)))
+    else resolveAt(spark, versionPath(v))
 
   /** Bucket-scoped SNAPSHOT read: just `buckets`' rows exactly as
     * version `v` served them — the probe path of a served index's one
@@ -374,18 +356,22 @@ final class GenerationStore(
     * the scan statically prunes to them. None = version aged/never existed, or those
     * buckets are all empty at `v`. */
   private[graft] def readBucketsAt(
-      spark: SparkSession, v: Long, buckets: Seq[Long]): Option[DataFrame] = {
-    val want = buckets.toSet
+      spark: SparkSession, v: Long, buckets: Seq[Long]): Option[DataFrame] =
     if (!versions(spark).contains(v)) None
-    else manifestAt(spark, v).flatMap(m =>
-      resolve(spark, m.filter { case (b, _) => want(b) },
-        schemaJsonAt(spark, v)))
-  }
+    else resolveAt(spark, versionPath(v), Some(buckets))
+
+  /** Resolve the manifest file at `path` (only `buckets` of it, when
+    * given) under its own schema line. */
+  private def resolveAt(
+      spark: SparkSession, path: Path, buckets: Option[Seq[Long]] = None): Option[DataFrame] =
+    load(spark, path).flatMap { case (js, m) =>
+      val want = buckets.fold(m.keySet)(_.toSet)
+      resolve(spark, m.filter { case (b, _) => want(b) }, js)
+    }
 
   /** Union the manifested bucket dirs under `schemaJson` — the schema
-    * the caller's version committed with (live sidecar for live reads),
-    * so a snapshot read never sees columns that postdate it. Absent
-    * sidecar = footer inference, the pre-sidecar fallback. */
+    * line of the manifest `m` came from, so a read never sees columns
+    * that postdate its version. Absent = merged footer inference. */
   private def resolve(
       spark: SparkSession,
       m: Map[Long, Long],
@@ -394,9 +380,9 @@ final class GenerationStore(
     if (paths.isEmpty) None
     else readSchema(schemaJson) match {
       case Some(schema) => Some(spark.read.schema(schema).parquet(paths: _*))
-      // no pinned schema (a pre-archive version): merge ALL footers —
-      // a pre-archive manifest can legally mix generations with and
-      // without an added column, and single-footer inference would
+      // no schema line (a manifest written before they carried one):
+      // merge ALL footers — such a manifest can legally mix generations
+      // with and without an added column, and single-footer inference would
       // silently drop the column for every row depending on which file
       // won; the footer union null-fills, matching the live policy
       case None =>
@@ -450,16 +436,15 @@ final class GenerationStore(
       } else commit.logicalName(n) match {
         case None => f.delete(st.getPath, false) // protocol temp
         case Some(versionRe(v)) if !retained.contains(v.toLong) =>
-          commit.delete(new Path(root, s"$manifestName.v$v"), conf(spark))
-        case Some(schemaVersionRe(v)) if !retained.contains(v.toLong) =>
-          commit.delete(schemaVersionPath(v.toLong), conf(spark))
-        case _ => () // live manifest/sidecar / retained version / foreign
+          commit.delete(versionPath(v.toLong), conf(spark))
+        case _ => () // live manifest / retained version / foreign
       }
     }
   }
 
-  private def swap(spark: SparkSession, m: Map[Long, Long], version: Long): Unit = {
-    val text = m.toSeq.sorted.map { case (b, g) => s"$b:$g" }.mkString("\n")
+  private def swap(
+      spark: SparkSession, schemaJson: String, m: Map[Long, Long], version: Long): Unit = {
+    val text = (schemaJson +: m.toSeq.sorted.map { case (b, g) => s"$b:$g" }).mkString("\n")
     // archive FIRST: a crash between the two writes leaves a version
     // file newer than the manifest — never read (versions() filters it),
     // GC'd at the next publish
@@ -469,10 +454,6 @@ final class GenerationStore(
 }
 
 object GenerationStore {
-
-  /** The schema sidecar's name (`_`-prefixed: hidden from Spark's file
-    * discovery); content is `StructType.json`. [[AppendLog]] uses it too. */
-  private[graft] val SchemaSidecar = "_graft_schema.json"
 
   /** A store with one bucket ([[GenerationStore.replace]] publishes it
     * whole): [[graft.streaming.BudgetGate]] state, [[AppendLog]]

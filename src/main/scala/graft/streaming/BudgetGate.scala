@@ -74,9 +74,10 @@ object BudgetGate {
     } finally release()
   }
 
-  /** The persistent `(sourceCol, __cum_tokens)` state, read through the
-    * store's schema sidecar; empty on first use (schema built rather
-    * than inferred: a publish of zero rows leaves no files). */
+  /** The persistent `(sourceCol, __cum_tokens)` state, read under the
+    * schema its store's manifest carries; empty on first use (schema
+    * built rather than inferred: a publish of zero rows leaves no
+    * files). */
   def readState(
       spark: SparkSession, statePath: String, sourceCol: String): DataFrame =
     GenerationStore.single(statePath).read(spark).getOrElse {

@@ -26,11 +26,11 @@ import graft.etl.AtomicText
   * Crash anywhere, replay converges, nothing double-applies:
   *
   *   - before the refresh: nothing happened;
-  *   - inside the refresh: the state's dynamic partition overwrite may
-  *     have committed SOME buckets — but state is latest-version-wins
-  *     per fact key, so re-unioning the replayed batch reproduces the
-  *     exact same winners; the view publish is all-or-nothing behind
-  *     the manifest swap;
+  *   - inside the refresh: the view and the fact state each publish
+  *     all-or-nothing behind their own manifest swap, view first, so a
+  *     crash leaves neither, the view alone, or both committed — and
+  *     state is latest-version-wins per fact key, so re-unioning the
+  *     replayed batch reproduces the exact same winners;
   *   - between refresh and mark: the batch re-selects and re-applies
   *     in full — latest-wins makes re-application a no-op on state,
   *     and the re-derived view rows are identical.

@@ -236,13 +236,16 @@ class GenerationStoreSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val conf = s.sparkContext.hadoopConfiguration
-    // fake: tear the Nth-from-now raw key write halfway through
+    // fake: tear the Nth-from-now raw key write halfway through, and
+    // record the logical file each torn key encodes
     class Tearing extends ScanCommit(keepKeys = 2) {
       var tearIn: Int = 0 // 0 = disarmed; N = fail the Nth next write
+      val torn = scala.collection.mutable.ArrayBuffer.empty[String]
       override protected def writeBytes(
           p: org.apache.hadoop.fs.Path, bytes: Array[Byte],
           c: org.apache.hadoop.conf.Configuration): Unit =
         if (tearIn > 0 && { tearIn -= 1; tearIn == 0 }) {
+          torn ++= logicalName(p.getName)
           super.writeBytes(p, bytes.take(bytes.length / 2), c)
           throw new Boom
         } else super.writeBytes(p, bytes, c)
@@ -261,12 +264,14 @@ class GenerationStoreSpec extends AnyFunSuite {
     // tear the VERSION-ARCHIVE write (first control write of a publish)
     tearing.tearIn = 1
     intercept[Boom] { store.publish(df((1L, "a2", 0L)), Seq(0L)) }
+    assert(tearing.torn.toSeq == Seq("_MANIFEST.v2"))
     assert(m(store.read(spark)) == Map(1L -> "a", 2L -> "b"),
       "torn version archive must leave the old manifest serving")
 
     // tear the MANIFEST write itself (second control write)
     tearing.tearIn = 2
     intercept[Boom] { store.publish(df((1L, "a2", 0L)), Seq(0L)) }
+    assert(tearing.torn.toSeq == Seq("_MANIFEST.v2", "_MANIFEST"))
     assert(m(store.read(spark)) == Map(1L -> "a", 2L -> "b"),
       "torn manifest must leave the previous complete manifest serving")
     assert(store.versions(spark) == Seq(v1),
@@ -286,6 +291,75 @@ class GenerationStoreSpec extends AnyFunSuite {
     assert(store.readVersion(spark, v1).isEmpty, "aged version must be gone")
     assert(store.versions(spark).takeRight(1) == Seq(v4))
     assert(store.readVersion(spark, v3).isDefined)
+  }
+
+  test("one publish is 2 control writes and one live read is 1 control read") {
+    // the manifest carries the schema, so a version is ONE control file:
+    // a publish archives it and swaps it, a live read opens only it
+    val s = spark
+    import s.implicits._
+    class Counting extends ScanCommit {
+      val writes, reads = scala.collection.mutable.ArrayBuffer.empty[String]
+      override def write(p: org.apache.hadoop.fs.Path, text: String,
+          c: org.apache.hadoop.conf.Configuration): Unit = {
+        writes += p.getName
+        super.write(p, text, c)
+      }
+      override def read(p: org.apache.hadoop.fs.Path,
+          c: org.apache.hadoop.conf.Configuration): Option[String] = {
+        reads += p.getName
+        super.read(p, c)
+      }
+    }
+    val counting = new Counting
+    val root = Files.createTempDirectory("graft_gen_count").toString
+    val store = new GenerationStore(root, "__b", commit = counting)
+    store.publish(Seq((1L, "a", 0L), (2L, "b", 1L)).toDF("id", "payload", "__b"), Seq(0L, 1L))
+    counting.writes.clear()
+    val v2 = store.publish(Seq((1L, "a2", 0L)).toDF("id", "payload", "__b"), Seq(0L))
+    val publishWrites = counting.writes.toSeq
+    counting.reads.clear()
+    val live = store.read(spark).get
+    assert((publishWrites, counting.reads.toSeq) ==
+      ((Seq(s"_MANIFEST.v$v2", "_MANIFEST"), Seq("_MANIFEST"))))
+    assert(live.collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      Map(1L -> "a2", 2L -> "b"))
+  }
+
+  test("schema commits with its manifest: a reader inside an add-column publish sees the old columns") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft_gen_window").toString
+    val store = new GenerationStore(root, "__b")
+    store.publish(Seq((1L, "a", 0L), (2L, "b", 1L)).toDF("id", "payload", "__b"), Seq(0L, 1L))
+    var observed: Seq[String] = null
+    store.onBeforeSwap = () => observed = store.read(spark).get.columns.toSeq
+    store.publish(Seq((1L, "a2", 9.5, 0L)).toDF("id", "payload", "score", "__b"), Seq(0L))
+    store.onBeforeSwap = () => ()
+    assert(observed == Seq("id", "payload"),
+      "a reader before the swap must see the old version's columns, not the new ones")
+    assert(store.read(spark).get.columns.toSeq == Seq("id", "payload", "score"))
+  }
+
+  test("schema commits with its manifest: a crashed retype serves the old schema, its replay the new") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft_gen_retype").toString
+    val store = new GenerationStore(root, "__b")
+    store.publish(Seq((1L, "a", 0L), (2L, "b", 1L)).toDF("id", "payload", "__b"), Seq(0L, 1L))
+    val retyped = Seq((1L, 5, 0L), (2L, 6, 1L)).toDF("id", "payload", "__b")
+    store.onBeforeSwap = () => throw new Boom
+    intercept[Boom] { store.publish(retyped, Seq(0L, 1L)) }
+    store.onBeforeSwap = () => ()
+    val old = store.read(spark).get
+    assert(old.collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      Map(1L -> "a", 2L -> "b"), "a crash before the swap must serve the old rows")
+    assert(old.schema("payload").dataType == org.apache.spark.sql.types.StringType)
+    store.publish(retyped, Seq(0L, 1L))
+    val replayed = store.read(spark).get
+    assert(replayed.schema("payload").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(replayed.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap ==
+      Map(1L -> 5, 2L -> 6))
   }
 
   test("ScanCommit: an unreadable newest key falls through to the older valid frame") {
@@ -511,12 +585,18 @@ class GenerationStoreSpec extends AnyFunSuite {
     assert(store.readVersion(spark, v2).get
       .filter(col("id") === 2L).select("score").head.isNullAt(0))
 
-    // PRE-ARCHIVE versions (a store written before schemas were
-    // versioned — simulated by deleting v1's archive) must resolve by
-    // footer INFERENCE, never the live sidecar: a later full publish
-    // legally retyped columns, and v1 read under v3's schema would
-    // corrupt instead of serving bit-identically
-    assert(new java.io.File(root, "_graft_schema.json.v1").delete())
+    // versions archived WITHOUT a schema line (a store written before
+    // manifests carried one — simulated by rewriting the archive in
+    // that format) must resolve by footer INFERENCE, never the live
+    // schema: a later full publish legally retyped columns, and v1 read
+    // under v3's schema would corrupt instead of serving bit-identically
+    def dropSchemaLine(v: Long): Unit = {
+      val f = java.nio.file.Paths.get(root, s"_MANIFEST.v$v")
+      Files.writeString(f,
+        Files.readString(f).linesIterator.filterNot(_.startsWith("{")).mkString("\n"))
+      ()
+    }
+    dropSchemaLine(v1)
     val preArchive = store.readVersion(spark, v1).get
     assert(preArchive.columns.toSeq == Seq("id", "payload"),
       "a pre-archive pin must read its own schema out of the files")
@@ -526,21 +606,22 @@ class GenerationStoreSpec extends AnyFunSuite {
     // with and without an added column resolves by MERGED footers —
     // single-footer inference would silently drop the column for
     // every row whenever the older file's footer won
-    assert(new java.io.File(root, "_graft_schema.json.v2").delete())
+    dropSchemaLine(v2)
     val preArchiveMixed = store.readVersion(spark, v2).get
     assert(preArchiveMixed.columns.toSet == Set("id", "payload", "score"),
       s"mixed-generation pre-archive read lost a column: ${preArchiveMixed.columns.toSeq}")
     assert(preArchiveMixed.filter(col("id") === 2L).select("score").head.isNullAt(0))
     assert(preArchiveMixed.filter(col("id") === 1L).select("score").head.getDouble(0) == 9.5)
 
-    // GC: once versions age out, their archived schema files go with
-    // their manifests (keepVersions = 4 here, so publish 2 more)
+    // GC: versions age out with their manifests, which carry their
+    // schemas — no schema file exists beside them (keepVersions = 4
+    // here, so publish 3 more)
     store.publish(Seq((1L, 9L, 0L)).toDF("id", "score_int", "__b"), Seq(0L))
     store.publish(Seq((1L, 10L, 0L)).toDF("id", "score_int", "__b"), Seq(0L))
     store.publish(Seq((1L, 11L, 0L)).toDF("id", "score_int", "__b"), Seq(0L))
     val names = new java.io.File(root).listFiles().map(_.getName).toSet
-    assert(!names.contains("_graft_schema.json.v1"),
-      s"an aged-out version's schema archive must be GC'd: $names")
-    assert(names.contains("_graft_schema.json"), "live sidecar must survive GC")
+    assert(!names.exists(_.startsWith("_graft_schema.json")),
+      s"a schema file beside the manifests: $names")
+    assert(store.schema(spark).get.fieldNames.toSeq == Seq("id", "score_int"))
   }
 }

@@ -62,7 +62,7 @@ class MaterializedViewSpec extends AnyFunSuite {
       (2L, 3L, false, "b3"),  // LATE older version must lose to stored b5
       (7L, 1L, false, "g1"))  // brand-new key
     // an EMPTY build writes no state files at all: only the schema
-    // sidecar keeps the store readable and refreshable
+    // line of the store's manifest keeps it readable and refreshable
     for (b <- Seq(base, base.limit(0))) {
       val (_, mv) = mk()
       mv.build(b)
