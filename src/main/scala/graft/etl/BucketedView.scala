@@ -55,7 +55,9 @@ import graft.operators.Dedup
   * SINGLE WRITER, enforced: build and every refresh serialize on a
   * per-view lock (uncontended with one writer), so a dimension refresh
   * fired mid-stream interleaves between micro-batches instead of
-  * racing one; any serial order converges.
+  * racing one, and two refreshes of one view handed the same batch
+  * concurrently ([[graft.streaming.Streams.maintainCycle]]) take the
+  * lock in either order; any serial order converges.
   *
   * REFRESH (one side's batch), four SQL executions on a ≤64-bucket store:
   *
@@ -72,21 +74,29 @@ import graft.operators.Dedup
   *   3. derive + publish — only CHANGED buckets; a bucket whose fold is
   *      byte-identical is skipped, so a replayed batch publishes NO
   *      generation (the idempotence at-least-once delivery relies on).
-  *   4. state write — the changed buckets' new state, published into the
-  *      side's store as one generation behind its manifest swap.
+  *   4. state write — the changed buckets' new state, staged into the
+  *      side's store as one generation ([[GenerationStore.stage]]) on a
+  *      second thread WHILE step 3 runs: both read only the fold+flag
+  *      checkpoint and stores the other never writes. Its manifest swap
+  *      waits for step 3's swap.
   *
   * CRASH CONTRACT — publish BEFORE the state write. The no-op skip keys
   * off the state fold, so the state write must be the last durable
   * step: a crash anywhere leaves state old, and replaying the batch
   * re-detects the change, re-publishes idempotently and completes the
   * state write (state-first plus the skip made a crash between the two
-  * skip the publish forever). The state write is all-or-nothing across
-  * its buckets (a crash before its manifest swap leaves every bucket
-  * old): no torn multi-bucket state. The mirror window — view published,
-  * state not yet written — is closed by any later replay of the crashed
-  * batch (latest-version-wins). The fold+flag checkpoint materializes
-  * every read of the old state first, so the state publish's GC never
-  * removes files a pending plan still reads.
+  * skip the publish forever). A store's durable step is its manifest
+  * swap, not its generation write, so staging the state early keeps the
+  * order: the state swap runs only after the view's swap and
+  * [[onAfterPublish]], and a staged generation never swapped (the view
+  * publish failed) is a crashed partial write the next state publish's
+  * GC collects. The state write is all-or-nothing across its buckets (a
+  * crash before its manifest swap leaves every bucket old): no torn
+  * multi-bucket state. The mirror window — view published, state not
+  * yet swapped — is closed by any later replay of the crashed batch
+  * (latest-version-wins). The fold+flag checkpoint materializes every
+  * read of the old state first, so the state publish's GC never removes
+  * files a pending plan still reads.
   *
   * COST-BASED derive scope, chosen by the dirty buckets' on-disk state
   * size over every side (an FS-metadata probe, zero jobs): below
@@ -116,10 +126,11 @@ abstract class BucketedView private[etl] (
     * the catalog and the crash/concurrency specs). */
   private[graft] val store = new GenerationStore(s"$root/view", bucketCol, keepVersions)
 
-  /** Each side's latest-row-per-key state, one retained version. */
-  private val stateStores = sides.map(s => new GenerationStore(s"$root/${s.dir}", bucketCol))
+  /** Each side's latest-row-per-key state, one retained version
+    * (exposed to the crash-order specs). */
+  private[graft] val stateStores = sides.map(s => new GenerationStore(s"$root/${s.dir}", bucketCol))
 
-  /** Test hook: runs between the view publish and the state publish —
+  /** Test hook: runs between the view publish and the state swap —
     * the mirror crash window of the publish-first ordering. */
   private[graft] var onAfterPublish: () => Unit = () => ()
 
@@ -213,30 +224,13 @@ abstract class BucketedView private[etl] (
           ()
         }
       }
-      runAll(writes)
+      runAll(s"$phase-build")(writes)
       graft.JobLabel(spark, s"$phase:build derive+publish") {
         store.publish(
           clustered(withBucket(derive(sides.indices.map(sideState(spark, _))))),
           0L until nBuckets.toLong)
       }
     } }
-
-  /** Run independent jobs, concurrently when there is more than one,
-    * and wait for ALL to complete before rethrowing the first failure:
-    * a sibling write outliving the call would race a caller's
-    * catch-and-retry overwrite of the same path. */
-  private def runAll(jobs: Seq[() => Unit]): Unit =
-    if (jobs.size == 1) jobs.head()
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(jobs.size)
-      try {
-        val ec = ExecutionContext.fromExecutor(pool)
-        val running = jobs.map(job => Future(job())(ec))
-        running.foreach(Await.ready(_, scala.concurrent.duration.Duration.Inf))
-        running.foreach(_.value.get.get)
-      } finally pool.shutdown()
-    }
 
   /** Incremental refresh of side `side` from a CDC batch of its rows —
     * the protocol in the class doc. */
@@ -294,13 +288,19 @@ abstract class BucketedView private[etl] (
             .map(v => derived.unionByName(withBucket(antiOnKeys(v, changedAgg, bucketKeys))))
             .getOrElse(derived)
         }
-      graft.JobLabel(spark, s"$phase:refresh derive+publish") {
-        store.publish(clustered(newViewRows), changed)
-      }
-      onAfterPublish()
-      graft.JobLabel(spark, s"$phase:refresh state-write") {
-        stateStores(side).publish(newStateRows, changed)
-      }
+      // steps 3 and 4 overlap; the state swap is the last durable step
+      var swapState: () => Long = null
+      runAll(s"$phase-refresh")(Seq(
+        () => swapState = graft.JobLabel(spark, s"$phase:refresh state-write") {
+          stateStores(side).stage(newStateRows, changed)
+        },
+        () => {
+          graft.JobLabel(spark, s"$phase:refresh derive+publish") {
+            store.publish(clustered(newViewRows), changed)
+          }
+          onAfterPublish()
+        }))
+      swapState()
     } finally release()
     } finally releaseB()
   } }
@@ -312,6 +312,29 @@ object BucketedView {
     * keys its latest-version-wins fold groups by, and that fold's total
     * version `order`. */
   final case class Side(dir: String, keys: Seq[String], order: Seq[Column])
+
+  /** Run independent jobs, concurrently when there is more than one, on
+    * threads named `graft-<name>-<i>`, and wait for ALL to complete
+    * before rethrowing the first failure: a sibling outliving the call
+    * would race what the caller does next (a catch-and-retry overwrite
+    * of the same path, a state swap, a catalog commit). The engine's one
+    * thread pool: build's side writes, a refresh's state stage and view
+    * publish, and [[graft.streaming.Streams.maintainCycle]]'s member
+    * refreshes. */
+  private[graft] def runAll(name: String)(jobs: Seq[() => Unit]): Unit =
+    if (jobs.size <= 1) jobs.foreach(_())
+    else {
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      val ids = new java.util.concurrent.atomic.AtomicInteger
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(jobs.size,
+        (r: Runnable) => new Thread(r, s"graft-$name-${ids.getAndIncrement()}"))
+      try {
+        val ec = ExecutionContext.fromExecutor(pool)
+        val running = jobs.map(job => Future(job())(ec))
+        running.foreach(Await.ready(_, scala.concurrent.duration.Duration.Inf))
+        running.foreach(_.value.get.get)
+      } finally pool.shutdown()
+    }
 
   /** Dirty-state size at which a refresh switches from re-deriving whole
     * dirty buckets to the key-scoped derive + carry-forward path. 4 GiB:

@@ -3,7 +3,7 @@ package graft.etl
 import java.util.EnumSet
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Small atomically-replaced text files (manifests, high-water marks):
@@ -228,17 +228,19 @@ final class GenerationStore(
     * (crashed partials included until the next publish GCs them).
     * Physical children resolve to logical files through the commit
     * protocol (a multi-key encoding counts once). */
-  def versionsOnDisk(spark: SparkSession): Seq[Long] = {
-    val f = fs(spark)
-    val rootPath = new Path(root)
-    if (!f.exists(rootPath)) Seq.empty
-    else f.listStatus(rootPath).toSeq
-      .map(_.getPath.getName)
+  def versionsOnDisk(spark: SparkSession): Seq[Long] = versionsIn(listRoot(spark))
+
+  /** The store root's children; empty when the root does not exist yet. */
+  private def listRoot(spark: SparkSession): Seq[FileStatus] =
+    try fs(spark).listStatus(new Path(root)).toSeq
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  private def versionsIn(listing: Seq[FileStatus]): Seq[Long] =
+    listing.map(_.getPath.getName)
       .flatMap(commit.logicalName)
       .distinct
       .collect { case versionRe(v) => v.toLong }
       .sorted
-  }
 
   /** COMMITTED snapshot versions readable right now, ascending: archived
     * versions no newer than the current manifest (a version file newer
@@ -253,7 +255,10 @@ final class GenerationStore(
   /** Publish `rows` (bucket column included, hive-partitioned by it) as
     * the new truth for exactly `buckets`; every other bucket keeps its
     * current generation. Crash-safe per the class protocol. Returns the
-    * committed snapshot version id.
+    * committed snapshot version id. It is [[stage]] followed at once by
+    * the swap it returns; a caller with other work to overlap (a
+    * [[BucketedView]] refresh staging its state beside the view publish)
+    * calls the two steps itself.
     *
     * SCHEMA-EVOLUTION CONTRACT (serve-forever stores WILL evolve):
     *
@@ -280,7 +285,17 @@ final class GenerationStore(
     *     inference, and so does its add-only check here — never another
     *     version's schema, which a later full publish may legally have
     *     retyped. */
-  def publish(rows: DataFrame, buckets: Seq[Long]): Long = {
+  def publish(rows: DataFrame, buckets: Seq[Long]): Long = stage(rows, buckets)()
+
+  /** [[publish]]'s first step: the schema check, GC and the new
+    * generation's write. Returns the second, the manifest swap — it runs
+    * [[onBeforeSwap]], commits, and returns the version. Nothing is
+    * durable until the swap: a generation staged and never swapped is a
+    * crashed partial write, which the next publish's GC collects. No
+    * other publish to this store may land between the two steps (the
+    * swap names the manifest the stage read); a [[BucketedView]] holds
+    * its writer lock across both. */
+  private[graft] def stage(rows: DataFrame, buckets: Seq[Long]): () => Long = {
     require(buckets.nonEmpty, "publish needs at least one bucket")
     val spark = rows.sparkSession
     val (liveJson, current) = load(spark, manifestPath).getOrElse(None -> Map.empty[Long, Long])
@@ -302,12 +317,14 @@ final class GenerationStore(
     gc(spark, current)
     val nextGen = maxGen(current) + 1
     rows.write.mode("overwrite").partitionBy(bucketCol).parquet(genDir(nextGen))
-    onBeforeSwap()
-    // readers resolve leaf bucket dirs directly, so the manifest's
-    // schema is the data columns WITHOUT the bucket partition column;
-    // it lets [[resolve]] skip the per-read footer-inference job
-    swap(spark, newSchema.json, current ++ buckets.map(_ -> nextGen), nextGen)
-    nextGen
+    () => {
+      onBeforeSwap()
+      // readers resolve leaf bucket dirs directly, so the manifest's
+      // schema is the data columns WITHOUT the bucket partition column;
+      // it lets [[resolve]] skip the per-read footer-inference job
+      swap(spark, newSchema.json, current ++ buckets.map(_ -> nextGen), nextGen)
+      nextGen
+    }
   }
 
   /** Single-bucket use: `rows` (no bucket column) become the whole
@@ -417,9 +434,10 @@ final class GenerationStore(
     * multi-key encoding is removed whole. */
   private def gc(spark: SparkSession, live: Map[Long, Long]): Unit = {
     val f = fs(spark)
-    val rootPath = new Path(root)
-    if (!f.exists(rootPath)) return
-    val committed = versionsOnDisk(spark).filter(_ <= maxGen(live))
+    // ONE root listing serves both the version window and the sweep
+    val listing = listRoot(spark)
+    if (listing.isEmpty) return
+    val committed = versionsIn(listing).filter(_ <= maxGen(live))
     // the rolling window PLUS any externally pinned versions (catalog
     // snapshots): a pin outside the window extends retention instead of
     // losing to it; a pin naming a version that never committed (or is
@@ -429,7 +447,7 @@ final class GenerationStore(
     val liveGens = retained.toSeq
       .flatMap(v => manifestAt(spark, v).map(_.values.toSet).getOrElse(Set.empty))
       .toSet ++ live.values.toSet
-    f.listStatus(rootPath).foreach { st =>
+    listing.foreach { st =>
       val n = st.getPath.getName
       if (n.startsWith("gen=")) {
         if (!liveGens.contains(n.drop(4).toLong)) f.delete(st.getPath, true)

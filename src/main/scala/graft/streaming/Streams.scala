@@ -415,6 +415,15 @@ object Streams {
     * alone cannot give (one view can be a batch ahead of its sibling
     * between refreshes).
     *
+    * The refreshers of one micro-batch run CONCURRENTLY, each on its own
+    * thread: refreshers of different views share nothing but the batch,
+    * and refreshers of the same view serialize on that view's writer
+    * lock in either order, which converges by the
+    * [[graft.etl.BucketedView]] contract. The cycle waits for EVERY
+    * refresher to finish before it rethrows the first failure, and only
+    * then commits the catalog cycle — no refresher outlives its batch,
+    * and a failed batch commits nothing.
+    *
     * Crash contract, on top of each refresher's own replay-idempotence
     * ([[maintain]]): a crash ANYWHERE inside the cycle — even
     * between two member refreshes — leaves the catalog at the previous
@@ -435,7 +444,7 @@ object Streams {
       checkpoint: String)(
       refreshers: (DataFrame => Unit)*): org.apache.spark.sql.streaming.StreamingQuery =
     deliverStream(cdc, checkpoint) { (batch, _) =>
-      refreshers.foreach(_(batch))
+      graft.etl.BucketedView.runAll("cycle")(refreshers.map(refresh => () => refresh(batch)))
       catalog.commitCycle(batch.sparkSession)
     }
 }

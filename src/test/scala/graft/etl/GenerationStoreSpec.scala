@@ -228,6 +228,94 @@ class GenerationStoreSpec extends AnyFunSuite {
     assert(viewMap(mv)(1L) == ("a2", 20L))
   }
 
+  test("a view publish failing while the state generation is staged leaves the state untouched") {
+    // a refresh stages its state generation beside the view publish;
+    // when the view's swap never comes, the staged generation is a
+    // crashed partial write: never served, collected by the next publish
+    val base = rows((1L, 1L, false, "a1"), (2L, 1L, false, "b1"), (3L, 1L, false, "c1"))
+    val batch = rows((1L, 2L, false, "a2"), (7L, 1L, false, "g1"))
+    val (root, mv) = mk()
+    mv.build(base)
+    val stateStore = mv.stateStores.head
+    def stateRows(): Seq[String] = mv.state(spark).collect().map(_.toString).sorted.toSeq
+    def stateGens(): Set[String] =
+      new java.io.File(s"$root/state").listFiles().map(_.getName).filter(_.startsWith("gen=")).toSet
+    def liveStateGens(): Set[String] =
+      stateStore.manifest(spark).get.values.toSet.map((g: Long) => s"gen=$g")
+    def filesUnder(dir: String): Set[String] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(dir)).map(_.getPath).filter(_.endsWith(".parquet")).toSet
+    }
+    val before = stateRows()
+    val manifestBefore = stateStore.manifest(spark)
+
+    mv.store.onBeforeSwap = () => throw new Boom
+    intercept[Boom] { mv.refresh(batch) }
+    mv.store.onBeforeSwap = () => ()
+    // the refresh waited for the stage: its generation is on disk, unswapped
+    val orphans = stateGens() -- liveStateGens()
+    assert(orphans.size == 1, s"expected one staged, unswapped state generation: ${stateGens()}")
+    val orphanFiles = orphans.flatMap(g => filesUnder(s"$root/state/$g"))
+    assert(orphanFiles.nonEmpty, "the staged generation should hold the batch's state")
+    assert(stateStore.manifest(spark) == manifestBefore, "the state manifest must not move")
+    assert(stateRows() == before, "the state must read exactly as before the refresh")
+
+    // the replay converges to a full rebuild, and its state publish
+    // collected the orphan
+    mv.refresh(batch)
+    val (_, full) = mk()
+    full.build(base.unionByName(batch))
+    assert(viewMap(mv) == viewMap(full))
+    assert(stateRows() == full.state(spark).collect().map(_.toString).sorted.toSeq)
+    assert(stateGens() == liveStateGens(), s"unreferenced state generations: ${stateGens()}")
+    assert(orphanFiles.forall(f => !new java.io.File(f).exists),
+      s"the orphan's files survived the next publish: $orphanFiles")
+  }
+
+  test("the state swap runs after the view's swap and onAfterPublish") {
+    val (_, mv) = mk()
+    mv.build(rows((1L, 1L, false, "a1"), (2L, 1L, false, "b1")))
+    val viewBefore = mv.store.manifest(spark)
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var viewAtStateSwap: Option[Map[Long, Long]] = None
+    mv.store.onBeforeSwap = () => { events.add("view swap"); () }
+    mv.onAfterPublish = () => { events.add("after publish"); () }
+    mv.stateStores.head.onBeforeSwap = () => {
+      events.add("state swap")
+      viewAtStateSwap = mv.store.manifest(spark)
+    }
+    try mv.refresh(rows((1L, 2L, false, "a2")))
+    finally {
+      mv.store.onBeforeSwap = () => ()
+      mv.onAfterPublish = () => ()
+      mv.stateStores.head.onBeforeSwap = () => ()
+    }
+    import scala.jdk.CollectionConverters._
+    assert(events.asScala.toSeq == Seq("view swap", "after publish", "state swap"))
+    assert(viewAtStateSwap != viewBefore && viewAtStateSwap == mv.store.manifest(spark),
+      "the state swap hook must see the view's new version already live")
+    assert(viewMap(mv)(1L) == ("a2", 20L))
+  }
+
+  test("a publish lists the store root once: GC's version window and sweep share it") {
+    val s = spark
+    import s.implicits._
+    graft.Counting.install(spark.sparkContext.hadoopConfiguration)
+    val dir = Files.createTempDirectory("graft_gen_list").toString + "/view"
+    val store = new GenerationStore(graft.Counting.path(dir), "__b", keepVersions = 2)
+    def df(rows: (Long, String, Long)*) = rows.toDF("id", "payload", "__b")
+    store.publish(df((1L, "a", 0L), (2L, "b", 1L)), Seq(0L, 1L))
+    store.publish(df((1L, "a2", 0L)), Seq(0L))
+    store.publish(df((1L, "a3", 0L)), Seq(0L))
+    // this publish has a version to age out and a generation to collect
+    val (v, listings) = graft.Counting.listingsOf(dir)(store.publish(df((2L, "b4", 1L)), Seq(1L)))
+    assert(listings == 1, s"a publish listed the store root $listings times")
+    assert(store.versions(spark) == Seq(v - 2, v - 1, v))
+    assert(store.read(spark).get.collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      Map(1L -> "a3", 2L -> "b4"))
+  }
+
   test("ScanCommit: torn control-file writes still serve complete old-or-new") {
     // the object-store profile: NO atomic rename anywhere — every
     // commit is a fresh sequenced key with a validated frame, and a
